@@ -135,7 +135,20 @@ object Queries {
             df.coalesce(1).write.parquet(s"$dir/_stage$c")
         })
       }
-      alongside
+      try alongside
+      catch {
+        case e: Throwable =>
+          // drain every writer before surfacing the failure: a writer's own
+          // failure rides along as suppressed, never abandoned to shutdown()
+          futs.foreach { f =>
+            try f.get()
+            catch {
+              case w: java.util.concurrent.ExecutionException =>
+                e.addSuppressed(w.getCause)
+            }
+          }
+          throw e
+      }
       futs.foreach(_.get())
     } finally { pool.shutdown(); () }
     for (c <- chunks.indices) {
@@ -2562,7 +2575,7 @@ object Queries {
           assignments,
           emb.filter(col("vec_id") % 5 === 0),
           "vec_id", "embedding",
-          VersionedLake.readTableLocal(s, root, "centroids", Some(v)),
+          VersionedLake.readTable(s, root, "centroids", Some(v)),
           tau = 0.45, maxClusterSize = Int.MaxValue)
         .orderBy(col("vec_id"))
     }),

@@ -150,8 +150,8 @@ object AnnIndex {
         // every read + carry resolves at the commit's OWN base (group
         // consistency; a separately-read "latest" can trail the claim)
         val v = gc.basedOn.get
-        val coarse = VersionedLake.readTableLocal(spark, root, "coarse", Some(v))
-        val books = VersionedLake.readTableLocal(spark, root, "codebooks", Some(v))
+        val coarse = VersionedLake.readTable(spark, root, "coarse", Some(v))
+        val books = VersionedLake.readTable(spark, root, "codebooks", Some(v))
         // carry EVERYTHING this commit does not write (model tables,
         // pending tombstones, any future member): a group manifest lists
         // only staged tables, and a per-table carry list would let the
@@ -448,8 +448,8 @@ object AnnIndex {
       c: Int): DataFrame = {
     val qdf = qdf0.localCheckpoint()
     val v = latestVersion(spark, root)
-    val coarse = VersionedLake.readTableLocal(spark, root, "coarse", Some(v))
-    val books = VersionedLake.readTableLocal(spark, root, "codebooks", Some(v))
+    val coarse = VersionedLake.readTable(spark, root, "coarse", Some(v))
+    val books = VersionedLake.readTable(spark, root, "codebooks", Some(v))
     val tomb = tombstonesOpt(spark, root, v, idCol)
     val encoded = minusTombstones(
       VersionedLake.readTable(spark, root, "encoded", Some(v),
@@ -488,8 +488,8 @@ object AnnIndex {
   def search(spark: SparkSession, root: String, idCol: String,
       queryQuant: Array[Long], nprobe: Int, c: Int, n: Int): DataFrame = {
     val v = latestVersion(spark, root)
-    val coarse = VersionedLake.readTableLocal(spark, root, "coarse", Some(v))
-    val books = VersionedLake.readTableLocal(spark, root, "codebooks", Some(v))
+    val coarse = VersionedLake.readTable(spark, root, "coarse", Some(v))
+    val books = VersionedLake.readTable(spark, root, "codebooks", Some(v))
     // tombstoned ids are excluded BEFORE the ADC short-list forms — a
     // retired doc must not occupy one of the c slots and push a live
     // candidate out of the re-rank
@@ -524,8 +524,8 @@ object AnnIndex {
       nprobe: Int, c: Int, n: Int,
       scale: Int = Cluster.QuantScale): DataFrame = {
     val v = latestVersion(spark, root)
-    val coarse = VersionedLake.readTableLocal(spark, root, "coarse", Some(v))
-    val books = VersionedLake.readTableLocal(spark, root, "codebooks", Some(v))
+    val coarse = VersionedLake.readTable(spark, root, "coarse", Some(v))
+    val books = VersionedLake.readTable(spark, root, "codebooks", Some(v))
     val tomb = tombstonesOpt(spark, root, v, idCol)
     val encoded = minusTombstones(
       VersionedLake.readTable(spark, root, "encoded", Some(v),

@@ -153,12 +153,9 @@ object StreamingAnnIndex {
           "applied", Some(v), "batch_id")
         if (batchId <= lastApplied) { gc.abort(); Some(false) }
         else {
-          // driver-side model read (readTableLocal): both tables are
-          // bounded literal frames the encode kernel collects anyway —
-          // the per-batch Spark jobs reading them were pure lifecycle
-          val coarse = VersionedLake.readTableLocal(spark, root, "coarse",
+          val coarse = VersionedLake.readTable(spark, root, "coarse",
             Some(v))
-          val books = VersionedLake.readTableLocal(spark, root, "codebooks",
+          val books = VersionedLake.readTable(spark, root, "codebooks",
             Some(v))
           // carry EVERYTHING this commit does not write — model tables
           // AND a mid-stream retirement's tombstones

@@ -128,18 +128,8 @@ object StreamingDedup {
       shingleN, numHashes, bands,
       stabilize = Some(_.localCheckpoint()))
     try {
-      // begin the commit FIRST and stage the two layout writes
-      // asynchronously: they depend only on the already-checkpointed
-      // nh/nb, so their write jobs (repartition + partitioned write each)
-      // overlap the pair-plan construction and the survivors write below
-      // instead of queueing behind them (guide §2.6 — writeAllAsync)
       val gc = VersionedLake.beginGroupCommit(spark, root)
       VersionedLake.runOrAbort(gc) {
-        gc.writeAllAsync(Seq(
-          ("hashed", Dedup.layoutHashed(nh), "append",
-            Seq(Dedup.IdLayoutCol)),
-          ("banded", Dedup.layoutBanded(nb), "append",
-            Seq(Dedup.BandLayoutCol))))
         // explicit schemas: partition-column inference would read the ph/pb
         // dir values back as INT and the pruning filters' BIGINT literals
         // would cast the partition attribute, defeating PartitionFilters.
@@ -169,7 +159,15 @@ object StreamingDedup {
         val survivors = docs.select(col("__doc_id"))
           .join(dropped, col("__doc_id") === col("id_b"), "left_anti")
           .select(col("__doc_id").as(idCol), lit(batchId).as("batch_id"))
-        gc.writeAll(Seq(("survivors", survivors, "append", Nil)))
+        // the three data tables are independent frames over the
+        // checkpointed batch index — stage them concurrently (one write
+        // job each), and the one-row marker lands driver-side (no job)
+        gc.writeAll(Seq(
+          ("hashed", Dedup.layoutHashed(nh), "append",
+            Seq(Dedup.IdLayoutCol)),
+          ("banded", Dedup.layoutBanded(nb), "append",
+            Seq(Dedup.BandLayoutCol)),
+          ("survivors", survivors, "append", Nil)))
         gc.writeMarkerLong("applied", "batch_id", batchId)
         gc.publish()
       }

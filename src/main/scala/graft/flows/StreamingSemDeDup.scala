@@ -119,11 +119,7 @@ object StreamingSemDeDup {
     val lastApplied = VersionedLake.readMarkerLong(spark, root, "applied",
       Some(v), "batch_id")
     if (batchId <= lastApplied) return false
-    // driver-side model read: the k-row centroid table is collected to
-    // assignment literals anyway — reading it through a Spark job per
-    // micro-batch was pure lifecycle cost (readTableLocal scaladoc)
-    val centroids = VersionedLake.readTableLocal(spark, root, "centroids",
-      Some(v))
+    val centroids = VersionedLake.readTable(spark, root, "centroids", Some(v))
     // explicit schema: partition-column inference would read cid back as
     // INT and break the long contract downstream (same note as q111)
     val assignments = VersionedLake.readTable(spark, root, "assignments",
@@ -140,16 +136,14 @@ object StreamingSemDeDup {
       val gc = VersionedLake.beginGroupCommit(spark, root)
       VersionedLake.runOrAbort(gc) {
         gc.carry("centroids")
-        // the assignments append depends only on the checkpointed batch —
-        // stage it asynchronously so its write job overlaps the survivor
-        // rule's cid census + pair join below (guide §2.6); the marker
-        // lands driver-side (see StreamingDedup.applyBatch)
-        gc.writeAllAsync(Seq(
-          ("assignments", batchA, "append", Seq("cid"))))
         val survivors = Cluster.incrementalSemDeDupAssigned(assignments,
             batchA, idCol, tau, scale, maxClusterSize)
           .select(col(idCol), lit(batchId).as("batch_id"))
-        gc.writeAll(Seq(("survivors", survivors, "append", Nil)))
+        // independent frames — staged concurrently; the marker lands
+        // driver-side (see StreamingDedup.applyBatch)
+        gc.writeAll(Seq(
+          ("assignments", batchA, "append", Seq("cid")),
+          ("survivors", survivors, "append", Nil)))
         gc.writeMarkerLong("applied", "batch_id", batchId)
         gc.publish()
       }

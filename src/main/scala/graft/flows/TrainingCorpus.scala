@@ -234,20 +234,8 @@ object TrainingCorpus {
     val (nh, nb) = Dedup.minHashIndexPortable(exactKept, "doc_id", "text",
       shingleN, numHashes, bands,
       stabilize = Some(_.localCheckpoint()))
+    var lexKept: DataFrame = null
     try {
-      // begin the commit FIRST and stage the three index writes
-      // asynchronously: fps/hashed/banded depend only on the
-      // already-checkpointed exactKept/nh/nb, so their write jobs overlap
-      // the whole lexical+semantic+ANN stretch below instead of queueing
-      // at the end of the batch (guide §2.6 — writeAllAsync)
-      val gc = graft.sources.VersionedLake.beginGroupCommit(spark, root)
-      graft.sources.VersionedLake.runOrAbort(gc) {
-      gc.writeAllAsync(Seq(
-        ("fps", exactKept.select(col("fp")), "append", Nil),
-        ("hashed", Dedup.layoutHashed(nh), "append",
-          Seq(Dedup.IdLayoutCol)),
-        ("banded", Dedup.layoutBanded(nb), "append",
-          Seq(Dedup.BandLayoutCol))))
       // path choice = the measured state-size dial, same as StreamingDedup
       val pairs = v match {
         case None => Dedup.minHashIncrementalPairsFromIndexes(
@@ -266,7 +254,7 @@ object TrainingCorpus {
       }
       val droppedLex = pairs.filter(col("jaccard") >= jaccardThreshold)
         .select(col("id_b")).distinct()
-      val lexKept = exactKept
+      lexKept = exactKept
         .join(droppedLex, col("doc_id") === col("id_b"), "left_anti")
         .localCheckpoint()
       val annExists = annRoot.nonEmpty &&
@@ -320,11 +308,8 @@ object TrainingCorpus {
           col("c.n_tokens").cast("long").as("n_tokens"),
           col("c.chunk").as("chunk"))
       val storedPack = v match {
-        // driver-side read (readTableLocal): per-language totals are a
-        // handful of rows; a LocalRelation join side removes the stored
-        // parquet scan from the two write plans that consume it
-        case Some(vv) => graft.sources.VersionedLake.readTableLocal(spark,
-          root, "packstate", Some(vv))
+        case Some(vv) => graft.sources.VersionedLake.readTable(spark, root,
+          "packstate", Some(vv), schemaDDL = "lang STRING, cum BIGINT")
         case None => spark.createDataFrame(
           java.util.List.of[org.apache.spark.sql.Row](),
           org.apache.spark.sql.types.StructType(Seq(
@@ -354,27 +339,31 @@ object TrainingCorpus {
           .agg(sum(col("n_tokens")).as("add")), Seq("lang"), "full")
         .select(col("lang"), (coalesce(col("cum0"), lit(0L)) +
           coalesce(col("add"), lit(0L))).as("cum"))
-      // the remaining three tables derive from the checkpointed semKept +
-      // the batch's chunk plan; the index writes staged up top may still
-      // be in flight — publish() settles everything. The one-row marker
-      // lands driver-side.
-      gc.writeAllAsync(Seq(
-        ("packstate", newPack, "overwrite", Nil),
-        ("chunks", packed, "append", Nil),
-        ("survivors",
-          semKept.select(col("doc_id"), lit(batchId).as("batch_id")),
-          "append", Nil)))
-      gc.writeMarkerLong("applied", "batch_id", batchId)
-      gc.publish()
-      // lexKept's blocks can release now (the writes that read it are
-      // settled); quality/exactKept release in the outer finally
-      lexKept.unpersist(blocking = false)
+      val gc = graft.sources.VersionedLake.beginGroupCommit(spark, root)
+      graft.sources.VersionedLake.runOrAbort(gc) {
+        // the six data tables derive from already-materialized frames
+        // (exactKept/lexKept/semKept are checkpointed, nh/nb persisted) —
+        // stage them concurrently; the one-row marker lands driver-side
+        gc.writeAll(Seq(
+          ("fps", exactKept.select(col("fp")), "append", Nil),
+          ("hashed", Dedup.layoutHashed(nh), "append",
+            Seq(Dedup.IdLayoutCol)),
+          ("banded", Dedup.layoutBanded(nb), "append",
+            Seq(Dedup.BandLayoutCol)),
+          ("packstate", newPack, "overwrite", Nil),
+          ("chunks", packed, "append", Nil),
+          ("survivors",
+            semKept.select(col("doc_id"), lit(batchId).as("batch_id")),
+            "append", Nil)))
+        gc.writeMarkerLong("applied", "batch_id", batchId)
+        gc.publish()
       }
       true
     } finally {
       nh.unpersist(); nb.unpersist()
       quality.unpersist(blocking = false)
-      exactKept.unpersist(blocking = false); ()
+      exactKept.unpersist(blocking = false)
+      if (lexKept != null) lexKept.unpersist(blocking = false); ()
     }
   }
 

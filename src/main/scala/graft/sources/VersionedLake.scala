@@ -221,16 +221,6 @@ object VersionedLake {
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Bound on any one staging write inside a group commit (ADVICE r17:
-    * an unbounded Await turned a wedged write job into a silent
-    * whole-flow hang at deployment scale). Generous — a healthy table
-    * write is seconds; past the bound the batch FAILS with a diagnostic
-    * and the exactly-once marker makes the retry safe. Var so a
-    * deployment (or a spec) dials it; never consulted until a staging
-    * write is actually in flight.
-    */
-  @volatile var StagingTimeoutMs: Long = 30L * 60 * 1000
-
   /** ONE shared daemon pool for group-commit staging writes (ADVICE r17:
     * allocating and tearing down a fresh pool per commit churned threads
     * on the hot per-batch path — several commits per micro-batch across
@@ -256,19 +246,6 @@ object VersionedLake {
       manifestStore: Option[ManifestStore] = None): Seq[Long] =
     storeFor(spark, table, manifestStore).committedVersions()
 
-  /** Commit `df` as the next version. `mode` is `"overwrite"` (the new
-    * version is exactly `df`) or `"append"` (the new version = previous
-    * files + `df`'s files — no data rewrite, pure metadata union).
-    * `partitionBy` lays the version's data out Hive-style (`col=value`
-    * directories) so reads prune partitions; the manifest records the
-    * partition-relative file paths and [[read]] recovers the partition
-    * columns per version directory. Returns the committed version number.
-    *
-    * Safe under concurrent committers (see the concurrency contract
-    * above): the version number is claimed atomically before any data
-    * write; a lost claim race retries at the next number up to
-    * `maxAttempts` times, then throws [[ConcurrentCommitException]].
-    */
   /** Claim the next free version number (create-no-overwrite / CAS loop,
     * bounded by `maxAttempts`).
     */
@@ -335,6 +312,19 @@ object VersionedLake {
     rels
   }
 
+  /** Commit `df` as the next version. `mode` is `"overwrite"` (the new
+    * version is exactly `df`) or `"append"` (the new version = previous
+    * files + `df`'s files — no data rewrite, pure metadata union).
+    * `partitionBy` lays the version's data out Hive-style (`col=value`
+    * directories) so reads prune partitions; the manifest records the
+    * partition-relative file paths and [[read]] recovers the partition
+    * columns per version directory. Returns the committed version number.
+    *
+    * Safe under concurrent committers (see the concurrency contract
+    * above): the version number is claimed atomically before any data
+    * write; a lost claim race retries at the next number up to
+    * `maxAttempts` times, then throws [[ConcurrentCommitException]].
+    */
   def commit(df: DataFrame, table: String, mode: String = "overwrite",
       partitionBy: Seq[String] = Nil, maxAttempts: Int = 10,
       manifestStore: Option[ManifestStore] = None): Long = {
@@ -600,23 +590,18 @@ object VersionedLake {
     private var published = false
     private var aborted = false
 
-    def write(table: String, df: DataFrame, mode: String = "overwrite",
-        partitionBy: Seq[String] = Nil): Unit = {
+    private def requireOpen(): Unit =
       require(!published && !aborted, "group already published or aborted")
+
+    private def requireUnstaged(table: String): Unit = {
       require(tableNameOk(table), s"invalid group table name '$table'")
-      require(!staged.contains(table) && !pending.contains(table),
+      require(!staged.contains(table),
         s"table $table already staged in v$version")
-      require(mode == "overwrite" || mode == "append", s"unknown mode $mode")
-      val newFiles = writeData(df, fs(spark, root),
-        new Path(root, s"$table/_data/v$version"),
-        s"$table/_data/v$version", partitionBy)
-      wroteData += table
-      val carried = if (mode == "append" && prevVersion.nonEmpty)
-        groupManifestFiles(store, root, prevVersion.get)
-          .getOrElse(table, Seq.empty)
-      else Seq.empty
-      staged(table) = carried ++ newFiles
     }
+
+    def write(table: String, df: DataFrame, mode: String = "overwrite",
+        partitionBy: Seq[String] = Nil): Unit =
+      writeAll(Seq((table, df, mode, partitionBy)))
 
     /** Stage several INDEPENDENT tables CONCURRENTLY — one entry per
       * table as (name, df, mode, partitionBy), same semantics per entry
@@ -626,44 +611,19 @@ object VersionedLake {
       * planning, the write tasks, and the commit/file-listing I/O
       * (optimization guide §2.6 — the micro-batch flows commit 2–7 small
       * tables per batch, and the sequential staging loop was a visible
-      * slice of the per-batch lifecycle floor). Staged file lists land
-      * deterministically; a failure in ANY write is rethrown after every
-      * in-flight write settles (so an abort() sweep never races a
-      * still-running writer), with all attempted tables registered for
-      * the sweep.
+      * slice of the per-batch lifecycle floor). Blocking: returns only
+      * once every write has finished (see [[stage]]).
       */
     def writeAll(tables: Seq[(String, DataFrame, String, Seq[String])]): Unit = {
-      writeAllAsync(tables)
-      settle()
-    }
-
-    /** [[writeAll]] WITHOUT the barrier: the staging writes are submitted
-      * to the shared pool and this returns immediately, so the caller's
-      * own Spark actions (a pair join, a probe, another flow's commit)
-      * overlap the write jobs instead of queueing behind them (guide
-      * §2.6 — the per-micro-batch flows interleave index writes with the
-      * batch's survivor computation this way). [[settle]] is the matching
-      * barrier; [[publish]] settles implicitly, and [[abort]] waits for
-      * every in-flight write before sweeping. Multiple async batches may
-      * be in flight on one commit (table-name disjointness is enforced at
-      * submission).
-      */
-    def writeAllAsync(tables: Seq[(String, DataFrame, String, Seq[String])]): Unit = {
-      require(!published && !aborted, "group already published or aborted")
-      tables.foreach { case (t, _, mode, _) =>
-        require(tableNameOk(t), s"invalid group table name '$t'")
-        require(!staged.contains(t) && !pending.contains(t),
-          s"table $t already staged in v$version")
+      tables.foreach { case (_, _, mode, _) =>
         require(mode == "overwrite" || mode == "append", s"unknown mode $mode")
       }
-      require(tables.map(_._1).distinct.size == tables.size,
-        s"duplicate table in writeAll: ${tables.map(_._1).mkString(", ")}")
       // resolve the previous manifest ONCE for every append entry
       val prevFiles: Map[String, Seq[String]] =
         if (tables.exists(_._3 == "append") && prevVersion.nonEmpty)
           groupManifestFiles(store, root, prevVersion.get)
         else Map.empty
-      stageAsync(tables.map { case (t, df, mode, pb) =>
+      stage(tables.map { case (t, df, mode, pb) =>
         (t, df, if (mode == "append") prevFiles.getOrElse(t, Seq.empty)
           else Seq.empty, pb)
       })
@@ -677,69 +637,50 @@ object VersionedLake {
       */
     def writeAllWithCarried(
         tables: Seq[(String, DataFrame, Seq[String], Seq[String])]): Unit = {
-      require(!published && !aborted, "group already published or aborted")
       tables.foreach { case (t, _, carriedFiles, _) =>
-        require(tableNameOk(t), s"invalid group table name '$t'")
-        require(!staged.contains(t) && !pending.contains(t),
-          s"table $t already staged in v$version")
         require(carriedFiles.forall(_.startsWith(s"$t/_data/")),
           s"carried files must belong to $t (got " +
             s"${carriedFiles.filterNot(_.startsWith(s"$t/_data/")).take(3).mkString(", ")})")
       }
-      require(tables.map(_._1).distinct.size == tables.size,
-        s"duplicate table in writeAllWithCarried: ${tables.map(_._1).mkString(", ")}")
-      stageAsync(tables)
-      settle()
+      stage(tables)
     }
 
-    /** In-flight staging writes: table → future of its staged file list.
-      * Insertion-ordered so [[settle]] stages deterministically.
+    /** The one staging path: write each entry's `df` under
+      * `<root>/<table>/_data/v{N}` on the shared pool, wait for EVERY
+      * write (no timeout — a wedged write blocks like any other Spark
+      * action), and only then stage the successes' file lists (carried ++
+      * new) and rethrow the first failure. Because nothing returns while a
+      * writer is still running, an [[abort]] sweep can never race a live
+      * writer. Every attempted table is registered for that sweep up
+      * front, so a partial failure leaves nothing behind after abort().
+      * An interrupt does not cut the wait short; it is re-asserted once
+      * every writer has finished.
       */
-    private val pending = scala.collection.mutable.LinkedHashMap
-      .empty[String, java.util.concurrent.Future[Seq[String]]]
-
-    private def stageAsync(
+    private def stage(
         tables: Seq[(String, DataFrame, Seq[String], Seq[String])]): Unit = {
-      if (tables.isEmpty) return
-      wroteData ++= tables.map(_._1) // abort() sweeps even on partial failure
+      requireOpen()
+      tables.foreach { case (t, _, _, _) => requireUnstaged(t) }
+      require(tables.map(_._1).distinct.size == tables.size,
+        s"duplicate table in one staging batch: ${tables.map(_._1).mkString(", ")}")
+      wroteData ++= tables.map(_._1)
       val f = fs(spark, root)
-      tables.foreach { case (t, df, carried, pb) =>
-        pending(t) = stagingPool.submit(() => {
-          val newFiles = writeData(df, f,
-            new Path(root, s"$t/_data/v$version"), s"$t/_data/v$version", pb)
-          carried ++ newFiles
-        })
+      val futures = tables.map { case (t, df, carried, pb) =>
+        t -> stagingPool.submit(() => carried ++ writeData(df, f,
+          new Path(root, s"$t/_data/v$version"), s"$t/_data/v$version", pb))
       }
-    }
-
-    /** Barrier for [[writeAllAsync]]: wait for every in-flight staging
-      * write (bounded by [[VersionedLake.StagingTimeoutMs]] — a wedged
-      * write job must fail the batch with a diagnostic, not hang the
-      * whole flow forever), settle ALL of them before surfacing the first
-      * failure (an abort() sweep must never race a still-running writer),
-      * then stage the file lists. Idempotent; [[publish]] calls it.
-      */
-    def settle(): Unit = {
-      if (pending.isEmpty) return
-      val results = pending.toSeq.map { case (t, fut) =>
-        t -> (try Right(fut.get(StagingTimeoutMs,
-          java.util.concurrent.TimeUnit.MILLISECONDS))
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            Left(e.getCause)
-          case e: java.util.concurrent.TimeoutException =>
-            fut.cancel(true)
-            // the cancelled writer may still be mid-write: wait for it to
-            // actually die before anyone sweeps its directory
-            try fut.get(60000, java.util.concurrent.TimeUnit.MILLISECONDS)
-            catch { case _: Throwable => () }
-            Left(new java.io.IOException(
-              s"staging write of table $t at $root exceeded " +
-                s"$StagingTimeoutMs ms — failing the commit " +
-                "(the version claim is released; retry is safe)", e))
-        })
+      var interrupted = false
+      val results = futures.map { case (t, fut) =>
+        var r: Either[Throwable, Seq[String]] = null
+        while (r == null)
+          try r = Right(fut.get())
+          catch {
+            case e: java.util.concurrent.ExecutionException =>
+              r = Left(e.getCause)
+            case _: InterruptedException => interrupted = true
+          }
+        t -> r
       }
-      pending.clear()
+      if (interrupted) Thread.currentThread().interrupt()
       results.foreach {
         case (t, Right(files)) => staged(t) = files
         case _ => ()
@@ -760,10 +701,8 @@ object VersionedLake {
       * supersede; nothing is carried).
       */
     def writeMarkerLong(table: String, column: String, value: Long): Unit = {
-      require(!published && !aborted, "group already published or aborted")
-      require(tableNameOk(table), s"invalid group table name '$table'")
-      require(!staged.contains(table) && !pending.contains(table),
-        s"table $table already staged in v$version")
+      requireOpen()
+      requireUnstaged(table)
       val rel = s"$table/_data/v$version/part-00000-marker.parquet"
       val p = new Path(root, rel)
       wroteData += table
@@ -793,20 +732,8 @@ object VersionedLake {
       * directory they live in.
       */
     def writeWithCarried(table: String, df: DataFrame,
-        carriedFiles: Seq[String], partitionBy: Seq[String] = Nil): Unit = {
-      require(!published && !aborted, "group already published or aborted")
-      require(tableNameOk(table), s"invalid group table name '$table'")
-      require(!staged.contains(table) && !pending.contains(table),
-        s"table $table already staged in v$version")
-      require(carriedFiles.forall(_.startsWith(s"$table/_data/")),
-        s"carried files must belong to $table (got " +
-          s"${carriedFiles.filterNot(_.startsWith(s"$table/_data/")).take(3).mkString(", ")})")
-      val newFiles = writeData(df, fs(spark, root),
-        new Path(root, s"$table/_data/v$version"),
-        s"$table/_data/v$version", partitionBy)
-      wroteData += table
-      staged(table) = carriedFiles ++ newFiles
-    }
+        carriedFiles: Seq[String], partitionBy: Seq[String] = Nil): Unit =
+      writeAllWithCarried(Seq((table, df, carriedFiles, partitionBy)))
 
     /** Abandon the commit: best-effort delete of every `_data/v{N}`
       * directory this commit wrote, then release the version claim so
@@ -820,21 +747,6 @@ object VersionedLake {
       require(!published, "group already published")
       if (!aborted) {
         aborted = true
-        // drain in-flight staging writes first (outcome irrelevant — the
-        // sweep below must not race a writer still emitting into its
-        // _data/v{N} dir), bounded like settle()
-        pending.values.foreach { fut =>
-          try fut.get(StagingTimeoutMs,
-            java.util.concurrent.TimeUnit.MILLISECONDS)
-          catch {
-            case _: java.util.concurrent.TimeoutException =>
-              fut.cancel(true)
-              try fut.get(60000, java.util.concurrent.TimeUnit.MILLISECONDS)
-              catch { case _: Throwable => () }
-            case _: Throwable => ()
-          }
-        }
-        pending.clear()
         val f = fs(spark, root)
         wroteData.foreach { t =>
           f.delete(new Path(root, s"$t/_data/v$version"), true); () }
@@ -861,7 +773,7 @@ object VersionedLake {
       */
     def publishIfBaseIs(base: Long,
         claimTtlMs: Long = 24L * 3600 * 1000): Option[Long] = {
-      require(!published && !aborted, "group already published or aborted")
+      requireOpen()
       val committedNow = store.committedVersions()
       val now = System.currentTimeMillis()
       val inFlightBelow = store.claimedVersions().filter(cv =>
@@ -881,9 +793,8 @@ object VersionedLake {
       * free).
       */
     def carry(table: String): Unit = {
-      require(!published && !aborted, "group already published or aborted")
-      require(!staged.contains(table) && !pending.contains(table),
-        s"table $table already staged in v$version")
+      requireOpen()
+      requireUnstaged(table)
       val prev = prevVersion.getOrElse(throw new IllegalArgumentException(
         s"no previous version at $root to carry $table from"))
       staged(table) = groupManifestFiles(store, root, prev).getOrElse(table,
@@ -892,23 +803,16 @@ object VersionedLake {
       ()
     }
 
-    /** Read a table staged in THIS commit (pre-publish). Settles any
-      * in-flight async staging first (the requested table may still be
-      * writing).
-      */
+    /** Read a table staged in THIS commit (pre-publish). */
     def readStaged(table: String, mergeSchema: Boolean = true): DataFrame = {
-      settle()
       val files = staged.getOrElse(table, throw new IllegalArgumentException(
         s"table $table not staged in v$version (staged: ${staged.keys.mkString(", ")})"))
       readFiles(spark, root, files, mergeSchema, null)
     }
 
-    /** Atomically publish every staged table as version [[version]]
-      * (settles any in-flight [[writeAllAsync]] staging first).
-      */
+    /** Atomically publish every staged table as version [[version]]. */
     def publish(): Long = {
-      require(!published && !aborted, "group already published or aborted")
-      settle()
+      requireOpen()
       require(staged.nonEmpty, "publish with no staged tables")
       val body = staged.map { case (t, files) =>
         "\"" + t + "\":" + files.map(p => "\"" + jsonEscape(p) + "\"")
@@ -1027,14 +931,6 @@ object VersionedLake {
       .map(rel => new Path(root, rel).toString)
   }
 
-  /** Row count of one member table at a version (default: latest) from
-    * parquet FOOTERS only — O(files) driver-side footer reads (a few KB
-    * each, summed row-group counts), no data pages, no executors, no
-    * Spark job. What a maintenance policy reads to price a rewrite
-    * decision (e.g. [[graft.flows.AnnIndex.maintainAndFold]]'s
-    * tombstone-fraction dial) without paying a scan: at 100 TB the
-    * manifest's file list is the bound, not the bytes.
-    */
   /** DRIVER-SIDE read of a one-row int64 marker table (the `applied`
     * batch id the exactly-once flows consult before every micro-batch):
     * the manifest already names the file, and reading one 8-byte value
@@ -1065,144 +961,14 @@ object VersionedLake {
         .select(column).head().getLong(0)
   }
 
-  /** DRIVER-SIDE read of a SMALL member table into a LOCAL DataFrame.
-    *
-    * The stored-model tables (coarse centroids, PQ codebooks, k-means
-    * centroids) are BOUNDED driver state by contract — every consumer
-    * collects them to plan literals anyway — yet each read paid a full
-    * Spark job (plan → schedule → task → collect) per consumer per
-    * batch/search, a fixed lifecycle cost with KB of data on it (the
-    * same argument as [[readMarkerLong]], generalized). This reads the
-    * manifest-listed files with parquet-mr on the driver and returns a
-    * LocalRelation-backed frame: a downstream `.collect()` or literal
-    * embedding runs with NO Spark job. The driver memory profile is
-    * UNCHANGED versus the collect the caller was already doing.
-    *
-    * Covers the flat/list shapes the model tables use (BOOLEAN, INT32,
-    * INT64, FLOAT, DOUBLE, UTF8 strings, and standard 3-level LISTs of
-    * those); anything else — or a table over `maxRows` (footer count, no
-    * data read) or with drifting per-file schemas — falls back to the
-    * distributed [[readTable]]. Correctness never depends on the fast
-    * path: both paths return the same rows.
+  /** Row count of one member table at a version (default: latest) from
+    * parquet FOOTERS only — O(files) driver-side footer reads (a few KB
+    * each, summed row-group counts), no data pages, no executors, no
+    * Spark job. What a maintenance policy reads to price a rewrite
+    * decision (e.g. [[graft.flows.AnnIndex.maintainAndFold]]'s
+    * tombstone-fraction dial) without paying a scan: at 100 TB the
+    * manifest's file list is the bound, not the bytes.
     */
-  def readTableLocal(spark: SparkSession, root: String, table: String,
-      version: Option[Long] = None, maxRows: Long = 1L << 18,
-      manifestStore: Option[ManifestStore] = None): DataFrame = {
-    import org.apache.parquet.schema.{GroupType, MessageType, Type => PType}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.spark.sql.types._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files = tableFiles(spark, root, table, version, manifestStore)
-    def fallback: DataFrame =
-      readTable(spark, root, table, version, manifestStore = manifestStore)
-    def primType(t: PType): Option[DataType] = {
-      if (!t.isPrimitive) return None
-      val p = t.asPrimitiveType()
-      val ann = p.getLogicalTypeAnnotation
-      p.getPrimitiveTypeName match {
-        case INT64 if ann == null => Some(LongType)
-        case INT32 if ann == null => Some(IntegerType)
-        case DOUBLE => Some(DoubleType)
-        case FLOAT => Some(FloatType)
-        case BOOLEAN => Some(BooleanType)
-        case BINARY if ann ==
-            org.apache.parquet.schema.LogicalTypeAnnotation.stringType() =>
-          Some(StringType)
-        case _ => None
-      }
-    }
-    // standard 3-level list: optional group F (LIST) { repeated group list
-    // { <repetition> element } } — what Spark writes (legacy mode off)
-    def listElem(t: PType): Option[PType] = t match {
-      case g: GroupType if !g.isPrimitive &&
-          g.getLogicalTypeAnnotation ==
-            org.apache.parquet.schema.LogicalTypeAnnotation.listType() &&
-          g.getFieldCount == 1 && !g.getType(0).isPrimitive &&
-          g.getType(0).getRepetition == PType.Repetition.REPEATED &&
-          g.getType(0).asGroupType().getFieldCount == 1 =>
-        Some(g.getType(0).asGroupType().getType(0))
-      case _ => None
-    }
-    def sparkField(t: PType): Option[StructField] = {
-      val nullable = t.getRepetition != PType.Repetition.REQUIRED
-      primType(t).map(dt => StructField(t.getName, dt, nullable)).orElse(
-        listElem(t).flatMap(e => primType(e).map(et =>
-          StructField(t.getName,
-            ArrayType(et, e.getRepetition != PType.Repetition.REQUIRED),
-            nullable))))
-    }
-    try {
-      // one footer pass: schema agreement + the row-count bound
-      var schema: MessageType = null
-      var rows = 0L
-      files.foreach { p =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new Path(p), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          val s = r.getFooter.getFileMetaData.getSchema
-          if (schema == null) schema = s
-          else if (schema != s) return fallback
-          rows += r.getRecordCount
-        } finally r.close()
-      }
-      if (schema == null || rows > maxRows) return fallback
-      val fieldsOpt = (0 until schema.getFieldCount)
-        .map(i => sparkField(schema.getType(i)))
-      if (fieldsOpt.exists(_.isEmpty)) return fallback
-      val sparkSchema = StructType(fieldsOpt.map(_.get))
-      def cell(g: org.apache.parquet.example.data.Group, i: Int): Any = {
-        val ft = schema.getType(i)
-        if (g.getFieldRepetitionCount(i) == 0) return null
-        listElem(ft) match {
-          case Some(elem) =>
-            val lst = g.getGroup(i, 0)
-            val n = lst.getFieldRepetitionCount(0)
-            val out = new Array[Any](n)
-            var j = 0
-            while (j < n) {
-              val entry = lst.getGroup(0, j)
-              out(j) = if (entry.getFieldRepetitionCount(0) == 0) null
-              else prim(entry, 0, elem)
-              j += 1
-            }
-            out.toSeq
-          case None => prim(g, i, ft)
-        }
-      }
-      def prim(g: org.apache.parquet.example.data.Group, i: Int,
-          t: PType): Any = t.asPrimitiveType().getPrimitiveTypeName match {
-        case INT64 => g.getLong(i, 0)
-        case INT32 => g.getInteger(i, 0)
-        case DOUBLE => g.getDouble(i, 0)
-        case FLOAT => g.getFloat(i, 0)
-        case BOOLEAN => g.getBoolean(i, 0)
-        case BINARY => g.getString(i, 0)
-        case other => throw new IllegalStateException(s"unreachable: $other")
-      }
-      val out = new java.util.ArrayList[org.apache.spark.sql.Row]()
-      files.foreach { p =>
-        val reader = org.apache.parquet.hadoop.ParquetReader
-          .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-            new Path(p))
-          .withConf(conf).build()
-        try {
-          var g = reader.read()
-          while (g != null) {
-            out.add(org.apache.spark.sql.Row.fromSeq(
-              (0 until schema.getFieldCount).map(cell(g, _))))
-            g = reader.read()
-          }
-        } finally reader.close()
-      }
-      spark.createDataFrame(out, sparkSchema)
-    } catch {
-      // a foreign writer's layout the example API trips on — the
-      // distributed read is the correctness path
-      case scala.util.control.NonFatal(_) => fallback
-    }
-  }
-
   def tableRowCount(spark: SparkSession, root: String, table: String,
       version: Option[Long] = None,
       manifestStore: Option[ManifestStore] = None): Long = {
@@ -1316,8 +1082,8 @@ object VersionedLake {
   /** Delete data files referenced by NO manifest ≥ `keepFrom` and all
     * older manifests — the vacuum step that bounds storage. Returns the
     * number of deleted data files.
-    */
-  /** `claimTtlMs`: a manifest-less claim younger than this is an in-flight
+    *
+    * `claimTtlMs`: a manifest-less claim younger than this is an in-flight
     * commit whatever its version number — a SLOW commit claimed before a
     * newer version landed can legitimately sit below `keepFrom` while its
     * data write still runs, and sweeping it would corrupt the version the

@@ -458,4 +458,74 @@ class VersionedLakeSpec extends SparkSpec {
     // CAS path really went through the blob: claims + manifests live there
     assert(blob.list("_manifests/").count(_.endsWith(".json")) == 8)
   }
+
+  test("group writeAll: a failing member write leaves nothing behind — " +
+    "writeAll waits out every writer, the abort sweeps both tables and " +
+    "releases the claim") {
+    import org.apache.spark.sql.functions.{col, udf}
+    import org.apache.hadoop.fs.Path
+    val root = Files.createTempDirectory("vlakegf").toString
+    VersionedLake.commitAll(Seq(
+      "a" -> Seq(1L).toDF("x"), "b" -> Seq(1L).toDF("x")), root)
+    val before = VersionedLake.versions(spark, root)
+    val boom = udf((x: Long) =>
+      if (x >= 0) throw new IllegalStateException("boom") else x)
+    val slow = udf((x: Long) => { Thread.sleep(500); x })
+    val gc = VersionedLake.beginGroupCommit(spark, root)
+    val n = gc.version
+    val t0 = System.nanoTime()
+    val e = intercept[Exception](VersionedLake.runOrAbort(gc) {
+      gc.writeAll(Seq(
+        ("a", spark.range(0, 1, 1, 1).select(boom(col("id")).as("x")),
+          "append", Nil),
+        ("b", spark.range(0, 1, 1, 1).select(slow(col("id")).as("x")),
+          "append", Nil)))
+      gc.publish()
+    })
+    // the failure surfaced only after the slow sibling finished
+    assert((System.nanoTime() - t0) / 1000000 >= 450)
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("boom")), e)
+    val fs = new Path(root).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    def leftovers = Seq("a", "b")
+      .filter(t => fs.exists(new Path(s"$root/$t/_data/v$n")))
+    assert(leftovers.isEmpty)
+    Thread.sleep(1000) // no zombie writer re-creates a swept directory
+    assert(leftovers.isEmpty)
+    assert(VersionedLake.versions(spark, root) == before)
+    // the released claim is reused: the retry lands the same number clean
+    val gc2 = VersionedLake.beginGroupCommit(spark, root)
+    assert(gc2.version == n)
+    gc2.writeAll(Seq(
+      ("a", Seq(2L).toDF("x"), "append", Nil),
+      ("b", Seq(3L).toDF("x"), "append", Nil)))
+    assert(gc2.publish() == n)
+    def rows(t: String) = VersionedLake.readTable(spark, root, t)
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(rows("a") == Seq(1L, 2L))
+    assert(rows("b") == Seq(1L, 3L))
+  }
+
+  test("duplicate-task-commit detector: a legal multi-file task output " +
+    "(maxRecordsPerFile) publishes without a false positive") {
+    val root = Files.createTempDirectory("vlakemrpf").toString
+    val key = "spark.sql.files.maxRecordsPerFile"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try {
+      val gc = VersionedLake.beginGroupCommit(spark, root)
+      gc.write("t", spark.range(0, 5, 1, 1).toDF("x"))
+      assert(gc.publish() == 1L)
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    // one task wrote five files: same partition number, same attempt UUID
+    val partFile = "part-(\\d+)-([0-9a-fA-F-]{36})".r.unanchored
+    val ids = VersionedLake.tableFiles(spark, root, "t")
+      .map(p => new org.apache.hadoop.fs.Path(p).getName)
+      .collect { case partFile(num, uuid) => (num, uuid) }
+    assert(ids.size == 5)
+    assert(ids.distinct.size == 1, ids)
+    assert(VersionedLake.readTable(spark, root, "t").collect()
+      .map(_.getLong(0)).sorted.toSeq == (0L until 5L))
+  }
 }
