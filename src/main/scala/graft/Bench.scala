@@ -239,39 +239,21 @@ object Bench {
         System.err.println(s"[bench] could not write $path: ${e.getMessage}")
       }
     write(outPath)
-    // Also emit the ROUND-STAMPED artifact directly (BENCH_r{N}.json, N =
-    // highest existing round + 1, overridable via SPARK_GRAFT_ROUND): the
-    // driver's own round file is reconstructed from a bounded stdout tail
-    // and has shipped with a truncated queries map — this one is complete.
+    // Also emit the ROUND-STAMPED artifact BENCH_r{N}.json, but only when
+    // SPARK_GRAFT_ROUND names the round: the driver's own round file is
+    // reconstructed from a bounded stdout tail and has shipped with a
+    // truncated queries map — this one is complete. A guessed round number
+    // once filed an 8-core run as the next round, so there is no default.
     // Skipped for filtered/profiling runs (partial map) AND for runs with
     // an explicit BENCH_OUT (scale probes on non-default fixtures must not
     // masquerade as the round's sf0.1 record).
-    if (only.isEmpty && sys.env.get("SPARK_GRAFT_BENCH_OUT").isEmpty) {
-      // zero-pad numeric overrides so the sequence matches the BENCH_r%02d
-      // auto-detection (an unpadded BENCH_r9.json would fork round 9's
-      // artifacts from BENCH_r09.json)
-      val roundFile = sys.env.get("SPARK_GRAFT_ROUND").map { r =>
+    if (only.isEmpty && sys.env.get("SPARK_GRAFT_BENCH_OUT").isEmpty)
+      // zero-pad numeric rounds so BENCH_r9.json and BENCH_r09.json never
+      // fork one round's artifacts
+      sys.env.get("SPARK_GRAFT_ROUND").foreach { r =>
         val padded = if (r.nonEmpty && r.forall(_.isDigit)) f"${r.toInt}%02d" else r
-        s"BENCH_r$padded.json"
+        write(s"BENCH_r$padded.json")
       }
-        .orElse {
-          val pat = "BENCH_r(\\d+)\\.json".r
-          Option(new java.io.File(".").list()).map(_.toSeq).getOrElse(Nil)
-            .collect { case pat(n) => n.toInt }
-            .maxOption.map { n =>
-              // repeated full runs within one round OVERWRITE their own
-              // stamp (marked "emitter":"bench") instead of bumping N —
-              // only a driver-written round file advances the sequence
-              val cur = new java.io.File(f"BENCH_r$n%02d.json")
-              val mine = cur.exists() && {
-                val s = new String(java.nio.file.Files.readAllBytes(cur.toPath))
-                s.contains("\"emitter\":\"bench\"")
-              }
-              if (mine) f"BENCH_r$n%02d.json" else f"BENCH_r${n + 1}%02d.json"
-            }
-        }
-      roundFile.foreach(write)
-    }
     spark.stop()
   }
 }

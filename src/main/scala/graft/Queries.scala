@@ -1540,9 +1540,9 @@ object Queries {
     // maxFilesPerTrigger=1), every batch LSH-joins against the stored
     // index only, and survivors + the batch's index rows commit as ONE
     // atomic VersionedLake group version per batch (exactly-once; the
-    // applied-marker makes replays idempotent). Drop rule = keep-lowest-
-    // id among ARRIVED docs; the oracle replays it from the full pair
-    // set with batch(a) <= batch(b) as the arrival predicate.
+    // manifest's applied watermark makes replays idempotent). Drop rule
+    // = keep-lowest-id among ARRIVED docs; the oracle replays it from the
+    // full pair set with batch(a) <= batch(b) as the arrival predicate.
     "q116_stream_dedup" -> ((s, dir) => {
       val tmp = freshScratchDir("graft_q116")
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
@@ -1563,7 +1563,7 @@ object Queries {
     // q116 THROUGH FAILURE: the stream is killed as soon as the first
     // micro-batch commits (two chunks still pending) and resumed from
     // the checkpoint — the survivor table must STILL hash-match the same
-    // oracle. The group-committed applied-marker is what makes a batch
+    // oracle. The group manifest's applied watermark is what makes a batch
     // replayed across the kill idempotent (committed-but-not-
     // checkpointed => short-circuit, nothing double-appends).
     "q116b_stream_dedup_resume" -> ((s, dir) => {
@@ -1588,7 +1588,7 @@ object Queries {
     // applied batch (worst cadence — a deployment compacts every Nth),
     // the stream is killed after the first batch's commit+compaction,
     // and the resume must land the SAME oracle: tiered state is
-    // row-identical, the CARRIED applied-marker still short-circuits the
+    // row-identical, the sticky applied watermark still short-circuits the
     // replay, and later batches dedup correctly against compacted-and-
     // vacuumed history. retainTargetBytes is pinned at 1 MiB so the
     // fixture's state spans multiple target files and the bench measures
@@ -1624,7 +1624,7 @@ object Queries {
     // against co-clustered stored neighbors (corpus + all earlier
     // arrivals — arrival order outranks id order across batches, id
     // order breaks same-batch ties), and survivors + the batch's
-    // assignment rows + the replay marker commit as ONE atomic group
+    // assignment rows + the applied watermark commit as ONE atomic group
     // version with the centroids CARRIED forward (no model rewrite).
     // maxClusterSize pinned unbounded for oracle exactness (the q106
     // note); the bounded default is the engine-side contract.
@@ -1656,8 +1656,8 @@ object Queries {
     // q117 THROUGH FAILURE: killed as soon as the first micro-batch
     // commits, resumed from the checkpoint — the survivor table must
     // STILL hash-match the same oracle. The carried-centroids group
-    // commit plus the applied-marker short-circuit is what makes the
-    // replay idempotent (a replay past the marker would find its own
+    // commit plus the applied-watermark short-circuit is what makes the
+    // replay idempotent (a replay past the watermark would find its own
     // assignment rows and drop the whole batch against itself).
     "q117b_stream_semdedup_resume" -> ((s, dir) => {
       val tmp = freshScratchDir("graft_q117b")
@@ -1688,9 +1688,9 @@ object Queries {
     // retainEvery=1 incrementally compacts assignments/survivors
     // (keeping the cid-partitioned layout; carried tier + small tail,
     // 1 MiB target for the same bench-scale reason as q116c), CARRIES
-    // centroids + applied, and vacuums past the horizon after every
-    // applied batch; killed after the first batch, resumed, same
-    // oracle. Proves the fitted model survives carry-through-compaction
+    // centroids (the applied watermark rides in the manifest), and
+    // vacuums past the horizon after every applied batch; killed after
+    // the first batch, resumed, same oracle. Proves the fitted model survives carry-through-compaction
     // bit-identically.
     "q117c_stream_semdedup_retention" -> ((s, dir) => {
       val tmp = freshScratchDir("graft_q117c")
@@ -2747,10 +2747,10 @@ object Queries {
     // STREAMING ANN ingest THROUGH RETENTION + FAILURE: q119e's arrivals
     // as a LIVE checkpointed stream (flows/StreamingAnnIndex — the
     // similarity leg of the streaming symmetry). Setup fits the model on
-    // the corpus (vec_id % 5 <> 0) and commits model + codes + marker as
-    // group v1; arrivals stream in three mtime-ordered chunks, each
-    // batch encoding MAP-ONLY against the stored model and committing
-    // codes + quant + the replay marker atomically with the model
+    // the corpus (vec_id % 5 <> 0) and commits model + codes as group
+    // v1; arrivals stream in three mtime-ordered chunks, each batch
+    // encoding MAP-ONLY against the stored model and committing codes +
+    // quant + the applied watermark atomically with the model
     // CARRIED. retainEvery=1 compacts after EVERY applied batch (worst
     // cadence), the stream is killed after the first batch and resumed —
     // and the final search must STILL hash-match q119e's oracle

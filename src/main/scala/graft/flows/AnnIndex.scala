@@ -121,9 +121,9 @@ object AnnIndex {
     * vectors as one new group version; the model tables are carried
     * (metadata re-list). Per-batch cost is independent of the stored
     * corpus size. Returns the committed version. This is the
-    * driver-invoked batch API with NO replay marker — a checkpointed
+    * driver-invoked batch API with NO replay watermark — a checkpointed
     * stream must use [[StreamingAnnIndex]] instead, whose `applied`
-    * marker makes crash-replayed batches no-ops. Pending tombstones are
+    * watermark makes crash-replayed batches no-ops. Pending tombstones are
     * carried (retirements survive every append).
     *
     * RACE-DETECTED like every other writer here (`publishIfBaseIs` with

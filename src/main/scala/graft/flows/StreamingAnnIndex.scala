@@ -17,14 +17,15 @@ import graft.sources.VersionedLake
   * and lands its codes + quantized vectors atomically.
   *
   * Exactly-once: each micro-batch commits `encoded` (append,
-  * cell-partitioned), `quant` (append), `applied` (overwrite, the batch
-  * id) and CARRIES `coarse`/`codebooks` as ONE [[VersionedLake]] group
-  * version. A batch replayed after a crash (committed but not yet
-  * checkpointed) short-circuits on the `applied` marker; without it a
-  * replay would append the same codes TWICE and a later search could
-  * return duplicate ids inside its top-n. [[AnnIndex.append]] has no
-  * marker by design — it is the driver-invoked batch API; this flow is
-  * what a checkpointed stream must use.
+  * cell-partitioned) and `quant` (append) and CARRIES `coarse`/`codebooks`
+  * as ONE [[VersionedLake]] group version whose manifest records the
+  * batch id as its `applied` watermark. A batch replayed after a crash
+  * (committed but not yet checkpointed) short-circuits on the watermark;
+  * without it a replay would append the same codes TWICE and a later
+  * search could return duplicate ids inside its top-n.
+  * [[AnnIndex.append]] sets no watermark by design — it is the
+  * driver-invoked batch API; this flow is what a checkpointed stream
+  * must use.
   *
   * Scale shape per batch: one bounded model read (k + m·k rows collect
   * to encode literals inside [[Similarity.ivfPqEncode]]), one map-only
@@ -36,18 +37,19 @@ import graft.sources.VersionedLake
   * manifests and small files per probed cell; the opt-in `retainEvery`
   * knob runs [[compactState]] on the deterministic batch-id cadence
   * (incremental per-DIRECTORY tiering keeps quiet cells untouched;
-  * `coarse`/`codebooks`/`applied` carried; horizon vacuum; race-detected
-  * publish — row-identical state, resume-safe).
+  * `coarse`/`codebooks` carried; sticky watermark; horizon vacuum;
+  * race-detected publish — row-identical state, resume-safe).
   *
   * Search is [[AnnIndex.search]] verbatim: the layout is the same four
-  * tables (plus the marker, which searches never read), so a streamed
-  * index serves the identical nprobe-pruned IVFADC-R plan.
+  * tables, so a streamed index serves the identical nprobe-pruned
+  * IVFADC-R plan.
   */
 object StreamingAnnIndex {
 
   /** Fit the coarse + PQ model on the initial corpus and commit model +
-    * codes + quantized vectors + the replay marker as group version 1.
-    * Must run once before the stream starts; the stream never refits.
+    * codes + quantized vectors as group version 1 (no watermark yet: no
+    * batch has applied). Must run once before the stream starts; the
+    * stream never refits.
     */
   def setup(corpus: DataFrame, idCol: String, vecCol: String, root: String,
       dims: Int, coarseK: Int, coarseIters: Int, m: Int, k: Int,
@@ -63,15 +65,13 @@ object StreamingAnnIndex {
     val gc = VersionedLake.beginGroupCommit(spark, root)
     // all four data tables are independent frames (coarse/books are
     // bounded literal frames, encoded is materialized, quant is a map
-    // over the corpus) — stage them concurrently; the marker lands
-    // driver-side (no Spark job for one int64)
+    // over the corpus) — stage them concurrently
     gc.writeAll(Seq(
       ("coarse", coarse, "overwrite", Nil),
       ("codebooks", books, "overwrite", Nil),
       ("encoded", encoded, "overwrite", Seq("cell")),
       ("quant", src.select(col(idCol),
         Cluster.quantizeFloor(col(vecCol), scale).as("q")), "overwrite", Nil)))
-    gc.writeMarkerLong("applied", "batch_id", -1L)
     gc.publish()
     ()
   }
@@ -110,9 +110,9 @@ object StreamingAnnIndex {
     * RACE-DETECTED like [[AnnIndex.append]] (`publishIfBaseIs`, bounded
     * retry): a mid-stream [[AnnIndex.delete]] landing inside the batch's
     * claim→publish window would otherwise be superseded by a carry list
-    * read before it — silently un-retiring documents. The marker check
-    * re-runs per attempt at the retried base (the raced commit can never
-    * be this stream's own batch — only this flow writes `applied`).
+    * read before it — silently un-retiring documents. The watermark
+    * check re-runs per attempt at the retried base (the raced commit can
+    * never be this stream's own batch — only this flow marks `applied`).
     */
   def applyBatch(batch: DataFrame, batchId: Long, idCol: String,
       vecCol: String, root: String, scale: Int, maxAttempts: Int = 5,
@@ -145,12 +145,13 @@ object StreamingAnnIndex {
       // Some(applied?) = this attempt resolved; None = raced, retry
       val outcome: Option[Boolean] = VersionedLake.runOrAbort(gc) {
         // one version — the commit's own base — for EVERY read in the
-        // batch, marker included (group consistency)
+        // batch, watermark included (group consistency)
         val v = gc.basedOn.get
-        // replay short-circuit: the marker committed ATOMICALLY with the
-        // data, so "applied says done" ⟺ "this batch's codes are visible"
-        val lastApplied = VersionedLake.readMarkerLong(spark, root,
-          "applied", Some(v), "batch_id")
+        // replay short-circuit: the watermark committed ATOMICALLY with
+        // the data, so "applied says done" ⟺ "this batch's codes are
+        // visible"
+        val lastApplied = VersionedLake.lastApplied(spark, root, v)
+          .getOrElse(-1L)
         if (batchId <= lastApplied) { gc.abort(); Some(false) }
         else {
           val coarse = VersionedLake.readTable(spark, root, "coarse",
@@ -163,7 +164,7 @@ object StreamingAnnIndex {
           // tables, so a hardcoded carry list would let the next
           // optional member silently vanish from batch commits
           VersionedLake.groupTableRelFiles(spark, root, Some(v)).keys
-            .filterNot(Set("encoded", "quant", "applied")).toSeq.sorted
+            .filterNot(Set("encoded", "quant")).toSeq.sorted
             .foreach(gc.carry)
           gc.writeAll(Seq(
             ("encoded",
@@ -172,7 +173,7 @@ object StreamingAnnIndex {
             ("quant", src.select(col(idCol),
               Cluster.quantizeFloor(col(vecCol), scale).as("q")),
               "append", Nil)))
-          gc.writeMarkerLong("applied", "batch_id", batchId)
+          gc.markApplied(batchId)
           raceWindow()
           gc.publishIfBaseIs(v).map(_ => true)
         }
@@ -190,15 +191,16 @@ object StreamingAnnIndex {
   /** Retention pass ([[StreamingRetention.compactState]]): incremental
     * per-directory tiering over `encoded` (the `cell=` layout the nprobe
     * pruning depends on is preserved; quiet cells carried verbatim) and
-    * `quant`; `coarse`/`codebooks`/`applied` carried wholesale; horizon
-    * vacuum; race-detected publish. State is row-identical across the
+    * `quant`; `coarse`/`codebooks` carried wholesale; the sticky
+    * `applied` watermark rides along; horizon vacuum; race-detected
+    * publish. State is row-identical across the
     * pass, so searches and checkpoint resumes are unaffected.
     */
   def compactState(spark: SparkSession, root: String,
       targetBytes: Long = 64L * 1024 * 1024,
       keepVersions: Int = 2): Long =
     StreamingRetention.compactState(spark, root, targetBytes,
-      carryTables = Set("coarse", "codebooks", "applied"),
+      carryTables = Set("coarse", "codebooks"),
       partitioned = Map("encoded" -> Seq("cell")),
       keepVersions = keepVersions)
 }

@@ -23,13 +23,13 @@ import graft.sources.VersionedLake
   * the late lower-id doc still survives on its own merits. Deterministic
   * given the batch assignment, and replayable in SQL (q116's oracle).
   *
-  * Exactly-once: each micro-batch commits `hashed`/`banded` (append),
-  * `survivors` (append), and `applied` (overwrite, the batch id) as ONE
-  * [[VersionedLake]] group version — atomically visible or not at all. A
-  * batch replayed after a crash (committed but not yet checkpointed)
-  * short-circuits on the `applied` marker, so a kill at ANY point
-  * between micro-batches re-lands the identical final state (q116b runs
-  * the kill-and-resume proof against the same oracle).
+  * Exactly-once: each micro-batch commits `hashed`/`banded` (append) and
+  * `survivors` (append) as ONE [[VersionedLake]] group version whose
+  * manifest carries the batch id as its `applied` watermark — atomically
+  * visible or not at all. A batch replayed after a crash (committed but
+  * not yet checkpointed) short-circuits on the watermark, so a kill at
+  * ANY point between micro-batches re-lands the identical final state
+  * (q116b runs the kill-and-resume proof against the same oracle).
   *
   * Scale shape per batch: one shingle+signature pass over the BATCH
   * (never the corpus), one bucket equi-join of the batch's band rows
@@ -53,9 +53,10 @@ import graft.sources.VersionedLake
   * compaction — only the small-file tail accrued since the last pass is
   * bin-packed (the q90 sizing rule, [[LakeWriter.compactionFileCount]]);
   * already-compacted large files are carried verbatim, so per-cadence
-  * I/O is O(new data), not O(state) — CARRIES the `applied` marker so
-  * crash-replay short-circuiting is unaffected, and vacuums past a
-  * `keepVersions`-deep horizon (default 2: an external reader that
+  * I/O is O(new data), not O(state) — the manifest's sticky `applied`
+  * watermark rides along, so crash-replay short-circuiting is
+  * unaffected — and vacuums past a `keepVersions`-deep horizon
+  * (default 2: an external reader that
   * resolved "latest" just before the pass keeps a readable snapshot for
   * a full cycle). State is row-identical before and after, so a resume
   * across a compaction boundary replays to the same survivors
@@ -107,12 +108,11 @@ object StreamingDedup {
     // group consistency even if another committer raced us (the flow is
     // single-writer by contract, but the reads shouldn't rely on that)
     val v = VersionedLake.versions(spark, root).lastOption
-    // replay short-circuit: the marker committed ATOMICALLY with the data,
-    // so "applied says done" ⟺ "this batch's rows are fully visible".
-    // Driver-side read — one 8-byte value per batch never needs a Spark job
-    val lastApplied = v.fold(-1L)(vv =>
-      VersionedLake.readMarkerLong(spark, root, "applied", Some(vv),
-        "batch_id"))
+    // replay short-circuit: the watermark committed ATOMICALLY with the
+    // data (same manifest), so "applied says done" ⟺ "this batch's rows
+    // are fully visible". One manifest read — no Spark job
+    val lastApplied = v.flatMap(VersionedLake.lastApplied(spark, root, _))
+      .getOrElse(-1L)
     if (batchId <= lastApplied) return false
     val docs = batch.select(col(idCol).cast("long").as("__doc_id"),
       col(textCol).as("__text"))
@@ -122,7 +122,7 @@ object StreamingDedup {
     // full shingle pipeline — measured as a ~0.6 s driver gap before
     // every group commit's write jobs (JobProfile q116, r17). Truncated
     // lineage makes each downstream plan a 1-node scan of the KB-scale
-    // batch frames; the exactly-once marker keeps a replayed batch safe
+    // batch frames; the exactly-once watermark keeps a replayed batch safe
     // if a checkpoint block is ever lost.
     val (nh, nb) = Dedup.minHashIndexPortable(docs, "__doc_id", "__text",
       shingleN, numHashes, bands,
@@ -161,14 +161,14 @@ object StreamingDedup {
           .select(col("__doc_id").as(idCol), lit(batchId).as("batch_id"))
         // the three data tables are independent frames over the
         // checkpointed batch index — stage them concurrently (one write
-        // job each), and the one-row marker lands driver-side (no job)
+        // job each); the watermark rides in the manifest (no job)
         gc.writeAll(Seq(
           ("hashed", Dedup.layoutHashed(nh), "append",
             Seq(Dedup.IdLayoutCol)),
           ("banded", Dedup.layoutBanded(nb), "append",
             Seq(Dedup.BandLayoutCol)),
           ("survivors", survivors, "append", Nil)))
-        gc.writeMarkerLong("applied", "batch_id", batchId)
+        gc.markApplied(batchId)
         gc.publish()
       }
       true
@@ -179,8 +179,8 @@ object StreamingDedup {
     * an INCREMENTAL size-tiered compaction of the accrued tables
     * (`hashed`/`banded`/`survivors` — only the small-file tail since the
     * last pass is rewritten, already-compacted large files are carried
-    * verbatim; `applied` CARRIED wholesale so the crash-replay
-    * short-circuit is untouched), then vacuum past the
+    * verbatim; the sticky `applied` watermark republished so the
+    * crash-replay short-circuit is untouched), then vacuum past the
     * `keepVersions`-deep retention horizon. State is row-identical
     * across the pass — only the file layout changes — so the drop rule,
     * the oracle, and a checkpoint resume are all unaffected. The publish
@@ -192,7 +192,7 @@ object StreamingDedup {
       targetBytes: Long = 64L * 1024 * 1024,
       keepVersions: Int = 2): Long =
     StreamingRetention.compactState(spark, root, targetBytes,
-      carryTables = Set("applied"),
+      carryTables = Set.empty,
       partitioned = Map(
         "hashed" -> Seq(Dedup.IdLayoutCol),
         "banded" -> Seq(Dedup.BandLayoutCol)),

@@ -16,8 +16,9 @@ import graft.sources.{LakeWriter, VersionedLake}
   * already-compacted large files (≥ targetBytes/2) verbatim in the new
   * manifest — per-cadence I/O is O(new data since the last pass), not
   * O(accumulated state), so a stream's lifetime compaction cost is
-  * O(state), not O(batches²). `carryTables` (the `applied` replay marker,
-  * a fitted centroid model) are re-listed wholesale; a table whose tail
+  * O(state), not O(batches²). `carryTables` (a fitted centroid model)
+  * are re-listed wholesale (the stream's `applied` watermark is a sticky
+  * manifest field, republished without being named); a table whose tail
   * is ≤ 1 file is carried too (rewriting one file into one file bounds
   * nothing), and in a partitioned layout the same rule applies PER
   * PARTITION DIRECTORY — a dir whose tail is a single file is carried

@@ -26,14 +26,14 @@ import graft.sources.VersionedLake
   * dropped-doc-still-indexes: near-dup status must not depend on whether
   * an intermediate mate survived.
   *
-  * Exactly-once: each micro-batch commits `assignments` (append),
-  * `survivors` (append), `applied` (overwrite, the batch id) and CARRIES
-  * `centroids` forward as ONE [[VersionedLake]] group version — the
-  * carry re-lists the fitted model's files in the new manifest for free,
-  * no data rewrite. A batch replayed after a crash (committed but not
-  * yet checkpointed) short-circuits on the `applied` marker; without the
-  * marker a replay would find its OWN rows in `assignments` and drop the
-  * whole batch against itself.
+  * Exactly-once: each micro-batch commits `assignments` (append) and
+  * `survivors` (append) and CARRIES `centroids` forward as ONE
+  * [[VersionedLake]] group version whose manifest records the batch id
+  * as its `applied` watermark — the carry re-lists the fitted model's
+  * files in the new manifest for free, no data rewrite. A batch replayed
+  * after a crash (committed but not yet checkpointed) short-circuits on
+  * the watermark; without it a replay would find its OWN rows in
+  * `assignments` and drop the whole batch against itself.
   *
   * Scale shape per batch: one k-row centroid read, one map-only batch
   * assign (no shuffle — the q105 pin), one assignments read partition-
@@ -46,14 +46,15 @@ import graft.sources.VersionedLake
   * micro-batch accrues O(batches) manifests and small files; the opt-in
   * `retainEvery` knob runs [[compactState]] on a deterministic cadence
   * (incrementally compacted `assignments`/`survivors` — small tail only,
-  * carried large files — carried `centroids`/`applied`, horizon vacuum,
-  * race-detected publish; row-identical state, resume-safe).
+  * carried large files — carried `centroids`, sticky watermark, horizon
+  * vacuum, race-detected publish; row-identical state, resume-safe).
   */
 object StreamingSemDeDup {
 
   /** Fit the centroid model on the initial corpus and commit model +
-    * corpus assignments + the replay marker as group version 1. Must run
-    * once before the stream starts; the stream never refits.
+    * corpus assignments as group version 1 (no watermark yet: no batch
+    * has applied). Must run once before the stream starts; the stream
+    * never refits.
     */
   def setup(corpus: DataFrame, idCol: String, embCol: String, root: String,
       k: Int, iters: Int, scale: Int = Cluster.QuantScale): Unit = {
@@ -67,7 +68,6 @@ object StreamingSemDeDup {
       Cluster.assignStored(corpus, idCol, embCol,
         gc.readStaged("centroids"), scale),
       partitionBy = Seq("cid"))
-    gc.writeMarkerLong("applied", "batch_id", -1L)
     gc.publish()
     ()
   }
@@ -110,14 +110,14 @@ object StreamingSemDeDup {
       embCol: String, root: String, tau: Double, scale: Int,
       maxClusterSize: Int): Boolean = {
     val spark = batch.sparkSession
-    // one version resolve for EVERY read in the batch, marker included
+    // one version resolve for EVERY read in the batch, watermark included
     // (group consistency)
     val v = VersionedLake.versions(spark, root).last
-    // replay short-circuit: the marker committed ATOMICALLY with the data,
-    // so "applied says done" ⟺ "this batch's assignment rows are visible"
-    // — and a replay past the marker would dedup the batch against itself
-    val lastApplied = VersionedLake.readMarkerLong(spark, root, "applied",
-      Some(v), "batch_id")
+    // replay short-circuit: the watermark committed ATOMICALLY with the
+    // data, so "applied says done" ⟺ "this batch's assignment rows are
+    // visible" — and a replay past it would dedup the batch against itself
+    val lastApplied = VersionedLake.lastApplied(spark, root, v)
+      .getOrElse(-1L)
     if (batchId <= lastApplied) return false
     val centroids = VersionedLake.readTable(spark, root, "centroids", Some(v))
     // explicit schema: partition-column inference would read cid back as
@@ -139,12 +139,12 @@ object StreamingSemDeDup {
         val survivors = Cluster.incrementalSemDeDupAssigned(assignments,
             batchA, idCol, tau, scale, maxClusterSize)
           .select(col(idCol), lit(batchId).as("batch_id"))
-        // independent frames — staged concurrently; the marker lands
-        // driver-side (see StreamingDedup.applyBatch)
+        // independent frames — staged concurrently; the watermark rides
+        // in the manifest (see StreamingDedup.applyBatch)
         gc.writeAll(Seq(
           ("assignments", batchA, "append", Seq("cid")),
           ("survivors", survivors, "append", Nil)))
-        gc.writeMarkerLong("applied", "batch_id", batchId)
+        gc.markApplied(batchId)
         gc.publish()
       }
       true
@@ -160,8 +160,8 @@ object StreamingSemDeDup {
     * size-tiered rewrite of the accrued `assignments` (keeping the
     * cid-partitioned pruned-read layout; small-file tail only, carried
     * large files verbatim) and `survivors`, CARRIES the fitted
-    * `centroids` model and the `applied` replay marker wholesale, then
-    * vacuums past the `keepVersions`-deep retention horizon.
+    * `centroids` model wholesale (the sticky `applied` watermark rides
+    * along), then vacuums past the `keepVersions`-deep retention horizon.
     * Row-identical state; the publish is race-detected (a batch commit
     * landing mid-rewrite aborts the pass, retried next cadence).
     * Returns the latest version.
@@ -170,7 +170,7 @@ object StreamingSemDeDup {
       targetBytes: Long = 64L * 1024 * 1024,
       keepVersions: Int = 2): Long =
     StreamingRetention.compactState(spark, root, targetBytes,
-      carryTables = Set("applied", "centroids"),
+      carryTables = Set("centroids"),
       partitioned = Map("assignments" -> Seq("cid")),
       keepVersions = keepVersions)
 

@@ -175,9 +175,9 @@ object TrainingCorpus {
     *
     * State discipline mirrors the streaming flows: every state table
     * (`fps`, the pruned `hashed`/`banded`, `packstate`, `chunks`,
-    * `survivors`, the `applied` marker) commits as ONE atomic
-    * [[VersionedLake]] group version per batch; a replayed batch id
-    * short-circuits on the marker (exactly-once). Index membership
+    * `survivors`) commits as ONE atomic [[VersionedLake]] group version
+    * per batch, with the batch id as the manifest's `applied` watermark;
+    * a replayed batch id short-circuits on it (exactly-once). Index membership
     * follows the streams' "a dropped doc's near-dup status must not
     * depend on whether its mate survived": the lexical index gets every
     * exact-canonical quality-passer (lexically-dropped included), the
@@ -207,9 +207,8 @@ object TrainingCorpus {
       "semantic arrival dedup needs batchEmbeddings and annRoot")
     val spark = batch.sparkSession
     val v = graft.sources.VersionedLake.versions(spark, root).lastOption
-    val lastApplied = v.fold(-1L)(vv =>
-      graft.sources.VersionedLake.readMarkerLong(spark, root, "applied",
-        Some(vv), "batch_id"))
+    val lastApplied = v.flatMap(graft.sources.VersionedLake.lastApplied(
+      spark, root, _)).getOrElse(-1L)
     if (batchId <= lastApplied) return false
     val docs = batch.select(col("doc_id").cast("long").as("doc_id"),
       col("lang"), col("text"))
@@ -343,7 +342,7 @@ object TrainingCorpus {
       graft.sources.VersionedLake.runOrAbort(gc) {
         // the six data tables derive from already-materialized frames
         // (exactKept/lexKept/semKept are checkpointed, nh/nb persisted) —
-        // stage them concurrently; the one-row marker lands driver-side
+        // stage them concurrently; the watermark rides in the manifest
         gc.writeAll(Seq(
           ("fps", exactKept.select(col("fp")), "append", Nil),
           ("hashed", Dedup.layoutHashed(nh), "append",
@@ -355,7 +354,7 @@ object TrainingCorpus {
           ("survivors",
             semKept.select(col("doc_id"), lit(batchId).as("batch_id")),
             "append", Nil)))
-        gc.writeMarkerLong("applied", "batch_id", batchId)
+        gc.markApplied(batchId)
         gc.publish()
       }
       true

@@ -1,7 +1,11 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.json4s.{JArray, JInt, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods
 
 /** Manifest-based versioned lake table — the minimal lakehouse commit
   * protocol (what table formats reduce to for a single unpartitioned
@@ -21,10 +25,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * instead of a destructive window where the table is half-loaded.
   *
   * Manifest format: `_manifests/v{N}.json` = `{"version":N,"files":[...]}`
-  * (relative paths). The ATOMICITY PRIMITIVE is pluggable via
-  * [[ManifestStore]]: on HDFS-like filesystems ([[HadoopManifestStore]],
-  * the default) a claim is create-no-overwrite and a manifest publish is
-  * write-tmp-then-rename; on object stores ([[CasManifestStore]] over a
+  * (relative paths), written and parsed with json4s: Spark leaves `,`
+  * and non-ASCII text raw in partition directories and a foreign writer
+  * may add quotes or backslashes, so the codec must be a real JSON one.
+  * Group manifests add a `tables` map and an optional `applied` stream
+  * watermark (see the group layout below). The ATOMICITY PRIMITIVE is
+  * pluggable via [[ManifestStore]]: on HDFS-like filesystems
+  * ([[HadoopManifestStore]], the default) a claim is create-no-overwrite
+  * and a manifest publish is write-tmp-then-rename; on object stores ([[CasManifestStore]] over a
   * [[CasBlobStore]]) both are a conditional PUT (`If-None-Match: *`, the
   * S3/GCS first-writer-wins precondition) — no rename needed, because a
   * conditional PUT of the final key IS the visibility event. Data files
@@ -228,7 +236,10 @@ object VersionedLake {
     * pool threads only submit jobs and wait, the cluster does the work —
     * so a handful of in-flight actions saturates the overlap win (guide
     * §2.6: "2-3 jobs in flight is plenty"). Daemon threads: the pool
-    * must never hold the JVM open.
+    * must never hold the JVM open. Its threads inherit Spark's local
+    * properties from whichever thread created them, so every task runs
+    * under its submitter's job scope ([[JobScopeProps]]), never a stale
+    * inherited one.
     */
   private lazy val stagingPool: java.util.concurrent.ExecutorService =
     java.util.concurrent.Executors.newFixedThreadPool(8, r => {
@@ -236,6 +247,13 @@ object VersionedLake {
       t.setDaemon(true)
       t
     })
+
+  /** The local properties that scope a Spark job to its caller: job group
+    * (what `cancelJobGroup` matches), description, interrupt-on-cancel,
+    * scheduler pool and job tags.
+    */
+  private val JobScopeProps = Seq("spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel", "spark.scheduler.pool", "spark.job.tags")
 
   private def storeFor(spark: SparkSession, table: String,
       override_ : Option[ManifestStore]): ManifestStore =
@@ -344,80 +362,47 @@ object VersionedLake {
       s"_data/v$next", partitionBy)
     val carried = if (mode == "append" && prev.nonEmpty)
       manifestFiles(store, table, prev.last) else Seq.empty
-    val files = carried ++ newFiles
-    val json = files.map(p => "\"" + jsonEscape(p) + "\"").mkString(
-      s"""{"version":$next,"files":[""", ",", "]}")
-    if (!store.publish(next,
-        json.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    val manifest = encodeManifest(
+      "version" -> JInt(next), "files" -> fileArray(carried ++ newFiles))
+    if (!store.publish(next, manifest))
       throw new java.io.IOException(s"commit v$next lost the publish race")
     next
   }
 
-  /** Tokenize the machine-written manifest JSON into structural characters
-    * and (unescaped) string literals. File paths can contain commas,
-    * brackets, quotes or backslashes the moment a partition VALUE carries
-    * them (Spark's escapePathName escapes `/` but not `,`/`]`), so naive
-    * split/regex extraction is not safe — this quote-aware scanner plus
-    * the escaping writer keeps the no-JSON-library choice honest.
-    */
-  private def jsonTokens(json: String): Vector[Either[Char, String]] = {
-    val out = Vector.newBuilder[Either[Char, String]]
-    val sb = new java.lang.StringBuilder
-    var i = 0
-    var inStr = false
-    while (i < json.length) {
-      val c = json.charAt(i)
-      if (inStr) c match {
-        case '\\' if i + 1 < json.length =>
-          sb.append(json.charAt(i + 1)); i += 1
-        case '"' => inStr = false; out += Right(sb.toString)
-        case other => sb.append(other)
-      } else c match {
-        case '"' => inStr = true; sb.setLength(0)
-        case '{' | '}' | '[' | ']' | ':' | ',' => out += Left(c)
-        case _ => () // digits / whitespace — not needed by the readers
-      }
-      i += 1
-    }
-    out.result()
-  }
+  // ========================= manifest codec =========================
+  //
+  // Both manifest shapes are json4s-rendered objects; a reader parses the
+  // whole manifest and pattern-matches the fields it needs.
 
-  private def jsonEscape(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
+  private def encodeManifest(fields: (String, JValue)*): Array[Byte] =
+    JsonMethods.compact(JsonMethods.render(JObject(fields.toList)))
+      .getBytes(UTF_8)
 
-  /** The string elements of the array valued at `key`, starting the scan
-    * at token index `from`.
-    */
-  private def stringArrayAt(ts: Vector[Either[Char, String]],
-      from: Int): (Seq[String], Int) = {
-    require(from + 1 < ts.length && ts(from) == Left(':') &&
-      ts(from + 1) == Left('['), "malformed manifest: expected :[")
-    val b = Seq.newBuilder[String]
-    var i = from + 2
-    while (i < ts.length && ts(i) != Left(']')) {
-      ts(i) match {
-        case Right(s) => b += s
-        case Left(',') => ()
-        case other => throw new IllegalStateException(
-          s"malformed manifest: unexpected $other in file list")
-      }
-      i += 1
+  private def fileArray(files: Seq[String]): JValue =
+    JArray(files.map(JString(_)).toList)
+
+  /** A manifest's top-level fields (empty if it is not a JSON object). */
+  private def parseManifest(store: ManifestStore,
+      version: Long): Map[String, JValue] =
+    JsonMethods.parse(new String(store.readManifest(version), UTF_8)) match {
+      case JObject(fields) => fields.toMap
+      case _ => Map.empty
     }
-    (b.result(), i + 1) // past the ]
+
+  /** The string elements of a manifest file list; None if `v` is not one. */
+  private def fileList(v: JValue): Option[Seq[String]] = v match {
+    case JArray(xs) => Some(xs.map {
+      case JString(p) => p
+      case other => throw new IllegalStateException(
+        s"malformed manifest: unexpected $other in file list")
+    })
+    case _ => None
   }
 
   private def manifestFiles(store: ManifestStore, table: String,
-      version: Long): Seq[String] = {
-    val json = new String(store.readManifest(version),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val ts = jsonTokens(json)
-    // "files" can only appear as the key: single-table paths all start
-    // with "_data/"
-    val ki = ts.indexOf(Right("files"))
-    if (ki < 0) throw new IllegalStateException(
-      s"malformed manifest v$version of $table")
-    stringArrayAt(ts, ki + 1)._1
-  }
+      version: Long): Seq[String] =
+    parseManifest(store, version).get("files").flatMap(fileList).getOrElse(
+      throw new IllegalStateException(s"malformed manifest v$version of $table"))
 
   /** Read a version (default: latest). Missing table/version throws.
     *
@@ -523,44 +508,42 @@ object VersionedLake {
   // last table write and the marker write saw a torn group).
   //
   // Layout: `<root>/_manifests/v{N}.json` =
-  //   `{"version":N,"tables":{"a":["a/_data/vN/part…"],"b":[…]}}`
-  // with data under `<root>/<table>/_data/v{N}/`. Claim/publish atomicity
-  // is the SAME pluggable [[ManifestStore]] as single tables — one CAS
-  // publish covers the whole group on object stores.
+  //   `{"version":N,"tables":{"a":["a/_data/vN/part…"],"b":[…]},"applied":B}`
+  // with data under `<root>/<table>/_data/v{N}/`. `applied` is optional:
+  // the exactly-once watermark of the stream that writes the group (the
+  // last micro-batch id whose data this version holds — Delta's `txn`
+  // action reduced to one field). It is STICKY: a commit that does not
+  // call [[GroupCommit.markApplied]] republishes its base version's value,
+  // so compaction, retirements and carry-only commits keep it unawares.
+  // Claim/publish atomicity is the SAME pluggable [[ManifestStore]] as
+  // single tables — one CAS publish covers the whole group (watermark
+  // included) on object stores.
 
   // leading alphanumeric keeps member tables out of the store's own
-  // metadata directories (`_manifests`, `_data`); the reserved words keep
-  // the manifest's key scan unambiguous (member paths always contain "/",
-  // so they can never collide with a bare key)
+  // metadata directories (`_manifests`, `_data`); the reserved words are
+  // the manifests' own keys
   private def tableNameOk(t: String): Boolean =
     t.nonEmpty && t.matches("[A-Za-z0-9][A-Za-z0-9_.-]*") &&
       t != "version" && t != "tables" && t != "files"
 
-  /** Per-table file lists of a group manifest. */
-  private def groupManifestFiles(store: ManifestStore, root: String,
-      version: Long): Map[String, Seq[String]] = {
-    val json = new String(store.readManifest(version),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val ts = jsonTokens(json)
-    val ti = ts.indexOf(Right("tables"))
-    if (ti < 0 || ti + 2 >= ts.length || ts(ti + 1) != Left(':') ||
-      ts(ti + 2) != Left('{'))
-      throw new IllegalStateException(
+  /** A parsed group manifest: per-table file lists plus the optional
+    * `applied` watermark.
+    */
+  private final case class GroupManifest(tables: Map[String, Seq[String]],
+      applied: Option[Long])
+
+  private def groupManifest(store: ManifestStore, root: String,
+      version: Long): GroupManifest = {
+    val m = parseManifest(store, version)
+    val tables = m.get("tables") match {
+      case Some(JObject(fields)) => fields.map { case (t, v) =>
+        t -> fileList(v).getOrElse(throw new IllegalStateException(
+          s"malformed group manifest v$version of $root: table $t"))
+      }.toMap
+      case _ => throw new IllegalStateException(
         s"v$version of $root is not a group manifest")
-    val out = Map.newBuilder[String, Seq[String]]
-    var i = ti + 3
-    while (i < ts.length && ts(i) != Left('}')) {
-      ts(i) match {
-        case Right(name) =>
-          val (files, next) = stringArrayAt(ts, i + 1)
-          out += name -> files
-          i = next
-        case Left(',') => i += 1
-        case other => throw new IllegalStateException(
-          s"malformed group manifest v$version of $root: unexpected $other")
-      }
     }
-    out.result()
+    GroupManifest(tables, m.get("applied").collect { case JInt(b) => b.toLong })
   }
 
   /** An in-flight atomic multi-table commit: the version number is already
@@ -582,7 +565,12 @@ object VersionedLake {
     // from. A separately-read "latest" can sit one commit behind the
     // claim (a fold landing in the gap), making carry() throw on a table
     // the manifest no longer lists — a loud crash where a retry belongs.
-    private def prevVersion: Option[Long] = basedOn
+    //
+    // The base manifest is parsed once per commit: append carry lists,
+    // carry() and the sticky watermark all read it.
+    private lazy val base: Option[GroupManifest] =
+      basedOn.map(groupManifest(store, root, _))
+    private var applied: Option[Long] = None
     private val staged =
       scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
     // tables whose data THIS commit wrote (vs carried) — what abort() sweeps
@@ -620,8 +608,8 @@ object VersionedLake {
       }
       // resolve the previous manifest ONCE for every append entry
       val prevFiles: Map[String, Seq[String]] =
-        if (tables.exists(_._3 == "append") && prevVersion.nonEmpty)
-          groupManifestFiles(store, root, prevVersion.get)
+        if (tables.exists(_._3 == "append")) base.fold(
+          Map.empty[String, Seq[String]])(_.tables)
         else Map.empty
       stage(tables.map { case (t, df, mode, pb) =>
         (t, df, if (mode == "append") prevFiles.getOrElse(t, Seq.empty)
@@ -664,9 +652,21 @@ object VersionedLake {
         s"duplicate table in one staging batch: ${tables.map(_._1).mkString(", ")}")
       wroteData ++= tables.map(_._1)
       val f = fs(spark, root)
+      // each write runs under THIS caller's job scope, and the pool
+      // thread gets its own back afterwards (null unsets a property)
+      val sc = spark.sparkContext
+      def scope() = JobScopeProps.map(k => k -> sc.getLocalProperty(k))
+      def enter(props: Seq[(String, String)]): Unit =
+        props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      val caller = scope()
       val futures = tables.map { case (t, df, carried, pb) =>
-        t -> stagingPool.submit(() => carried ++ writeData(df, f,
-          new Path(root, s"$t/_data/v$version"), s"$t/_data/v$version", pb))
+        t -> stagingPool.submit(() => {
+          val own = scope()
+          enter(caller)
+          try carried ++ writeData(df, f,
+            new Path(root, s"$t/_data/v$version"), s"$t/_data/v$version", pb)
+          finally enter(own)
+        })
       }
       var interrupted = false
       val results = futures.map { case (t, fut) =>
@@ -689,34 +689,13 @@ object VersionedLake {
       ()
     }
 
-    /** Stage a ONE-ROW marker table (e.g. a stream's `applied` batch id)
-      * with a DRIVER-SIDE parquet write — no Spark job, no committer:
-      * the row is a single int64 the exactly-once protocol consults once
-      * per micro-batch, and routing it through a full distributed write
-      * (plan → schedule → task → commit) was a fixed per-batch cost with
-      * zero data on it. The file is a plain parquet file (parquet-mr
-      * writer), so every existing reader — [[readTable]], an external
-      * engine, the specs — reads it unchanged; [[readMarkerLong]] is the
-      * matching driver-side fast read. Overwrite semantics (markers
-      * supersede; nothing is carried).
+    /** Record `batchId` as the stream watermark this commit publishes
+      * (the group manifest's `applied` field). It becomes visible in the
+      * same atomic publish as the batch's data, or not at all.
       */
-    def writeMarkerLong(table: String, column: String, value: Long): Unit = {
+    def markApplied(batchId: Long): Unit = {
       requireOpen()
-      requireUnstaged(table)
-      val rel = s"$table/_data/v$version/part-00000-marker.parquet"
-      val p = new Path(root, rel)
-      wroteData += table
-      val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-        s"message marker { required int64 $column; }")
-      val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-        .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
-          p, spark.sparkContext.hadoopConfiguration))
-        .withType(schema)
-        .build()
-      try w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(
-        schema).newGroup().append(column, value))
-      finally w.close()
-      staged(table) = Seq(rel)
+      applied = Some(batchId)
     }
 
     /** Stage `table` as `carriedFiles` (prior data files re-listed
@@ -795,11 +774,11 @@ object VersionedLake {
     def carry(table: String): Unit = {
       requireOpen()
       requireUnstaged(table)
-      val prev = prevVersion.getOrElse(throw new IllegalArgumentException(
+      val prev = base.getOrElse(throw new IllegalArgumentException(
         s"no previous version at $root to carry $table from"))
-      staged(table) = groupManifestFiles(store, root, prev).getOrElse(table,
+      staged(table) = prev.tables.getOrElse(table,
         throw new IllegalArgumentException(
-          s"table $table not present in v$prev of $root"))
+          s"table $table not present in v${basedOn.get} of $root"))
       ()
     }
 
@@ -810,16 +789,19 @@ object VersionedLake {
       readFiles(spark, root, files, mergeSchema, null)
     }
 
-    /** Atomically publish every staged table as version [[version]]. */
+    /** Atomically publish every staged table as version [[version]], with
+      * the [[markApplied]] watermark or, failing that, the base version's.
+      */
     def publish(): Long = {
       requireOpen()
       require(staged.nonEmpty, "publish with no staged tables")
-      val body = staged.map { case (t, files) =>
-        "\"" + t + "\":" + files.map(p => "\"" + jsonEscape(p) + "\"")
-          .mkString("[", ",", "]")
-      }.mkString(s"""{"version":$version,"tables":{""", ",", "}}")
-      if (!store.publish(version,
-          body.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      val watermark = applied.orElse(base.flatMap(_.applied))
+      val manifest = encodeManifest(Seq(
+        "version" -> JInt(version),
+        "tables" -> JObject(staged.toList.map { case (t, files) =>
+          t -> fileArray(files) })) ++
+        watermark.map(b => "applied" -> JInt(b)): _*)
+      if (!store.publish(version, manifest))
         throw new java.io.IOException(
           s"group commit v$version lost the publish race at $root")
       published = true
@@ -901,22 +883,9 @@ object VersionedLake {
   /** One member table's file list, with the shared missing-table error. */
   private def memberFiles(store: ManifestStore, root: String, v: Long,
       table: String): Seq[String] =
-    groupManifestFiles(store, root, v).getOrElse(table,
+    groupManifest(store, root, v).tables.getOrElse(table,
       throw new java.io.FileNotFoundException(
         s"table $table not in group v$v at $root"))
-
-  /** Member tables of the group manifest at `version` (default: latest).
-    * Maintenance jobs use this to discover which tables a retention pass
-    * must rewrite or carry — a group manifest lists ONLY staged tables,
-    * so a compacting commit that misses one drops it from the version.
-    */
-  def tables(spark: SparkSession, root: String,
-      version: Option[Long] = None,
-      manifestStore: Option[ManifestStore] = None): Seq[String] = {
-    val store = storeFor(spark, root, manifestStore)
-    groupManifestFiles(store, root,
-      resolveVersion(store, root, version)).keys.toSeq.sorted
-  }
 
   /** Absolute data-file paths of one member table at a version (default:
     * latest) — what a retention pass stats to size its compaction rewrite
@@ -931,35 +900,14 @@ object VersionedLake {
       .map(rel => new Path(root, rel).toString)
   }
 
-  /** DRIVER-SIDE read of a one-row int64 marker table (the `applied`
-    * batch id the exactly-once flows consult before every micro-batch):
-    * the manifest already names the file, and reading one 8-byte value
-    * through a full Spark job (plan → schedule → task → collect) was a
-    * fixed per-batch lifecycle cost. Reads the FIRST row's `column` via
-    * parquet-mr — works on both Spark-written and
-    * [[GroupCommit.writeMarkerLong]]-written files. Falls back to a
-    * Spark read when the marker unexpectedly spans several files (a
-    * foreign writer) — correctness never depends on the fast path.
+  /** The stream watermark (`applied`) published with group `version`;
+    * None when that version carries none (no stream has committed a
+    * batch). One manifest read, no Spark job — the exactly-once flows
+    * consult it before every micro-batch.
     */
-  def readMarkerLong(spark: SparkSession, root: String, table: String,
-      version: Option[Long], column: String,
-      manifestStore: Option[ManifestStore] = None): Long = {
-    val files = tableFiles(spark, root, table, version, manifestStore)
-    if (files.size == 1) {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-          new Path(files.head))
-        .withConf(conf).build()
-      try {
-        val g = reader.read()
-        require(g != null, s"marker table $table at $root is empty")
-        g.getLong(column, 0)
-      } finally reader.close()
-    } else
-      readTable(spark, root, table, version, manifestStore = manifestStore)
-        .select(column).head().getLong(0)
-  }
+  def lastApplied(spark: SparkSession, root: String, version: Long,
+      manifestStore: Option[ManifestStore] = None): Option[Long] =
+    groupManifest(storeFor(spark, root, manifestStore), root, version).applied
 
   /** Row count of one member table at a version (default: latest) from
     * parquet FOOTERS only — O(files) driver-side footer reads (a few KB
@@ -981,21 +929,9 @@ object VersionedLake {
     }.sum
   }
 
-  /** Every member table's absolute data-file paths at a version (default:
-    * latest) in ONE manifest read — the whole-group view a retention pass
-    * iterates ([[graft.flows.StreamingRetention]]); per-table calls to
-    * [[tableFiles]] would re-list and re-parse the manifest each time.
-    */
-  def groupTableFiles(spark: SparkSession, root: String,
-      version: Option[Long] = None,
-      manifestStore: Option[ManifestStore] = None): Map[String, Seq[String]] = {
-    val store = storeFor(spark, root, manifestStore)
-    groupManifestFiles(store, root, resolveVersion(store, root, version))
-      .map { case (t, fs0) =>
-        t -> fs0.map(rel => new Path(root, rel).toString) }
-  }
-
-  /** [[groupTableFiles]] with MANIFEST-RELATIVE paths — what
+  /** Every member table's MANIFEST-RELATIVE data-file paths at a version
+    * (default: latest) in ONE manifest read — the whole-group view a
+    * retention pass iterates ([[graft.flows.StreamingRetention]]) and what
     * [[GroupCommit.writeWithCarried]] consumes (the manifest lists
     * relative paths; a retention pass that carried absolute ones would
     * publish a manifest no reader could resolve).
@@ -1004,7 +940,7 @@ object VersionedLake {
       version: Option[Long] = None,
       manifestStore: Option[ManifestStore] = None): Map[String, Seq[String]] = {
     val store = storeFor(spark, root, manifestStore)
-    groupManifestFiles(store, root, resolveVersion(store, root, version))
+    groupManifest(store, root, resolveVersion(store, root, version)).tables
   }
 
   /** Read an explicit SUBSET of a group's manifest-relative files — the
@@ -1028,56 +964,17 @@ object VersionedLake {
     */
   def vacuumGroup(spark: SparkSession, root: String, keepFrom: Long,
       claimTtlMs: Long = 24L * 3600 * 1000,
-      manifestStore: Option[ManifestStore] = None): Int = {
-    val f = fs(spark, root)
-    val store = storeFor(spark, root, manifestStore)
-    val vs = store.committedVersions()
-    val keep = vs.filter(_ >= keepFrom)
-    require(keep.nonEmpty, s"vacuum would delete every version of $root")
-    val live = keep.flatMap(v => groupManifestFiles(store, root, v).values.flatten).toSet
-    val now = System.currentTimeMillis()
-    def claimAgeMs(v: Long): Long =
-      store.claimModifiedAtMs(v).map(now - _).getOrElse(Long.MaxValue)
-    val inFlight = store.claimedVersions()
-      .filter(v => !vs.contains(v) &&
-        (v >= keepFrom || claimAgeMs(v) <= claimTtlMs)).toSet
-    val rootPrefix = f.makeQualified(new Path(root)).toUri.getPath
-    var deleted = 0
-    // member data roots: every first-level dir with a `_data` child (the
-    // manifests' table keys cover committed tables; this sweep also finds
-    // tables only ever staged by crashed commits)
-    val tableDirs =
-      if (!f.exists(new Path(root))) Seq.empty
-      else f.listStatus(new Path(root)).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName != "_manifests")
-        .map(s => new Path(s.getPath, "_data"))
-        .filter(f.exists)
-    tableDirs.foreach { dataRoot =>
-      // FsWalk, not listFiles(recursive) — the located listing's
-      // per-file cost made each superseding vacuum a multi-second stall
-      // on the local FS (FsWalk scaladoc)
-      val victims = FsWalk.files(f, dataRoot).flatMap { s =>
-        val rel = s.getPath.toUri.getPath
-          .stripPrefix(rootPrefix).stripPrefix("/")
-        // rel = <table>/_data/v{N}/…: leave in-flight versions alone
-        val ver = rel.split("/").lift(2).collect {
-          case v if v.matches("v\\d+") => v.drop(1).toLong
-        }
-        if (!live.contains(rel) && !ver.exists(inFlight.contains))
-          Some(s.getPath)
-        else None
-      }
-      victims.foreach { p => if (f.delete(p, false)) deleted += 1 }
-    }
-    vs.filterNot(keep.contains).foreach { v =>
-      store.deleteManifest(v)
-      store.deleteClaim(v)
-    }
-    store.claimedVersions()
-      .filter(v => v < keepFrom && !vs.contains(v) && !inFlight.contains(v))
-      .foreach(store.deleteClaim)
-    deleted
-  }
+      manifestStore: Option[ManifestStore] = None): Int =
+    sweep(spark, root, keepFrom, claimTtlMs, manifestStore,
+      (store, v) => groupManifest(store, root, v).tables.values.flatten,
+      // member data roots: every first-level dir with a `_data` child (the
+      // manifests' table keys cover committed tables; this sweep also
+      // finds tables only ever staged by crashed commits)
+      f => if (!f.exists(new Path(root))) Seq.empty
+        else f.listStatus(new Path(root)).toSeq
+          .filter(s => s.isDirectory && s.getPath.getName != "_manifests")
+          .map(s => new Path(s.getPath, "_data"))
+          .filter(f.exists))
 
   /** Delete data files referenced by NO manifest ≥ `keepFrom` and all
     * older manifests — the vacuum step that bounds storage. Returns the
@@ -1093,13 +990,24 @@ object VersionedLake {
     */
   def vacuum(spark: SparkSession, table: String, keepFrom: Long,
       claimTtlMs: Long = 24L * 3600 * 1000,
-      manifestStore: Option[ManifestStore] = None): Int = {
-    val f = fs(spark, table)
-    val store = storeFor(spark, table, manifestStore)
+      manifestStore: Option[ManifestStore] = None): Int =
+    sweep(spark, table, keepFrom, claimTtlMs, manifestStore,
+      (store, v) => manifestFiles(store, table, v),
+      f => Seq(new Path(table, "_data")).filter(f.exists))
+
+  /** The sweep both vacuums share. `liveOf` lists one kept manifest's
+    * root-relative files; `dataRoots` are the `_data` directories to walk.
+    */
+  private def sweep(spark: SparkSession, root: String, keepFrom: Long,
+      claimTtlMs: Long, manifestStore: Option[ManifestStore],
+      liveOf: (ManifestStore, Long) => Iterable[String],
+      dataRoots: FileSystem => Seq[Path]): Int = {
+    val f = fs(spark, root)
+    val store = storeFor(spark, root, manifestStore)
     val vs = store.committedVersions()
     val keep = vs.filter(_ >= keepFrom)
-    require(keep.nonEmpty, s"vacuum would delete every version of $table")
-    val live = keep.flatMap(manifestFiles(store, table, _)).toSet
+    require(keep.nonEmpty, s"vacuum would delete every version of $root")
+    val live = keep.flatMap(liveOf(store, _)).toSet
     // a commit IN FLIGHT (claim taken, manifest not yet published) has
     // data files no manifest references yet — its whole _data/v{N} dir is
     // off-limits. In flight = manifest-less AND (≥ keepFrom OR claim
@@ -1110,18 +1018,21 @@ object VersionedLake {
     val inFlight = store.claimedVersions()
       .filter(v => !vs.contains(v) &&
         (v >= keepFrom || claimAgeMs(v) <= claimTtlMs)).toSet
-    val dataRoot = new Path(table, "_data")
     // path-string relativization (URI.relativize silently fails across
     // scheme-qualified vs raw paths and would mark every file dead)
-    val tablePrefix = f.makeQualified(new Path(table)).toUri.getPath
+    val rootPrefix = f.makeQualified(new Path(root)).toUri.getPath
     var deleted = 0
-    if (f.exists(dataRoot)) {
-      // FsWalk, not listFiles(recursive) — see FsWalk's scaladoc
+    dataRoots(f).foreach { dataRoot =>
+      // FsWalk, not listFiles(recursive) — the located listing's
+      // per-file cost made each superseding vacuum a multi-second stall
+      // on the local FS (FsWalk scaladoc)
       val victims = FsWalk.files(f, dataRoot).flatMap { s =>
         val rel = s.getPath.toUri.getPath
-          .stripPrefix(tablePrefix).stripPrefix("/")
-        // rel = _data/v{N}/...: leave in-flight versions' files alone
-        val ver = rel.split("/").lift(1).collect {
+          .stripPrefix(rootPrefix).stripPrefix("/")
+        // leave in-flight versions' files alone (the v{N} segment
+        // follows `_data`, as in readFiles)
+        val segs = rel.split("/")
+        val ver = segs.lift(segs.indexOf("_data") + 1).collect {
           case v if v.matches("v\\d+") => v.drop(1).toLong
         }
         if (!live.contains(rel) && !ver.exists(inFlight.contains))

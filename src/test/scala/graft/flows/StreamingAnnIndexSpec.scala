@@ -8,13 +8,13 @@ import graft.SparkSpec
 import graft.sources.{Lake, VersionedLake}
 
 /** The streaming ANN ingest contracts: exactly-once appends via the
-  * applied marker (a crash-replayed batch is a no-op — without the
-  * marker it would land its codes twice and poison top-n with duplicate
-  * ids), model carried bit-identically across batches, a streamed index
-  * search-identical to the batch-API build+append over the same splits,
-  * and retention that carries model + marker (q119h proves the full
-  * kill/resume/compact chain against q119e's oracle; this spec pins the
-  * API contracts the oracle can't see).
+  * manifest's applied watermark (a crash-replayed batch is a no-op —
+  * without it a replay would land its codes twice and poison top-n with
+  * duplicate ids), model carried bit-identically across batches, a
+  * streamed index search-identical to the batch-API build+append over
+  * the same splits, and retention that carries model + watermark (q119h
+  * proves the full kill/resume/compact chain against q119e's oracle;
+  * this spec pins the API contracts the oracle can't see).
   */
 class StreamingAnnIndexSpec extends SparkSpec {
 
@@ -49,7 +49,7 @@ class StreamingAnnIndexSpec extends SparkSpec {
       root, graft.operators.Cluster.QuantScale))
     val afterB0 = codesCount(root)
     val vAfterB0 = VersionedLake.versions(spark, root).last
-    // crash replay: same batch id short-circuits on the marker
+    // crash replay: same batch id short-circuits on the watermark
     assert(!StreamingAnnIndex.applyBatch(b0, 0L, "vec_id", "embedding",
       root, graft.operators.Cluster.QuantScale))
     assert(codesCount(root) == afterB0, "replay must not duplicate codes")
@@ -95,16 +95,19 @@ class StreamingAnnIndexSpec extends SparkSpec {
     val before = top()
     val vPre = VersionedLake.versions(spark, root).last
     val model = VersionedLake.groupTableRelFiles(spark, root, Some(vPre))
+    val appliedPre = VersionedLake.lastApplied(spark, root, vPre)
     val nv = StreamingAnnIndex.compactState(spark, root, keepVersions = 1)
     assert(nv > vPre)
     val after = VersionedLake.groupTableRelFiles(spark, root, Some(nv))
     assert(after("coarse") == model("coarse"))
     assert(after("codebooks") == model("codebooks"))
-    assert(after("applied") == model("applied"))
+    // the watermark is a manifest field the compacting commit keeps
+    assert(appliedPre == Some(1L))
+    assert(VersionedLake.lastApplied(spark, root, nv) == appliedPre)
     // each cell dir had 3 small files (setup + 2 batches) -> re-packed
     assert(after("encoded").size < model("encoded").size)
     assert(top() == before)
-    // the carried marker still short-circuits a replay after the pass
+    // the sticky watermark still short-circuits a replay after the pass
     assert(!StreamingAnnIndex.applyBatch(emb.filter(col("vec_id") % 4 === 3),
       1L, "vec_id", "embedding", root, graft.operators.Cluster.QuantScale))
     assert(codesCount(root) == 60)
@@ -140,8 +143,19 @@ class StreamingAnnIndexSpec extends SparkSpec {
       m = 4, k = 2, iters = 2)
     assert(StreamingAnnIndex.applyBatch(emb.filter(col("vec_id") % 4 === 1),
       0L, "vec_id", "embedding", root, graft.operators.Cluster.QuantScale))
-    // the upstream dedup pass retires two stored ids mid-stream
+    // the upstream dedup pass retires two stored ids mid-stream; the
+    // retirement commit keeps the stream's watermark without naming it
+    val vPre = VersionedLake.versions(spark, root).last
     AnnIndex.delete(Seq(2L, 4L).toDF("vec_id"), "vec_id", root)
+    val vDel = VersionedLake.versions(spark, root).last
+    assert(vDel > vPre)
+    assert(VersionedLake.lastApplied(spark, root, vDel) == Some(0L))
+    assert(VersionedLake.lastApplied(spark, root, vDel) ==
+      VersionedLake.lastApplied(spark, root, vPre))
+    assert(!StreamingAnnIndex.applyBatch(emb.filter(col("vec_id") % 4 === 1),
+      0L, "vec_id", "embedding", root, graft.operators.Cluster.QuantScale),
+      "a replay across the retirement must short-circuit")
+    assert(VersionedLake.versions(spark, root).last == vDel)
     assert(StreamingAnnIndex.applyBatch(emb.filter(col("vec_id") % 4 === 3),
       1L, "vec_id", "embedding", root, graft.operators.Cluster.QuantScale))
     val vLast = VersionedLake.versions(spark, root).last
@@ -198,8 +212,36 @@ class StreamingAnnIndexSpec extends SparkSpec {
       .contains("tombstones"),
       "the interleaved retirement must survive the batch commit")
     assert(codesCount(root) == 60, "the raced batch's codes must land")
-    // and the marker advanced, so a replay of batch 0 is still a no-op
+    // and the watermark advanced, so a replay of batch 0 is still a no-op
     assert(!StreamingAnnIndex.applyBatch(emb.filter(col("vec_id") % 2 === 1),
       0L, "vec_id", "embedding", root, graft.operators.Cluster.QuantScale))
+  }
+
+  test("a batch that marks its watermark and then dies before publish " +
+    "publishes nothing: the version, the watermark and the codes are " +
+    "unchanged, and the batch applies cleanly on retry") {
+    val root = Files.createTempDirectory("sann_kill").toString + "/index"
+    val emb = emb60
+    StreamingAnnIndex.setup(emb.filter(col("vec_id") % 2 === 0), "vec_id",
+      "embedding", root, dims = 64, coarseK = 2, coarseIters = 2,
+      m = 4, k = 2, iters = 2)
+    val b0 = emb.filter(col("vec_id") % 2 === 1)
+    val v1 = VersionedLake.versions(spark, root).last
+    assert(VersionedLake.lastApplied(spark, root, v1).isEmpty)
+    // raceWindow runs after markApplied and before the publish
+    val e = intercept[IllegalStateException] {
+      StreamingAnnIndex.applyBatch(b0, 0L, "vec_id", "embedding", root,
+        graft.operators.Cluster.QuantScale,
+        raceWindow = () => throw new IllegalStateException("killed"))
+    }
+    assert(e.getMessage == "killed")
+    assert(VersionedLake.versions(spark, root) == Seq(v1))
+    assert(VersionedLake.lastApplied(spark, root, v1).isEmpty)
+    assert(codesCount(root) == 30)
+    assert(StreamingAnnIndex.applyBatch(b0, 0L, "vec_id", "embedding", root,
+      graft.operators.Cluster.QuantScale))
+    val v2 = VersionedLake.versions(spark, root).last
+    assert(VersionedLake.lastApplied(spark, root, v2) == Some(0L))
+    assert(codesCount(root) == 60)
   }
 }

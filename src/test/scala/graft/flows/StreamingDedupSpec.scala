@@ -84,7 +84,7 @@ class StreamingDedupSpec extends SparkSpec {
     assert(survivorsOf(tight) == survivorsOf(plain))
     assert(indexIdsOf(tight) == indexIdsOf(plain))
     // resume across the compaction boundary: a crash-replayed batch id
-    // still short-circuits on the CARRIED marker…
+    // still short-circuits on the sticky watermark…
     val vAfter = VersionedLake.versions(spark, tight).last
     assert(!StreamingDedup.applyBatch(
       Seq((30L, base + " more extra")).toDF("doc_id", "text"), 2L,
@@ -98,10 +98,10 @@ class StreamingDedupSpec extends SparkSpec {
     assert(survivorsOf(tight) == survivorsOf(plain))
     // (b) file count bounded: the compacted root holds ONE size-targeted
     // file per PARTITION DIRECTORY of the pruned-layout index tables
-    // (hashed by ph, banded by pb) plus one survivors file and the
-    // carried marker — the uncompacted root accrues per-batch files
-    // beyond that. Count from the last pre-append compaction point:
-    // recompact now.
+    // (hashed by ph, banded by pb) plus one survivors file (the applied
+    // watermark is a manifest field, not a file) — the uncompacted root
+    // accrues per-batch files beyond that. Count from the last
+    // pre-append compaction point: recompact now.
     StreamingDedup.compactState(spark, tight, keepVersions = 1)
     def parquetCount(root: String): Int = {
       val it = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
@@ -115,9 +115,9 @@ class StreamingDedupSpec extends SparkSpec {
       VersionedLake.readTable(spark, tight, "banded",
           schemaDDL = "id BIGINT, band INT, bucket BIGINT, pb BIGINT")
         .select("pb").distinct().count().toInt
-    assert(parquetCount(tight) == layoutDirs + 2,
-      s"expected one file per layout dir ($layoutDirs) + survivors + " +
-        s"marker, got ${parquetCount(tight)}")
+    assert(parquetCount(tight) == layoutDirs + 1,
+      s"expected one file per layout dir ($layoutDirs) + survivors, " +
+        s"got ${parquetCount(tight)}")
     assert(parquetCount(plain) > parquetCount(tight))
     // (c) vacuum really reclaimed history: only the compacted version
     // remains, and a reader pinned to a vacuumed version fails loudly

@@ -156,7 +156,7 @@ class StreamingSemDeDupSpec extends SparkSpec {
       p.getFileName.toString.startsWith("cid=")))
     finally cidDirs.close()
     // replay across the compaction boundary short-circuits on the
-    // carried marker; a new near-dup arrival still drops
+    // sticky watermark; a new near-dup arrival still drops
     val vAfter = VersionedLake.versions(spark, tight).last
     assert(!StreamingSemDeDup.applyBatch(
       Seq((10L, vec(2, 3)), (70L, vec(3, 1))).toDF("vec_id", "embedding"),
@@ -176,10 +176,10 @@ class StreamingSemDeDupSpec extends SparkSpec {
       try it.filter(p => p.toString.endsWith(".parquet")).count().toInt
       finally it.close()
     }
-    // centroids 1 (carried) + applied 1 (carried) + survivors 1 +
-    // assignments ≤ one file per occupied cid partition
-    assert(parquetCount(tight) <= 3 + 4,
-      s"expected ≤7 compacted files, got ${parquetCount(tight)}")
+    // centroids 1 (carried) + survivors 1 + assignments ≤ one file per
+    // occupied cid partition (the watermark is a manifest field, no file)
+    assert(parquetCount(tight) <= 2 + 4,
+      s"expected ≤6 compacted files, got ${parquetCount(tight)}")
     assert(parquetCount(plain) > parquetCount(tight))
     val ex = intercept[IllegalArgumentException] {
       VersionedLake.readTable(spark, tight, "assignments", Some(1L))

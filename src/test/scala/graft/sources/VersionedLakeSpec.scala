@@ -385,9 +385,9 @@ class VersionedLakeSpec extends SparkSpec {
   test("manifest round-trips partition VALUES containing commas/brackets " +
     "(escapePathName leaves them raw) on both single tables and groups") {
     import org.apache.spark.sql.functions.col
-    // `,` and `]` survive Spark's partition-path escaping verbatim, so a
-    // split/regex manifest parser would shred these paths; the quote-aware
-    // tokenizer must not
+    // `,` survives Spark's partition-path escaping verbatim (`]` becomes
+    // %5D), so a split/regex manifest parser would shred these paths; the
+    // JSON codec must not
     val df = Seq(("a,b", 1), ("c]d", 2), ("plain", 3)).toDF("k", "v")
     val tbl = Files.createTempDirectory("vlake-comma").toString
     VersionedLake.commit(df, tbl, partitionBy = Seq("k"))
@@ -527,5 +527,162 @@ class VersionedLakeSpec extends SparkSpec {
     assert(ids.distinct.size == 1, ids)
     assert(VersionedLake.readTable(spark, root, "t").collect()
       .map(_.getLong(0)).sorted.toSeq == (0L until 5L))
+  }
+
+  test("manifest codec: partition values with `,` `]` `\"` `\\` and " +
+    "non-ASCII text round-trip through commit and GroupCommit") {
+    val values = Seq("a,b", "c]d", "e\"f", "g\\h", "café 日本", "plain")
+    val df = values.zipWithIndex.map { case (k, i) => (k, i) }.toDF("k", "v")
+    def rows(d: org.apache.spark.sql.DataFrame) = d
+      .collect().map(r => (r.getAs[String]("k"), r.getAs[Int]("v"))).sorted.toSeq
+    val want = rows(df)
+    val tbl = Files.createTempDirectory("vlake-codec").toString
+    VersionedLake.commit(df, tbl, partitionBy = Seq("k"))
+    VersionedLake.commit(df.limit(0), tbl, mode = "append",
+      partitionBy = Seq("k")) // the append re-parses v1's manifest
+    val single = VersionedLake.read(spark, tbl)
+    assert(single.columns.toSeq.sorted == Seq("k", "v"))
+    assert(rows(single) == want)
+    val root = Files.createTempDirectory("vlakeg-codec").toString
+    val gc = VersionedLake.beginGroupCommit(spark, root)
+    gc.write("t", df, partitionBy = Seq("k"))
+    gc.publish()
+    val gc2 = VersionedLake.beginGroupCommit(spark, root)
+    gc2.carry("t") // carry re-parses v1's group manifest
+    gc2.publish()
+    val group = VersionedLake.readTable(spark, root, "t")
+    assert(group.columns.toSeq.sorted == Seq("k", "v"))
+    assert(rows(group) == want)
+    assert(VersionedLake.groupTableRelFiles(spark, root, Some(2L)) ==
+      VersionedLake.groupTableRelFiles(spark, root, Some(1L)))
+  }
+
+  test("manifest codec reads manifests in the exact bytes the hand-rolled " +
+    "writer produced, for both shapes") {
+    import org.apache.hadoop.fs.Path
+    // That writer escaped only `\` and `"` and wrote everything else raw,
+    // UTF-8 included. Spark %-escapes `]`, `"` and `\` in partition
+    // directories, so its real output looks like `spark`; `odd` is a raw
+    // `k=a,b]"q\z` directory, reachable only through a foreign writer,
+    // that pins the two JSON escapes.
+    val spark3 = Seq("k=a,b", "k=c%5Dd", "k=café 日本")
+    val oddJson = "k=a,b]\\\"q\\\\z"
+    val oddRaw = "k=a,b]\"q\\z"
+    val single = spark3.zipWithIndex.map { case (d, i) =>
+      s"\"_data/v1/$d/part-0000$i-1.parquet\"" }
+      .mkString("{\"version\":1,\"files\":[", ",", "]}")
+    val group = "{\"version\":1,\"tables\":{" +
+      s"\"t\":[\"t/_data/v1/$oddJson/part-00000-1.parquet\"]," +
+      "\"u.x\":[\"u.x/_data/v1/k=café 日本/part-00000-3.parquet\"," +
+      "\"u.x/_data/v1/k=a,b/part-00001-3.parquet\"]}}"
+    val tbl = Files.createTempDirectory("vlake-legacy").toString
+    val root = Files.createTempDirectory("vlakeg-legacy").toString
+    val fs = new Path(tbl).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // one real parquet file copied to every path, so reads work
+    val src = Files.createTempDirectory("vlake-legacy-src").toString + "/d"
+    Seq(7).toDF("v").coalesce(1).write.parquet(src)
+    val part = fs.listStatus(new Path(src)).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get
+    def place(base: String, rel: String): Unit = {
+      val dst = new Path(base, rel)
+      fs.mkdirs(dst.getParent)
+      Files.copy(java.nio.file.Paths.get(part.toUri.getPath),
+        java.nio.file.Paths.get(dst.toUri.getPath)); ()
+    }
+    spark3.zipWithIndex.foreach { case (d, i) =>
+      place(tbl, s"_data/v1/$d/part-0000$i-1.parquet") }
+    val unlisted = s"t/_data/v1/$oddRaw/part-00009-9.parquet"
+    Seq(s"t/_data/v1/$oddRaw/part-00000-1.parquet", unlisted,
+      "u.x/_data/v1/k=café 日本/part-00000-3.parquet",
+      "u.x/_data/v1/k=a,b/part-00001-3.parquet").foreach(place(root, _))
+    for ((base, json) <- Seq(tbl -> single, root -> group)) {
+      fs.mkdirs(new Path(base, "_manifests"))
+      Files.write(java.nio.file.Paths.get(base, "_manifests", "v1.json"),
+        json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      fs.create(new Path(base, "_manifests/v1.claim")).close()
+    }
+    def kv(d: org.apache.spark.sql.DataFrame) = d.collect()
+      .map(r => (r.getAs[String]("k"), r.getAs[Int]("v"))).sorted.toSeq
+    assert(kv(VersionedLake.read(spark, tbl, schemaDDL = "v INT, k STRING")) ==
+      Seq(("a,b", 7), ("c]d", 7), ("café 日本", 7)))
+    // a new commit chains from the legacy manifest without losing files
+    VersionedLake.commit(Seq(8).toDF("v"), tbl, mode = "append")
+    assert(VersionedLake.read(spark, tbl).count() == 4)
+    assert(VersionedLake.groupTableRelFiles(spark, root, Some(1L)) == Map(
+      "t" -> Seq(s"t/_data/v1/$oddRaw/part-00000-1.parquet"),
+      "u.x" -> Seq("u.x/_data/v1/k=café 日本/part-00000-3.parquet",
+        "u.x/_data/v1/k=a,b/part-00001-3.parquet")))
+    assert(VersionedLake.lastApplied(spark, root, 1L).isEmpty)
+    assert(kv(VersionedLake.readTable(spark, root, "u.x",
+      schemaDDL = "v INT, k STRING")) == Seq(("a,b", 7), ("café 日本", 7)))
+    // the vacuum's live set is exactly the parsed list: the listed odd
+    // file stays, its unlisted sibling goes
+    assert(VersionedLake.vacuumGroup(spark, root, keepFrom = 1L) == 1)
+    assert(!fs.exists(new Path(root, unlisted)))
+    assert(fs.exists(new Path(root, s"t/_data/v1/$oddRaw/part-00000-1.parquet")))
+  }
+
+  test("markApplied: the watermark publishes with the group and is sticky " +
+    "across commits that do not mark, vacuum included") {
+    val root = Files.createTempDirectory("vlakeg-applied").toString
+    VersionedLake.commitAll(Seq("t" -> Seq(1L).toDF("x")), root)
+    assert(VersionedLake.lastApplied(spark, root, 1L).isEmpty)
+    val gc = VersionedLake.beginGroupCommit(spark, root)
+    gc.write("t", Seq(2L).toDF("x"), mode = "append")
+    gc.markApplied(5L)
+    assert(gc.publish() == 2L)
+    assert(VersionedLake.lastApplied(spark, root, 2L) == Some(5L))
+    // carry-only and overwrite commits keep it without naming it
+    val gc2 = VersionedLake.beginGroupCommit(spark, root)
+    gc2.carry("t")
+    gc2.publish()
+    VersionedLake.commitAll(Seq("u" -> Seq(3L).toDF("x")), root)
+    assert(VersionedLake.lastApplied(spark, root, 4L) == Some(5L))
+    // the watermark survives the vacuum of every version that set it
+    VersionedLake.vacuumGroup(spark, root, keepFrom = 4L)
+    assert(VersionedLake.lastApplied(spark, root, 4L) == Some(5L))
+  }
+
+  test("staging writes run under the submitter's Spark job group, not " +
+    "the one a pool thread inherited when it was created") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        groups.add(String.valueOf(e.properties.getProperty(
+          "spark.jobGroup.id"))); ()
+      }
+    }
+    // more members than the staging pool has threads: every pool thread
+    // exists by the time group B submits
+    val members = (0 until 10).map(i => s"t$i")
+    val root = Files.createTempDirectory("vlakeg-jobgroup").toString
+    def stageUnder(group: String): Unit = {
+      sc.setJobGroup(group, s"staging under $group")
+      try {
+        val gc = VersionedLake.beginGroupCommit(spark, root)
+        gc.writeAll(members.map(t => (t, Seq(1L).toDF("x"), "overwrite",
+          Seq.empty[String])))
+        gc.publish(); ()
+      } finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      stageUnder("A")
+      stageUnder("B")
+      eventually(timeout(30.seconds)) {
+        assert(groups.size >= 2 * members.size)
+      }
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val seen = groups.asScala.toSeq
+    assert(seen.forall(Set("A", "B")), seen)
+    assert(seen.count(_ == "A") >= members.size, seen)
+    assert(seen.count(_ == "B") >= members.size, seen)
+    // and the pool threads did not keep the last submitter's group
+    assert(sc.getLocalProperty("spark.jobGroup.id") == null)
   }
 }
