@@ -2542,23 +2542,16 @@ object Queries {
         .digest(stamp.getBytes("UTF-8")).map("%02x".format(_)).mkString
       val root = System.getProperty("java.io.tmpdir") + s"/graft_q111_$key"
       import graft.sources.VersionedLake
-      if (VersionedLake.versions(s, root).isEmpty) {
-        // one group commit spans both tables: assignments derive from the
-        // STAGED centroids, and the single publish means no reader can see
-        // new centroids beside stale assignments (or vice versa)
-        val hist = emb.filter(col("vec_id") % 5 =!= 0)
-        val gc = VersionedLake.beginGroupCommit(s, root)
-        gc.write("centroids",
-          Cluster.fitCentroids(hist, "vec_id", "embedding", k = 4, iters = 3))
-        // partitioned by cluster id: incrementalSemDeDupStored filters the
-        // read to the batch's ≤ k cids, so this layout turns the per-batch
-        // corpus I/O into partition-pruned directory reads
-        gc.write("assignments",
-          Cluster.assignStored(hist, "vec_id", "embedding",
-            gc.readStaged("centroids")),
-          partitionBy = Seq("cid"))
-        gc.publish()
-      }
+      // one group commit spans both tables (the streaming flow's setup):
+      // assignments derive from the STAGED centroids, and the single
+      // publish means no reader can see new centroids beside stale
+      // assignments (or vice versa). Partitioned by cluster id:
+      // incrementalSemDeDupStored filters the read to the batch's ≤ k
+      // cids, so the per-batch corpus I/O is partition-pruned dir reads
+      if (VersionedLake.versions(s, root).isEmpty)
+        graft.flows.StreamingSemDeDup.setup(
+          emb.filter(col("vec_id") % 5 =!= 0), "vec_id", "embedding", root,
+          k = 4, iters = 3)
       // one version resolve for both reads (group consistency by
       // construction). Explicit schema: partition-column type inference
       // would read cid back as INT (values 0..k-1), and the long-vs-int

@@ -126,38 +126,47 @@ object AnnIndex {
     * watermark makes crash-replayed batches no-ops. Pending tombstones are
     * carried (retirements survive every append).
     *
-    * RACE-DETECTED like every other writer here (`publishIfBaseIs` with
-    * a bounded retry): the carry list and model reads resolve at the
-    * commit's own base version, and the publish aborts if any commit
-    * lands (or holds an unexpired lower claim) inside the
-    * claim→publish window. Without the detection, an append racing a
-    * [[delete]] could publish a carry list read BEFORE the delete
-    * landed — re-listing the pre-delete tombstone state (or omitting
-    * the table entirely on a first delete) and silently dropping a
-    * retirement the delete reported as committed. A retry re-encodes
+    * Commits through the lake's one race-detected loop
+    * ([[VersionedLake.commitLoop]], up to `maxAttempts` tries): the carry
+    * list and model reads resolve at the commit's own base version, and
+    * the publish aborts if any commit lands (or holds an unexpired lower
+    * claim) inside the claim→publish window. Without the detection, an
+    * append racing a [[delete]] could publish a carry list read BEFORE
+    * the delete landed — re-listing the pre-delete tombstone state (or
+    * omitting the table entirely on a first delete) and silently dropping
+    * a retirement the delete reported as committed. A retry re-encodes
     * the batch (map-only, O(batch)); races are per-commit-window rare.
     */
   def append(batch: DataFrame, idCol: String, vecCol: String, root: String,
       scale: Int = Cluster.QuantScale, maxAttempts: Int = 5,
       raceWindow: () => Unit = () => ()): Long = {
-    val spark = batch.sparkSession
-    latestVersion(spark, root) // branded require before claiming a number
-    val src = normalized(batch, idCol, vecCol)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val gc = VersionedLake.beginGroupCommit(spark, root)
-      VersionedLake.runOrAbort(gc) {
-        // every read + carry resolves at the commit's OWN base (group
-        // consistency; a separately-read "latest" can trail the claim)
+    latestVersion(batch.sparkSession, root) // branded require before claiming
+    commitAppend(normalized(batch, idCol, vecCol), idCol, vecCol, root,
+      scale, maxAttempts, raceWindow, "AnnIndex.append", batchId = None).get
+  }
+
+  /** The append body both arrival paths share ([[append]] and
+    * [[StreamingAnnIndex.applyBatch]]): encode `src` against the model at
+    * the commit's own base, append codes + quantized vectors, carry every
+    * other table, and publish race-detected through the commit loop.
+    * `batchId` is the stream watermark to mark; a batch at or below the
+    * base's watermark is a replay — its claim is released and the result
+    * is None. Otherwise returns the committed version.
+    */
+  private[flows] def commitAppend(src: DataFrame, idCol: String,
+      vecCol: String, root: String, scale: Int, maxAttempts: Int,
+      raceWindow: () => Unit, writer: String,
+      batchId: Option[Long]): Option[Long] = {
+    val spark = src.sparkSession
+    VersionedLake.commitLoop(spark, root, writer, maxAttempts) { gc =>
+      if (batchId.exists(b => gc.appliedAtBase.exists(b <= _))) {
+        gc.abort(); Some(None)
+      } else {
         val v = gc.basedOn.get
         val coarse = VersionedLake.readTable(spark, root, "coarse", Some(v))
         val books = VersionedLake.readTable(spark, root, "codebooks", Some(v))
-        // carry EVERYTHING this commit does not write (model tables,
-        // pending tombstones, any future member): a group manifest lists
-        // only staged tables, and a per-table carry list would let the
-        // next optional table silently vanish from append commits
-        VersionedLake.groupTableRelFiles(spark, root, Some(v)).keys
-          .filterNot(Set("encoded", "quant")).toSeq.sorted.foreach(gc.carry)
+        // model tables, pending tombstones and any future member
+        gc.carryAllExcept(Set("encoded", "quant"))
         gc.writeAll(Seq(
           ("encoded",
             Similarity.ivfPqEncode(src, idCol, vecCol, coarse, books, scale),
@@ -165,27 +174,12 @@ object AnnIndex {
           ("quant", src.select(col(idCol),
             Cluster.quantizeFloor(col(vecCol), scale).as("q")),
             "append", Nil)))
+        batchId.foreach(gc.markApplied)
         raceWindow()
-        gc.publishIfBaseIs(v)
-      } match {
-        case Some(nv) => return nv
-        case None => attempt += 1; retryBackoff(attempt)
+        gc.publishIfBaseIs(v).map(Some(_))
       }
     }
-    throw new IllegalStateException(
-      s"AnnIndex.append at $root lost the commit race $maxAttempts times " +
-        "(concurrent retirement/maintenance running hot? retry)")
   }
-
-  /** Linear backoff between commit-race retries: the usual loser is a
-    * writer whose publish window overlapped an in-flight LOWER claim
-    * (lowest claim wins — see `publishIfBaseIs`); that winner publishes
-    * within milliseconds of its own window closing, so a short wait
-    * converts a burned attempt into a clean rebase instead of spinning
-    * the bounded retry budget against a still-open window.
-    */
-  private[flows] def retryBackoff(attempt: Int): Unit =
-    Thread.sleep(math.min(500L, 50L * attempt))
 
   private val Tombstones = "tombstones"
 
@@ -219,13 +213,12 @@ object AnnIndex {
     * ids from that version on; the physical codes remain until
     * [[foldTombstones]]. Deletes compose with [[StreamingAnnIndex]]
     * ingest from BOTH sides: [[StreamingAnnIndex.applyBatch]] carries
-    * the tombstone table on every batch, and this commit publishes
-    * race-DETECTED (`publishIfBaseIs` — the carry list was read at the
-    * base version, so publishing past an interleaved batch commit would
-    * silently drop that batch's appended files) with a bounded retry
-    * from the new latest version; retirement batches are metadata-cheap,
-    * so retrying is cheaper than a claim-ordering protocol. Returns the
-    * committed version.
+    * the tombstone table on every batch, and this commit goes through
+    * the same race-detected loop as [[append]] (the carry list is read at
+    * the base version, so publishing past an interleaved batch commit
+    * would silently drop that batch's appended files); retirement batches
+    * are metadata-cheap, so retrying is cheaper than a claim-ordering
+    * protocol. Returns the committed version.
     */
   def delete(ids: DataFrame, idCol: String, root: String,
       maxAttempts: Int = 5,
@@ -233,27 +226,13 @@ object AnnIndex {
     val spark = ids.sparkSession
     latestVersion(spark, root) // branded require before claiming a number
     val retired = ids.select(col(idCol).cast("long").as(idCol)).distinct()
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val gc = VersionedLake.beginGroupCommit(spark, root)
-      VersionedLake.runOrAbort(gc) {
-        // the carry set derives from the commit's OWN base version — a
-        // separately-read latest can trail the claim (a fold landing in
-        // the gap) and make carry() throw instead of retrying
-        val v = gc.basedOn.get
-        VersionedLake.groupTableRelFiles(spark, root, Some(v))
-          .keys.filterNot(_ == Tombstones).toSeq.sorted.foreach(gc.carry)
-        gc.write(Tombstones, retired, mode = "append")
-        raceWindow()
-        gc.publishIfBaseIs(v)
-      } match {
-        case Some(nv) => return nv
-        case None => attempt += 1; retryBackoff(attempt)
-      }
+    VersionedLake.commitLoop(spark, root, "AnnIndex.delete",
+        maxAttempts) { gc =>
+      gc.carryAllExcept(Set(Tombstones))
+      gc.write(Tombstones, retired, mode = "append")
+      raceWindow()
+      gc.publishIfBaseIs(gc.basedOn.get)
     }
-    throw new IllegalStateException(
-      s"AnnIndex.delete at $root lost the commit race $maxAttempts times " +
-        "(concurrent ingest running hot? retry, or retire via a quieter window)")
   }
 
   /** Fold pending retirements into the data: rewrite `encoded` and
@@ -290,14 +269,12 @@ object AnnIndex {
           gc.abort()
           VersionedLake.versions(spark, root).last
         case Some(tomb) =>
-          val rel = VersionedLake.groupTableRelFiles(spark, root, Some(v))
           val encoded = VersionedLake.readTable(spark, root, "encoded",
             Some(v),
             schemaDDL = s"$idCol BIGINT, codes ARRAY<BIGINT>, cell BIGINT")
           val quant = VersionedLake.readTable(spark, root, "quant", Some(v),
             schemaDDL = s"$idCol BIGINT, q ARRAY<BIGINT>")
-          rel.keys.filterNot(Set("encoded", "quant", Tombstones)).toSeq
-            .sorted.foreach(gc.carry)
+          gc.carryAllExcept(Set("encoded", "quant", Tombstones))
           gc.writeAll(Seq(
             ("encoded", minusTombstones(encoded, Some(tomb), idCol),
               "overwrite", Seq("cell")),

@@ -1,8 +1,7 @@
 package graft.flows
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.{Cluster, Similarity}
 import graft.sources.VersionedLake
@@ -19,10 +18,13 @@ import graft.sources.VersionedLake
   * Exactly-once: each micro-batch commits `encoded` (append,
   * cell-partitioned) and `quant` (append) and CARRIES `coarse`/`codebooks`
   * as ONE [[VersionedLake]] group version whose manifest records the
-  * batch id as its `applied` watermark. A batch replayed after a crash
-  * (committed but not yet checkpointed) short-circuits on the watermark;
-  * without it a replay would append the same codes TWICE and a later
-  * search could return duplicate ids inside its top-n.
+  * batch id as its `applied` watermark, through the lake's one
+  * race-detected commit loop ([[VersionedLake.commitLoop]]). Each attempt
+  * reads the watermark from the base it chains from
+  * ([[VersionedLake.GroupCommit.appliedAtBase]]); a batch replayed after
+  * a crash (committed but not yet checkpointed) releases its claim and
+  * publishes nothing — without that a replay would append the same codes
+  * TWICE and a later search could return duplicate ids inside its top-n.
   * [[AnnIndex.append]] sets no watermark by design — it is the
   * driver-invoked batch API; this flow is what a checkpointed stream
   * must use.
@@ -47,32 +49,15 @@ import graft.sources.VersionedLake
 object StreamingAnnIndex {
 
   /** Fit the coarse + PQ model on the initial corpus and commit model +
-    * codes + quantized vectors as group version 1 (no watermark yet: no
-    * batch has applied). Must run once before the stream starts; the
-    * stream never refits.
+    * codes + quantized vectors as group version 1 ([[AnnIndex.build]]; no
+    * watermark yet: no batch has applied). Must run once before the
+    * stream starts; the stream never refits.
     */
   def setup(corpus: DataFrame, idCol: String, vecCol: String, root: String,
       dims: Int, coarseK: Int, coarseIters: Int, m: Int, k: Int,
       iters: Int, scale: Int = Cluster.QuantScale): Unit = {
-    val spark = corpus.sparkSession
-    require(VersionedLake.versions(spark, root).isEmpty,
-      s"streaming ANN state already exists at $root")
-    // widen the id at the write boundary (AnnIndex.normalized): readers
-    // pin BIGINT, and an INT-id ingest would die only at first search
-    val src = AnnIndex.normalized(corpus, idCol, vecCol)
-    val (coarse, books, encoded) = Similarity.ivfPqIndex(src, idCol,
-      vecCol, dims, coarseK, coarseIters, m, k, iters, scale)
-    val gc = VersionedLake.beginGroupCommit(spark, root)
-    // all four data tables are independent frames (coarse/books are
-    // bounded literal frames, encoded is materialized, quant is a map
-    // over the corpus) — stage them concurrently
-    gc.writeAll(Seq(
-      ("coarse", coarse, "overwrite", Nil),
-      ("codebooks", books, "overwrite", Nil),
-      ("encoded", encoded, "overwrite", Seq("cell")),
-      ("quant", src.select(col(idCol),
-        Cluster.quantizeFloor(col(vecCol), scale).as("q")), "overwrite", Nil)))
-    gc.publish()
+    AnnIndex.build(corpus, idCol, vecCol, root, dims, coarseK, coarseIters,
+      m, k, iters, scale)
     ()
   }
 
@@ -91,24 +76,18 @@ object StreamingAnnIndex {
       scale: Int = Cluster.QuantScale, retainEvery: Int = 0,
       retainTargetBytes: Long = 64L * 1024 * 1024,
       retainKeepVersions: Int = 2): DataStreamWriter[Row] =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val applied = applyBatch(batch, batchId, idCol, vecCol, root, scale)
-        if (applied && retainEvery > 0 && (batchId + 1) % retainEvery == 0)
-          compactState(batch.sparkSession, root, retainTargetBytes,
-            retainKeepVersions)
-        ()
-      }
+    StreamingRetention.writer(vecs, checkpoint, retainEvery,
+      applyBatch(_, _, idCol, vecCol, root, scale),
+      compactState(_, root, retainTargetBytes, retainKeepVersions))
 
   /** One micro-batch: idempotence check → stored-model read → map-only
     * encode → atomic group commit. Public for spec-level direct driving;
     * the streaming writer is a thin shell over this. Returns true iff
     * the batch applied (false = replay short-circuit).
     *
-    * RACE-DETECTED like [[AnnIndex.append]] (`publishIfBaseIs`, bounded
-    * retry): a mid-stream [[AnnIndex.delete]] landing inside the batch's
+    * Commits through the lake's one race-detected loop
+    * ([[VersionedLake.commitLoop]], up to `maxAttempts` tries): a
+    * mid-stream [[AnnIndex.delete]] landing inside the batch's
     * claim→publish window would otherwise be superseded by a carry list
     * read before it — silently un-retiring documents. The watermark
     * check re-runs per attempt at the retried base (the raced commit can
@@ -125,8 +104,8 @@ object StreamingAnnIndex {
     // KB-scale frame replaces two batch scans and their per-action
     // re-planning (same rationale as StreamingDedup.applyBatch)
     val src = AnnIndex.normalized(batch, idCol, vecCol).localCheckpoint()
-    try applyBatchLoop(src, batchId, idCol, vecCol, root, scale,
-      maxAttempts, raceWindow)
+    try AnnIndex.commitAppend(src, idCol, vecCol, root, scale, maxAttempts,
+      raceWindow, "StreamingAnnIndex.applyBatch", Some(batchId)).isDefined
     finally {
       // release the checkpoint blocks (ADVICE r17: they otherwise linger
       // until the ContextCleaner GCs the RDD — slow accumulation on long
@@ -135,72 +114,16 @@ object StreamingAnnIndex {
     }
   }
 
-  private def applyBatchLoop(src: DataFrame, batchId: Long, idCol: String,
-      vecCol: String, root: String, scale: Int, maxAttempts: Int,
-      raceWindow: () => Unit): Boolean = {
-    val spark = src.sparkSession
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val gc = VersionedLake.beginGroupCommit(spark, root)
-      // Some(applied?) = this attempt resolved; None = raced, retry
-      val outcome: Option[Boolean] = VersionedLake.runOrAbort(gc) {
-        // one version — the commit's own base — for EVERY read in the
-        // batch, watermark included (group consistency)
-        val v = gc.basedOn.get
-        // replay short-circuit: the watermark committed ATOMICALLY with
-        // the data, so "applied says done" ⟺ "this batch's codes are
-        // visible"
-        val lastApplied = VersionedLake.lastApplied(spark, root, v)
-          .getOrElse(-1L)
-        if (batchId <= lastApplied) { gc.abort(); Some(false) }
-        else {
-          val coarse = VersionedLake.readTable(spark, root, "coarse",
-            Some(v))
-          val books = VersionedLake.readTable(spark, root, "codebooks",
-            Some(v))
-          // carry EVERYTHING this commit does not write — model tables
-          // AND a mid-stream retirement's tombstones
-          // ([[AnnIndex.delete]]): a group manifest lists only staged
-          // tables, so a hardcoded carry list would let the next
-          // optional member silently vanish from batch commits
-          VersionedLake.groupTableRelFiles(spark, root, Some(v)).keys
-            .filterNot(Set("encoded", "quant")).toSeq.sorted
-            .foreach(gc.carry)
-          gc.writeAll(Seq(
-            ("encoded",
-              Similarity.ivfPqEncode(src, idCol, vecCol, coarse, books,
-                scale), "append", Seq("cell")),
-            ("quant", src.select(col(idCol),
-              Cluster.quantizeFloor(col(vecCol), scale).as("q")),
-              "append", Nil)))
-          gc.markApplied(batchId)
-          raceWindow()
-          gc.publishIfBaseIs(v).map(_ => true)
-        }
-      }
-      outcome match {
-        case Some(applied) => return applied
-        case None => attempt += 1; AnnIndex.retryBackoff(attempt)
-      }
-    }
-    throw new IllegalStateException(
-      s"StreamingAnnIndex.applyBatch at $root lost the commit race " +
-        s"$maxAttempts times (concurrent retirement running hot? retry)")
-  }
-
-  /** Retention pass ([[StreamingRetention.compactState]]): incremental
-    * per-directory tiering over `encoded` (the `cell=` layout the nprobe
-    * pruning depends on is preserved; quiet cells carried verbatim) and
-    * `quant`; `coarse`/`codebooks` carried wholesale; the sticky
-    * `applied` watermark rides along; horizon vacuum; race-detected
-    * publish. State is row-identical across the
-    * pass, so searches and checkpoint resumes are unaffected.
+  /** Retention pass — [[AnnIndex.maintain]] (the layout is the same):
+    * incremental per-directory tiering over `encoded` (the `cell=` layout
+    * the nprobe pruning depends on is preserved; quiet cells carried
+    * verbatim) and `quant`; `coarse`/`codebooks` carried wholesale; the
+    * sticky `applied` watermark rides along; horizon vacuum; race-detected
+    * publish. State is row-identical across the pass, so searches and
+    * checkpoint resumes are unaffected.
     */
   def compactState(spark: SparkSession, root: String,
       targetBytes: Long = 64L * 1024 * 1024,
       keepVersions: Int = 2): Long =
-    StreamingRetention.compactState(spark, root, targetBytes,
-      carryTables = Set("coarse", "codebooks"),
-      partitioned = Map("encoded" -> Seq("cell")),
-      keepVersions = keepVersions)
+    AnnIndex.maintain(spark, root, targetBytes, keepVersions)
 }

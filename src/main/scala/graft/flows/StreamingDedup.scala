@@ -2,7 +2,7 @@ package graft.flows
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.Dedup
 import graft.sources.VersionedLake
@@ -26,10 +26,13 @@ import graft.sources.VersionedLake
   * Exactly-once: each micro-batch commits `hashed`/`banded` (append) and
   * `survivors` (append) as ONE [[VersionedLake]] group version whose
   * manifest carries the batch id as its `applied` watermark — atomically
-  * visible or not at all. A batch replayed after a crash (committed but
-  * not yet checkpointed) short-circuits on the watermark, so a kill at
-  * ANY point between micro-batches re-lands the identical final state
-  * (q116b runs the kill-and-resume proof against the same oracle).
+  * visible or not at all. Each batch claims its version first and reads
+  * the watermark from the base it chains from
+  * ([[VersionedLake.GroupCommit.appliedAtBase]]); a batch replayed after
+  * a crash (committed but not yet checkpointed) releases the claim and
+  * publishes nothing, so a kill at ANY point between micro-batches
+  * re-lands the identical final state (q116b runs the kill-and-resume
+  * proof against the same oracle).
   *
   * Scale shape per batch: one shingle+signature pass over the BATCH
   * (never the corpus), one bucket equi-join of the batch's band rows
@@ -83,77 +86,41 @@ object StreamingDedup {
       bands: Int = 4, retainEvery: Int = 0,
       retainTargetBytes: Long = 64L * 1024 * 1024,
       retainKeepVersions: Int = 2): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val applied = applyBatch(batch, batchId, idCol, textCol, root,
-          jaccardThreshold, shingleN, numHashes, bands)
-        if (applied && retainEvery > 0 && (batchId + 1) % retainEvery == 0)
-          compactState(batch.sparkSession, root, retainTargetBytes,
-            retainKeepVersions)
-        ()
-      }
+    StreamingRetention.writer(docs, checkpoint, retainEvery,
+      applyBatch(_, _, idCol, textCol, root, jaccardThreshold, shingleN,
+        numHashes, bands),
+      compactState(_, root, retainTargetBytes, retainKeepVersions))
 
-  /** One micro-batch: idempotence check → index read → LSH pairs →
+  /** One micro-batch ([[StreamingRetention.applyOnce]]: claim →
+    * idempotence check at the claimed base) → index read → LSH pairs →
     * survivors → atomic group commit. Public for spec-level direct
     * driving; the streaming writer is a thin shell over this. Returns
-    * true iff the batch applied (false = replay short-circuit).
+    * true iff the batch applied (false = replay short-circuit: the claim
+    * is released and nothing publishes).
     */
   def applyBatch(batch: DataFrame, batchId: Long, idCol: String,
       textCol: String, root: String, jaccardThreshold: Double,
       shingleN: Int, numHashes: Int, bands: Int): Boolean = {
     val spark = batch.sparkSession
-    // resolve the version ONCE and pin every read in the batch to it:
-    // group consistency even if another committer raced us (the flow is
-    // single-writer by contract, but the reads shouldn't rely on that)
-    val v = VersionedLake.versions(spark, root).lastOption
-    // replay short-circuit: the watermark committed ATOMICALLY with the
-    // data (same manifest), so "applied says done" ⟺ "this batch's rows
-    // are fully visible". One manifest read — no Spark job
-    val lastApplied = v.flatMap(VersionedLake.lastApplied(spark, root, _))
-      .getOrElse(-1L)
-    if (batchId <= lastApplied) return false
-    val docs = batch.select(col(idCol).cast("long").as("__doc_id"),
-      col(textCol).as("__text"))
-    // eager localCheckpoint (not lazy persist): the batch's index frames
-    // feed FOUR downstream plans per commit (pairs→survivors + the two
-    // layout writes); with a lazy persist each of those re-analyzes the
-    // full shingle pipeline — measured as a ~0.6 s driver gap before
-    // every group commit's write jobs (JobProfile q116, r17). Truncated
-    // lineage makes each downstream plan a 1-node scan of the KB-scale
-    // batch frames; the exactly-once watermark keeps a replayed batch safe
-    // if a checkpoint block is ever lost.
-    val (nh, nb) = Dedup.minHashIndexPortable(docs, "__doc_id", "__text",
-      shingleN, numHashes, bands,
-      stabilize = Some(_.localCheckpoint()))
-    try {
-      val gc = VersionedLake.beginGroupCommit(spark, root)
-      VersionedLake.runOrAbort(gc) {
-        // explicit schemas: partition-column inference would read the ph/pb
-        // dir values back as INT and the pruning filters' BIGINT literals
-        // would cast the partition attribute, defeating PartitionFilters.
-        // Path choice is the MEASURED state-size dial
-        // ([[Dedup.pruneStoredReads]]): the pruned reads win once the
-        // stored tables clear ~1 GiB; below that the full-scan join's two
-        // passes cost less than the pruned path's fixed per-batch toll.
-        val pairs = v match {
-          case None =>
-            Dedup.minHashIncrementalPairsFromIndexes(
-              nh.limit(0), nb.limit(0), nh, nb)
-          case Some(vv) =>
-            val sh = VersionedLake.readTable(spark, root, "hashed", Some(vv),
-              schemaDDL = "id BIGINT, hs ARRAY<BIGINT>, " +
-                s"${Dedup.IdLayoutCol} BIGINT")
-            val sb = VersionedLake.readTable(spark, root, "banded", Some(vv),
-              schemaDDL = "id BIGINT, band INT, bucket BIGINT, " +
-                s"${Dedup.BandLayoutCol} BIGINT")
-            if (Dedup.pruneStoredReads(sh, sb))
-              Dedup.minHashIncrementalPairsPruned(sh, sb, nh, nb)
-            else
-              Dedup.minHashIncrementalPairsFromIndexes(sh, sb, nh, nb)
-        }
-        val dropped = pairs
+    StreamingRetention.applyOnce(spark, root, batchId) { gc =>
+      val docs = batch.select(col(idCol).cast("long").as("__doc_id"),
+        col(textCol).as("__text"))
+      // eager localCheckpoint (not lazy persist): the batch's index
+      // frames feed FOUR downstream plans per commit (pairs→survivors +
+      // the two layout writes); with a lazy persist each of those
+      // re-analyzes the full shingle pipeline — measured as a ~0.6 s
+      // driver gap before every group commit's write jobs (JobProfile
+      // q116, r17). Truncated lineage makes each downstream plan a
+      // 1-node scan of the KB-scale batch frames; the exactly-once
+      // watermark keeps a replayed batch safe if a checkpoint block is
+      // ever lost.
+      val (nh, nb) = Dedup.minHashIndexPortable(docs, "__doc_id",
+        "__text", shingleN, numHashes, bands,
+        stabilize = Some(_.localCheckpoint()))
+      try {
+        // every stored read pinned to the commit's own base
+        val dropped = Dedup.storedIncrementalPairs(spark, root,
+            gc.basedOn, nh, nb)
           .filter(col("jaccard") >= jaccardThreshold)
           .select(col("id_b")).distinct()
         val survivors = docs.select(col("__doc_id"))
@@ -168,11 +135,8 @@ object StreamingDedup {
           ("banded", Dedup.layoutBanded(nb), "append",
             Seq(Dedup.BandLayoutCol)),
           ("survivors", survivors, "append", Nil)))
-        gc.markApplied(batchId)
-        gc.publish()
-      }
-      true
-    } finally { nh.unpersist(); nb.unpersist(); () }
+      } finally { nh.unpersist(); nb.unpersist(); () }
+    }
   }
 
   /** Retention pass ([[StreamingRetention.compactState]]): group-commit

@@ -1,8 +1,9 @@
 package graft.flows
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, hash, lit, pmod, struct, when}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.sources.{LakeWriter, VersionedLake}
 
@@ -41,8 +42,8 @@ import graft.sources.{LakeWriter, VersionedLake}
   * pass's state read and its publish, the compaction aborts itself
   * (claim released, staged files swept) and retries on the next cadence,
   * so a racing commit is never silently overwritten. The flows still
-  * call it single-writer (from their own foreachBatch); the detection
-  * turns that convention into a checked invariant.
+  * call it single-writer (from the shared [[writer]] shell); the
+  * detection turns that convention into a checked invariant.
   */
 private[flows] object StreamingRetention {
 
@@ -102,6 +103,46 @@ private[flows] object StreamingRetention {
           acc.when(cond, pmod(rowHash, lit(buckets)))
         }
     }.otherwise(lit(0))
+  }
+
+  /** The streaming shell every exactly-once flow shares: an AvailableNow
+    * `foreachBatch` writer checkpointed at `checkpoint` that runs
+    * `applyBatch` per micro-batch and, when `retainEvery` > 0, `compact`
+    * after every N-th APPLIED batch (batch ids are sequential per
+    * checkpoint, so the cadence is deterministic; a replayed batch skips
+    * both).
+    */
+  def writer(input: DataFrame, checkpoint: String, retainEvery: Int,
+      applyBatch: (DataFrame, Long) => Boolean,
+      compact: SparkSession => Unit): DataStreamWriter[Row] =
+    input.writeStream
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (applyBatch(batch, batchId) && retainEvery > 0 &&
+            (batchId + 1) % retainEvery == 0)
+          compact(batch.sparkSession)
+      }
+
+  /** Apply micro-batch `batchId` to the group at `root` exactly once:
+    * claim the next version and read the watermark from the base it
+    * chains from. A replay (the base already holds the batch) releases the
+    * claim, publishes nothing and returns false; otherwise `body` stages
+    * the batch's tables and the commit publishes them with `batchId` as
+    * its watermark, in one atomic event (true).
+    */
+  def applyOnce(spark: SparkSession, root: String, batchId: Long)(
+      body: VersionedLake.GroupCommit => Unit): Boolean = {
+    val gc = VersionedLake.beginGroupCommit(spark, root)
+    VersionedLake.runOrAbort(gc) {
+      if (gc.appliedAtBase.exists(batchId <= _)) { gc.abort(); false }
+      else {
+        body(gc)
+        gc.markApplied(batchId)
+        gc.publish()
+        true
+      }
+    }
   }
 
   /** Compact + vacuum the group at `root`. Returns the latest version

@@ -2,7 +2,7 @@ package graft.flows
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.Cluster
 import graft.sources.VersionedLake
@@ -30,10 +30,12 @@ import graft.sources.VersionedLake
   * `survivors` (append) and CARRIES `centroids` forward as ONE
   * [[VersionedLake]] group version whose manifest records the batch id
   * as its `applied` watermark — the carry re-lists the fitted model's
-  * files in the new manifest for free, no data rewrite. A batch replayed
-  * after a crash (committed but not yet checkpointed) short-circuits on
-  * the watermark; without it a replay would find its OWN rows in
-  * `assignments` and drop the whole batch against itself.
+  * files in the new manifest for free, no data rewrite. Each batch claims
+  * its version first and reads the watermark from the base it chains
+  * from ([[VersionedLake.GroupCommit.appliedAtBase]]); a batch replayed
+  * after a crash (committed but not yet checkpointed) releases the claim
+  * and publishes nothing — without that a replay would find its OWN rows
+  * in `assignments` and drop the whole batch against itself.
   *
   * Scale shape per batch: one k-row centroid read, one map-only batch
   * assign (no shuffle — the q105 pin), one assignments read partition-
@@ -89,52 +91,39 @@ object StreamingSemDeDup {
       retainEvery: Int = 0,
       retainTargetBytes: Long = 64L * 1024 * 1024,
       retainKeepVersions: Int = 2): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val applied = applyBatch(batch, batchId, idCol, embCol, root, tau,
-          scale, maxClusterSize)
-        if (applied && retainEvery > 0 && (batchId + 1) % retainEvery == 0)
-          compactState(batch.sparkSession, root, retainTargetBytes,
-            retainKeepVersions)
-        ()
-      }
+    StreamingRetention.writer(docs, checkpoint, retainEvery,
+      applyBatch(_, _, idCol, embCol, root, tau, scale, maxClusterSize),
+      compactState(_, root, retainTargetBytes, retainKeepVersions))
 
-  /** One micro-batch: idempotence check → model + pruned-neighbor read →
-    * semantic drop rule → atomic group commit. Public for spec-level
-    * direct driving; the streaming writer is a thin shell over this.
-    * Returns true iff the batch applied (false = replay short-circuit).
+  /** One micro-batch ([[StreamingRetention.applyOnce]]: claim →
+    * idempotence check at the claimed base) → model + pruned-neighbor
+    * read → semantic drop rule → atomic group commit. Public for
+    * spec-level direct driving; the streaming writer is a thin shell over
+    * this. Returns true iff the batch applied (false = replay
+    * short-circuit: the claim is released and nothing publishes).
     */
   def applyBatch(batch: DataFrame, batchId: Long, idCol: String,
       embCol: String, root: String, tau: Double, scale: Int,
       maxClusterSize: Int): Boolean = {
     val spark = batch.sparkSession
-    // one version resolve for EVERY read in the batch, watermark included
-    // (group consistency)
-    val v = VersionedLake.versions(spark, root).last
-    // replay short-circuit: the watermark committed ATOMICALLY with the
-    // data, so "applied says done" ⟺ "this batch's assignment rows are
-    // visible" — and a replay past it would dedup the batch against itself
-    val lastApplied = VersionedLake.lastApplied(spark, root, v)
-      .getOrElse(-1L)
-    if (batchId <= lastApplied) return false
-    val centroids = VersionedLake.readTable(spark, root, "centroids", Some(v))
-    // explicit schema: partition-column inference would read cid back as
-    // INT and break the long contract downstream (same note as q111)
-    val assignments = VersionedLake.readTable(spark, root, "assignments",
-      Some(v),
-      schemaDDL = s"$idCol BIGINT, q ARRAY<BIGINT>, dist BIGINT, cid BIGINT")
-    // assign the batch ONCE (one quantize+argmin kernel pass, eagerly
-    // checkpointed): the same frame serves the survivor rule AND the
-    // assignments append — previously assignStored ran twice per batch
-    // (once inside incrementalSemDeDupStored, once for the write), and
-    // the write side re-planned the full kernel lineage per commit
-    val batchA = Cluster.assignStored(batch, idCol, embCol, centroids,
-      scale).localCheckpoint()
-    try {
-      val gc = VersionedLake.beginGroupCommit(spark, root)
-      VersionedLake.runOrAbort(gc) {
+    StreamingRetention.applyOnce(spark, root, batchId) { gc =>
+      // every read at the commit's own base (group consistency)
+      val v = gc.basedOn.get
+      val centroids = VersionedLake.readTable(spark, root, "centroids",
+        Some(v))
+      // explicit schema: partition-column inference would read cid back
+      // as INT and break the long contract downstream (same note as q111)
+      val assignments = VersionedLake.readTable(spark, root,
+        "assignments", Some(v), schemaDDL =
+          s"$idCol BIGINT, q ARRAY<BIGINT>, dist BIGINT, cid BIGINT")
+      // assign the batch ONCE (one quantize+argmin kernel pass, eagerly
+      // checkpointed): the same frame serves the survivor rule AND the
+      // assignments append — previously assignStored ran twice per batch
+      // (once inside incrementalSemDeDupStored, once for the write), and
+      // the write side re-planned the full kernel lineage per commit
+      val batchA = Cluster.assignStored(batch, idCol, embCol, centroids,
+        scale).localCheckpoint()
+      try {
         gc.carry("centroids")
         val survivors = Cluster.incrementalSemDeDupAssigned(assignments,
             batchA, idCol, tau, scale, maxClusterSize)
@@ -144,15 +133,12 @@ object StreamingSemDeDup {
         gc.writeAll(Seq(
           ("assignments", batchA, "append", Seq("cid")),
           ("survivors", survivors, "append", Nil)))
-        gc.markApplied(batchId)
-        gc.publish()
+      } finally {
+        // release the checkpoint blocks (ADVICE r17: they otherwise
+        // linger in the block manager until the ContextCleaner happens
+        // to GC the RDD — a slow accumulation on long streams)
+        batchA.unpersist(blocking = false); ()
       }
-      true
-    } finally {
-      // release the checkpoint blocks (ADVICE r17: they otherwise linger
-      // in the block manager until the ContextCleaner happens to GC the
-      // RDD — a slow accumulation on long streams)
-      batchA.unpersist(blocking = false); ()
     }
   }
 

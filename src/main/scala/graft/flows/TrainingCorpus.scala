@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
 import graft.operators.{Cluster, Dedup, Relational}
+import graft.sources.VersionedLake
 
 /** End-to-end training-corpus build: the full document → training-sample
   * path, composed entirely from the engine's operators so each stage keeps
@@ -176,8 +177,11 @@ object TrainingCorpus {
     * State discipline mirrors the streaming flows: every state table
     * (`fps`, the pruned `hashed`/`banded`, `packstate`, `chunks`,
     * `survivors`) commits as ONE atomic [[VersionedLake]] group version
-    * per batch, with the batch id as the manifest's `applied` watermark;
-    * a replayed batch id short-circuits on it (exactly-once). Index membership
+    * per batch, with the batch id as the manifest's `applied` watermark.
+    * The batch claims its version first and reads the watermark from the
+    * base it chains from ([[VersionedLake.GroupCommit.appliedAtBase]]); a
+    * replayed batch id releases the claim and publishes nothing
+    * (exactly-once). Index membership
     * follows the streams' "a dropped doc's near-dup status must not
     * depend on whether its mate survived": the lexical index gets every
     * exact-canonical quality-passer (lexically-dropped included), the
@@ -206,140 +210,116 @@ object TrainingCorpus {
       (batchEmbeddings.nonEmpty && annRoot.nonEmpty),
       "semantic arrival dedup needs batchEmbeddings and annRoot")
     val spark = batch.sparkSession
-    val v = graft.sources.VersionedLake.versions(spark, root).lastOption
-    val lastApplied = v.flatMap(graft.sources.VersionedLake.lastApplied(
-      spark, root, _)).getOrElse(-1L)
-    if (batchId <= lastApplied) return false
-    val docs = batch.select(col("doc_id").cast("long").as("doc_id"),
-      col("lang"), col("text"))
-    // quality + fingerprint, materialized once: feeds the exact stage,
-    // the index build, and (through the survivors) the chunk stage
-    val quality = docs
-      .filter(TextFunctions.qualityScore(col("text")) >= minQuality)
-      .withColumn("fp", TextFunctions.fingerprint(col("text")))
-      .localCheckpoint()
-    val batchCanon = graft.plans.TopKPerKey(quality,
-      Seq(col("fp")), Seq(col("doc_id").asc), 1)
-    val storedFps = v match {
-      case Some(vv) => graft.sources.VersionedLake.readTable(spark, root,
-        "fps", Some(vv), schemaDDL = "fp STRING")
-      case None => batchCanon.select(col("fp")).limit(0)
-    }
-    val exactKept = batchCanon.join(storedFps, Seq("fp"), "left_anti")
-      .localCheckpoint()
-    // eager localCheckpoint (same rationale as StreamingDedup.applyBatch):
-    // nh/nb feed the pair plan AND the two layout writes per batch; a lazy
-    // persist would re-analyze the full shingle pipeline per action
-    val (nh, nb) = Dedup.minHashIndexPortable(exactKept, "doc_id", "text",
-      shingleN, numHashes, bands,
-      stabilize = Some(_.localCheckpoint()))
-    var lexKept: DataFrame = null
-    try {
-      // path choice = the measured state-size dial, same as StreamingDedup
-      val pairs = v match {
-        case None => Dedup.minHashIncrementalPairsFromIndexes(
-          nh.limit(0), nb.limit(0), nh, nb)
-        case Some(vv) =>
-          val sh = graft.sources.VersionedLake.readTable(spark, root,
-            "hashed", Some(vv), schemaDDL = "id BIGINT, hs ARRAY<BIGINT>, " +
-              s"${Dedup.IdLayoutCol} BIGINT")
-          val sb = graft.sources.VersionedLake.readTable(spark, root,
-            "banded", Some(vv), schemaDDL = "id BIGINT, band INT, " +
-              s"bucket BIGINT, ${Dedup.BandLayoutCol} BIGINT")
-          if (Dedup.pruneStoredReads(sh, sb))
-            Dedup.minHashIncrementalPairsPruned(sh, sb, nh, nb)
-          else
-            Dedup.minHashIncrementalPairsFromIndexes(sh, sb, nh, nb)
-      }
-      val droppedLex = pairs.filter(col("jaccard") >= jaccardThreshold)
-        .select(col("id_b")).distinct()
-      lexKept = exactKept
-        .join(droppedLex, col("doc_id") === col("id_b"), "left_anti")
+    StreamingRetention.applyOnce(spark, root, batchId) { gc =>
+      // every stored read at the commit's own base (None: first batch)
+      val v = gc.basedOn
+      val docs = batch.select(col("doc_id").cast("long").as("doc_id"),
+        col("lang"), col("text"))
+      // quality + fingerprint, materialized once: feeds the exact stage,
+      // the index build, and (through the survivors) the chunk stage
+      val quality = docs
+        .filter(TextFunctions.qualityScore(col("text")) >= minQuality)
+        .withColumn("fp", TextFunctions.fingerprint(col("text")))
         .localCheckpoint()
-      val annExists = annRoot.nonEmpty &&
-        graft.sources.VersionedLake.versions(spark, annRoot).nonEmpty
-      val semKept =
-        if (semThreshold <= 0) lexKept
-        else if (!annExists) lexKept // bootstrap: nothing stored to compare
-        else {
-          val embB = batchEmbeddings.get
-            .select(col("doc_id").cast("long").as("doc_id"),
+      val batchCanon = graft.plans.TopKPerKey(quality,
+        Seq(col("fp")), Seq(col("doc_id").asc), 1)
+      val storedFps = v match {
+        case Some(vv) => VersionedLake.readTable(spark, root, "fps",
+          Some(vv), schemaDDL = "fp STRING")
+        case None => batchCanon.select(col("fp")).limit(0)
+      }
+      val exactKept = batchCanon.join(storedFps, Seq("fp"), "left_anti")
+        .localCheckpoint()
+      // eager localCheckpoint (same rationale as StreamingDedup.applyBatch):
+      // nh/nb feed the pair plan AND the two layout writes per batch; a lazy
+      // persist would re-analyze the full shingle pipeline per action
+      val (nh, nb) = Dedup.minHashIndexPortable(exactKept, "doc_id", "text",
+        shingleN, numHashes, bands,
+        stabilize = Some(_.localCheckpoint()))
+      var lexKept: DataFrame = null
+      try {
+        val droppedLex = Dedup.storedIncrementalPairs(spark, root, v, nh, nb)
+          .filter(col("jaccard") >= jaccardThreshold)
+          .select(col("id_b")).distinct()
+        lexKept = exactKept
+          .join(droppedLex, col("doc_id") === col("id_b"), "left_anti")
+          .localCheckpoint()
+        val annExists = annRoot.nonEmpty &&
+          VersionedLake.versions(spark, annRoot).nonEmpty
+        val semKept =
+          if (semThreshold <= 0) lexKept
+          else if (!annExists) lexKept // bootstrap: nothing stored to compare
+          else {
+            val embB = batchEmbeddings.get
+              .select(col("doc_id").cast("long").as("doc_id"),
+                col("embedding"))
+              .join(lexKept.select(col("doc_id")), Seq("doc_id"), "left_semi")
+            val droppedSem = AnnIndex.semanticDedupDecisions(spark, annRoot,
+                "corpus_id", embB, "doc_id", "embedding", nprobe, c,
+                semThreshold)
+              .filter(col("dropped")).select(col("doc_id"))
+            lexKept.join(droppedSem, Seq("doc_id"), "left_anti")
+          }
+        // ANN maintenance BEFORE the main commit (a crash between the two
+        // replays the batch; the anti-join below makes the re-append a
+        // no-op). Members: every LEXICAL survivor, semantically-dropped
+        // included — see the scaladoc's index-membership discipline.
+        if (semThreshold > 0) {
+          val embIdx = batchEmbeddings.get
+            .select(col("doc_id").cast("long").as("corpus_id"),
               col("embedding"))
-            .join(lexKept.select(col("doc_id")), Seq("doc_id"), "left_semi")
-          val droppedSem = AnnIndex.semanticDedupDecisions(spark, annRoot,
-              "corpus_id", embB, "doc_id", "embedding", nprobe, c,
-              semThreshold)
-            .filter(col("dropped")).select(col("doc_id"))
-          lexKept.join(droppedSem, Seq("doc_id"), "left_anti")
+            .join(lexKept.select(col("doc_id").as("corpus_id")),
+              Seq("corpus_id"), "left_semi")
+          if (!annExists) {
+            if (!embIdx.isEmpty)
+              AnnIndex.build(embIdx, "corpus_id", "embedding", annRoot,
+                dims, coarseK, coarseIters, m, k, iters)
+          } else {
+            val indexed = VersionedLake.readTable(spark, annRoot,
+              "encoded", schemaDDL =
+                "corpus_id BIGINT, codes ARRAY<BIGINT>, cell BIGINT")
+              .select(col("corpus_id"))
+            val embNew = embIdx.join(indexed, Seq("corpus_id"), "left_anti")
+            if (!embNew.isEmpty)
+              AnnIndex.append(embNew, "corpus_id", "embedding", annRoot)
+          }
+          ()
         }
-      // ANN maintenance BEFORE the main commit (a crash between the two
-      // replays the batch; the anti-join below makes the re-append a
-      // no-op). Members: every LEXICAL survivor, semantically-dropped
-      // included — see the scaladoc's index-membership discipline.
-      if (semThreshold > 0) {
-        val embIdx = batchEmbeddings.get
-          .select(col("doc_id").cast("long").as("corpus_id"),
-            col("embedding"))
-          .join(lexKept.select(col("doc_id").as("corpus_id")),
-            Seq("corpus_id"), "left_semi")
-        if (!annExists) {
-          if (!embIdx.isEmpty)
-            AnnIndex.build(embIdx, "corpus_id", "embedding", annRoot,
-              dims, coarseK, coarseIters, m, k, iters)
-        } else {
-          val indexed = graft.sources.VersionedLake.readTable(spark,
-            annRoot, "encoded",
-            schemaDDL = "corpus_id BIGINT, codes ARRAY<BIGINT>, cell BIGINT")
-            .select(col("corpus_id"))
-          val embNew = embIdx.join(indexed, Seq("corpus_id"), "left_anti")
-          if (!embNew.isEmpty)
-            AnnIndex.append(embNew, "corpus_id", "embedding", annRoot)
+        // chunk + pack CONTINUED from the stored per-language totals
+        val chunked = semKept
+          .withColumn("clean_text", TextFunctions.redactPii(col("text")))
+          .select(col("doc_id"), col("lang"),
+            explode(TextFunctions.chunkByTokens(col("clean_text"),
+              chunkTokens, overlap)).as("c"))
+          .select(col("doc_id"), col("lang"), col("c.start").as("start"),
+            col("c.n_tokens").cast("long").as("n_tokens"),
+            col("c.chunk").as("chunk"))
+        val storedPack = v match {
+          case Some(vv) => VersionedLake.readTable(spark, root, "packstate",
+            Some(vv), schemaDDL = "lang STRING, cum BIGINT")
+          case None => chunked.select(col("lang"), lit(0L).as("cum")).limit(0)
         }
-        ()
-      }
-      // chunk + pack CONTINUED from the stored per-language totals
-      val chunked = semKept
-        .withColumn("clean_text", TextFunctions.redactPii(col("text")))
-        .select(col("doc_id"), col("lang"),
-          explode(TextFunctions.chunkByTokens(col("clean_text"),
-            chunkTokens, overlap)).as("c"))
-        .select(col("doc_id"), col("lang"), col("c.start").as("start"),
-          col("c.n_tokens").cast("long").as("n_tokens"),
-          col("c.chunk").as("chunk"))
-      val storedPack = v match {
-        case Some(vv) => graft.sources.VersionedLake.readTable(spark, root,
-          "packstate", Some(vv), schemaDDL = "lang STRING, cum BIGINT")
-        case None => spark.createDataFrame(
-          java.util.List.of[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("lang",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("cum",
-              org.apache.spark.sql.types.LongType))))
-      }
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("lang")).orderBy(col("doc_id"), col("start"))
-        .rowsBetween(org.apache.spark.sql.expressions.Window
-          .unboundedPreceding, -1)
-      val packed = chunked
-        .join(storedPack, Seq("lang"), "left")
-        .withColumn("__cum", coalesce(col("cum"), lit(0L)) +
-          coalesce(sum(col("n_tokens")).over(w), lit(0L)))
-        .withColumn("bin_id", expr(s"__cum DIV ${binCapacity}L"))
-        .withColumn("offset_in_bin",
-          col("__cum") - col("bin_id") * binCapacity)
-        .withColumn("split",
-          Relational.splitAssign(col("doc_id"), trainPct, valPct))
-        .select(col("doc_id"), lit(batchId).as("batch_id"), col("lang"),
-          col("start"), col("n_tokens"), col("chunk"), col("bin_id"),
-          col("offset_in_bin"), col("split"))
-      val newPack = storedPack.withColumnRenamed("cum", "cum0")
-        .join(chunked.groupBy(col("lang"))
-          .agg(sum(col("n_tokens")).as("add")), Seq("lang"), "full")
-        .select(col("lang"), (coalesce(col("cum0"), lit(0L)) +
-          coalesce(col("add"), lit(0L))).as("cum"))
-      val gc = graft.sources.VersionedLake.beginGroupCommit(spark, root)
-      graft.sources.VersionedLake.runOrAbort(gc) {
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("lang")).orderBy(col("doc_id"), col("start"))
+          .rowsBetween(org.apache.spark.sql.expressions.Window
+            .unboundedPreceding, -1)
+        val packed = chunked
+          .join(storedPack, Seq("lang"), "left")
+          .withColumn("__cum", coalesce(col("cum"), lit(0L)) +
+            coalesce(sum(col("n_tokens")).over(w), lit(0L)))
+          .withColumn("bin_id", expr(s"__cum DIV ${binCapacity}L"))
+          .withColumn("offset_in_bin",
+            col("__cum") - col("bin_id") * binCapacity)
+          .withColumn("split",
+            Relational.splitAssign(col("doc_id"), trainPct, valPct))
+          .select(col("doc_id"), lit(batchId).as("batch_id"), col("lang"),
+            col("start"), col("n_tokens"), col("chunk"), col("bin_id"),
+            col("offset_in_bin"), col("split"))
+        val newPack = storedPack.withColumnRenamed("cum", "cum0")
+          .join(chunked.groupBy(col("lang"))
+            .agg(sum(col("n_tokens")).as("add")), Seq("lang"), "full")
+          .select(col("lang"), (coalesce(col("cum0"), lit(0L)) +
+            coalesce(col("add"), lit(0L))).as("cum"))
         // the six data tables derive from already-materialized frames
         // (exactKept/lexKept/semKept are checkpointed, nh/nb persisted) —
         // stage them concurrently; the watermark rides in the manifest
@@ -354,15 +334,12 @@ object TrainingCorpus {
           ("survivors",
             semKept.select(col("doc_id"), lit(batchId).as("batch_id")),
             "append", Nil)))
-        gc.markApplied(batchId)
-        gc.publish()
+      } finally {
+        nh.unpersist(); nb.unpersist()
+        quality.unpersist(blocking = false)
+        exactKept.unpersist(blocking = false)
+        if (lexKept != null) lexKept.unpersist(blocking = false); ()
       }
-      true
-    } finally {
-      nh.unpersist(); nb.unpersist()
-      quality.unpersist(blocking = false)
-      exactKept.unpersist(blocking = false)
-      if (lexKept != null) lexKept.unpersist(blocking = false); ()
     }
   }
 
@@ -371,10 +348,10 @@ object TrainingCorpus {
     */
   def arrivalChunks(spark: org.apache.spark.sql.SparkSession,
       root: String): DataFrame =
-    graft.sources.VersionedLake.readTable(spark, root, "chunks")
+    VersionedLake.readTable(spark, root, "chunks")
 
   /** The accepted documents per batch: (doc_id, batch_id). */
   def arrivalSurvivors(spark: org.apache.spark.sql.SparkSession,
       root: String): DataFrame =
-    graft.sources.VersionedLake.readTable(spark, root, "survivors")
+    VersionedLake.readTable(spark, root, "survivors")
 }

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
+import graft.sources.VersionedLake
 
 /** Deduplication operators, from the reference's latest-record-per-key
   * pattern up to the MinHash/SimHash near-dup machinery a pretraining-data
@@ -598,6 +599,35 @@ object Dedup {
       stabilize = _.localCheckpoint())
     materializeAndRelease(result, candidates)
   }
+
+  /** The arrival pair step of the lake-backed lexical flows
+    * ([[graft.flows.StreamingDedup]], [[graft.flows.TrainingCorpus]]):
+    * the batch's index frames `nh`/`nb` against the `hashed`/`banded`
+    * tables stored at group version `base` of `root` — with no base yet
+    * (the first batch), against nothing. Explicit schemas: partition-column
+    * inference would read the ph/pb dir values back as INT and the pruning
+    * filters' BIGINT literals would cast the partition attribute, defeating
+    * PartitionFilters. The path is the measured state-size dial
+    * ([[pruneStoredReads]]): the pruned reads win once the stored tables
+    * clear ~1 GiB; below that the full-scan join's two passes cost less
+    * than the pruned path's fixed per-batch toll.
+    */
+  private[graft] def storedIncrementalPairs(spark: SparkSession,
+      root: String, base: Option[Long], nh: DataFrame,
+      nb: DataFrame): DataFrame =
+    base match {
+      case None =>
+        minHashIncrementalPairsFromIndexes(nh.limit(0), nb.limit(0), nh, nb)
+      case Some(v) =>
+        val sh = VersionedLake.readTable(spark, root, "hashed", Some(v),
+          schemaDDL = s"id BIGINT, hs ARRAY<BIGINT>, $IdLayoutCol BIGINT")
+        val sb = VersionedLake.readTable(spark, root, "banded", Some(v),
+          schemaDDL =
+            s"id BIGINT, band INT, bucket BIGINT, $BandLayoutCol BIGINT")
+        if (pruneStoredReads(sh, sb))
+          minHashIncrementalPairsPruned(sh, sb, nh, nb)
+        else minHashIncrementalPairsFromIndexes(sh, sb, nh, nb)
+    }
 
   /** The LAZY plan of [[minHashIncrementalPairsPruned]] plus the persisted
     * candidate frame the caller must release — split out so PlanShapeSpec

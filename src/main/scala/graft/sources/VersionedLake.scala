@@ -490,7 +490,11 @@ object VersionedLake {
     }
     val byVersionDir = files.groupBy(versionDir)
     val parts = byVersionDir.toSeq.sortBy(_._1).map { case (vdir, fs0) =>
+      // listed paths are literal file names, never glob patterns: a raw
+      // `[`, `{`, `*`, `?` or `\` in a foreign writer's partition directory
+      // would otherwise be expanded and miss the file
       val r0 = spark.read.option("basePath", new Path(root, vdir).toString)
+        .option("__globPaths__", "false")
       val r1 = if (schemaDDL != null) r0.schema(schemaDDL)
         else r0.option("mergeSchema", mergeSchema.toString)
       r1.parquet(fs0.map(rel => new Path(root, rel).toString): _*)
@@ -560,14 +564,16 @@ object VersionedLake {
       root: String, store: ManifestStore, val version: Long,
       val basedOn: Option[Long]) {
     // `basedOn` is the latest version COMMITTED when this commit claimed
-    // its number — exposed so a writer derives its carry lists, reads,
-    // and publishIfBaseIs base from the SAME version the commit chains
-    // from. A separately-read "latest" can sit one commit behind the
-    // claim (a fold landing in the gap), making carry() throw on a table
-    // the manifest no longer lists — a loud crash where a retry belongs.
+    // its number — exposed so a writer derives its reads and
+    // publishIfBaseIs base from the SAME version the commit chains from;
+    // its watermark and carry list come from [[appliedAtBase]] and
+    // [[carryAllExcept]]. A separately-read "latest" can sit one commit
+    // behind the claim (a fold landing in the gap), making carry() throw
+    // on a table the manifest no longer lists — a loud crash where a
+    // retry belongs.
     //
     // The base manifest is parsed once per commit: append carry lists,
-    // carry() and the sticky watermark all read it.
+    // carry(), the two accessors and the sticky watermark all read it.
     private lazy val base: Option[GroupManifest] =
       basedOn.map(groupManifest(store, root, _))
     private var applied: Option[Long] = None
@@ -782,6 +788,17 @@ object VersionedLake {
       ()
     }
 
+    /** The base version's stream watermark (None: no base, or no batch
+      * applied yet) — what tells an exactly-once writer's replay apart.
+      */
+    def appliedAtBase: Option[Long] = base.flatMap(_.applied)
+
+    /** [[carry]] every base-version table except `written`, in sorted
+      * order — optional members included (see [[carry]] for why).
+      */
+    def carryAllExcept(written: Set[String]): Unit =
+      base.foreach(_.tables.keys.filterNot(written).toSeq.sorted.foreach(carry))
+
     /** Read a table staged in THIS commit (pre-publish). */
     def readStaged(table: String, mergeSchema: Boolean = true): DataFrame = {
       val files = staged.getOrElse(table, throw new IllegalArgumentException(
@@ -823,6 +840,35 @@ object VersionedLake {
         try gc.abort() catch { case _: Throwable => () }
         throw e
     }
+
+  /** The one race-detected commit loop of the lake's writers: claim a
+    * version, run `body` under [[runOrAbort]] and return its `Some`. A
+    * `None` is a lost race (`body` ends in [[GroupCommit.publishIfBaseIs]],
+    * which has already aborted): back off and retry at the new base, up
+    * to `maxAttempts` times, then throw naming `writer`.
+    */
+  private[graft] def commitLoop[A](spark: SparkSession, root: String,
+      writer: String, maxAttempts: Int)(body: GroupCommit => Option[A]): A =
+    (1 to maxAttempts).iterator.map { attempt =>
+      if (attempt > 1) retryBackoff(attempt - 1)
+      val gc = beginGroupCommit(spark, root)
+      val out = runOrAbort(gc)(body(gc))
+      if (out.isEmpty) gc.abort()
+      out
+    }.collectFirst { case Some(a) => a }.getOrElse(
+      throw new IllegalStateException(s"$writer at $root lost the commit " +
+        s"race $maxAttempts times (a concurrent writer kept landing inside " +
+        "its claim→publish window; retry)"))
+
+  /** Linear backoff between commit-race retries: the usual loser is a
+    * writer whose publish window overlapped an in-flight LOWER claim
+    * (lowest claim wins — see `publishIfBaseIs`); that winner publishes
+    * within milliseconds of its own window closing, so a short wait
+    * converts a burned attempt into a clean rebase instead of spinning
+    * the bounded retry budget against a still-open window.
+    */
+  private def retryBackoff(attempt: Int): Unit =
+    Thread.sleep(math.min(500L, 50L * attempt))
 
   /** Open an atomic multi-table commit at `root` (claims the version
     * number immediately; see [[GroupCommit]]).

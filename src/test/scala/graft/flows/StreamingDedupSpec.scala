@@ -33,12 +33,16 @@ class StreamingDedupSpec extends SparkSpec {
     val vAfter = VersionedLake.versions(spark, root).last
     // replaying EITHER batch id changes nothing — not the survivors, not
     // the index, not the version count (the crash-replay path of q116b)
-    StreamingDedup.applyBatch(b1, 1L, "doc_id", "text", root,
-      jaccardThreshold = 0.5, shingleN = 3, numHashes = 16, bands = 4)
-    StreamingDedup.applyBatch(b0, 0L, "doc_id", "text", root,
-      jaccardThreshold = 0.5, shingleN = 3, numHashes = 16, bands = 4)
+    assert(!StreamingDedup.applyBatch(b1, 1L, "doc_id", "text", root,
+      jaccardThreshold = 0.5, shingleN = 3, numHashes = 16, bands = 4))
+    assert(!StreamingDedup.applyBatch(b0, 0L, "doc_id", "text", root,
+      jaccardThreshold = 0.5, shingleN = 3, numHashes = 16, bands = 4))
     assert(got() == Set((10L, 0L), (11L, 0L), (5L, 1L)))
     assert(VersionedLake.versions(spark, root).last == vAfter)
+    // the replays released their claims: the next commit claims latest + 1
+    val probe = VersionedLake.beginGroupCommit(spark, root)
+    assert(probe.version == vAfter + 1)
+    probe.abort()
     // a genuinely NEW batch still applies after the replays
     val b2 = Seq((30L, base + " more extra")).toDF("doc_id", "text")
     StreamingDedup.applyBatch(b2, 2L, "doc_id", "text", root,

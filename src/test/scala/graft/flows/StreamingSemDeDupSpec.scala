@@ -50,14 +50,18 @@ class StreamingSemDeDupSpec extends SparkSpec {
     assert(got() == Set((60L, 0L), (70L, 1L)))
     val vAfter = VersionedLake.versions(spark, root).last
     // replaying either batch changes nothing (the q117b crash path)
-    StreamingSemDeDup.applyBatch(b0, 0L, "vec_id", "embedding", root,
-      tau = 0.9, scale = graft.operators.Cluster.QuantScale,
-      maxClusterSize = Int.MaxValue)
-    StreamingSemDeDup.applyBatch(b1, 1L, "vec_id", "embedding", root,
-      tau = 0.9, scale = graft.operators.Cluster.QuantScale,
-      maxClusterSize = Int.MaxValue)
+    assert(!StreamingSemDeDup.applyBatch(b0, 0L, "vec_id", "embedding",
+      root, tau = 0.9, scale = graft.operators.Cluster.QuantScale,
+      maxClusterSize = Int.MaxValue))
+    assert(!StreamingSemDeDup.applyBatch(b1, 1L, "vec_id", "embedding",
+      root, tau = 0.9, scale = graft.operators.Cluster.QuantScale,
+      maxClusterSize = Int.MaxValue))
     assert(got() == Set((60L, 0L), (70L, 1L)))
     assert(VersionedLake.versions(spark, root).last == vAfter)
+    // the replays released their claims: the next commit claims latest + 1
+    val probe = VersionedLake.beginGroupCommit(spark, root)
+    assert(probe.version == vAfter + 1)
+    probe.abort()
     // dropped docs still indexed: 61 dropped in batch 0, yet a later ≈61
     // arrival must still drop against it — and every arrival's assignment
     // row is present exactly once

@@ -193,6 +193,10 @@ class TrainingCorpusSpec extends SparkSpec {
     val vBefore = graft.sources.VersionedLake.versions(spark, root).last
     assert(!run(b2, 1L))
     assert(graft.sources.VersionedLake.versions(spark, root).last == vBefore)
+    // the replay released its claim: the next commit claims latest + 1
+    val probe = graft.sources.VersionedLake.beginGroupCommit(spark, root)
+    assert(probe.version == vBefore + 1)
+    probe.abort()
     // misuse guard: a semantic threshold without embeddings/annRoot
     intercept[IllegalArgumentException](
       TrainingCorpus.applyBatch(b1, 9L, root, semThreshold = 5L))

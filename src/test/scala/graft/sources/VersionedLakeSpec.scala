@@ -615,6 +615,9 @@ class VersionedLakeSpec extends SparkSpec {
     assert(VersionedLake.lastApplied(spark, root, 1L).isEmpty)
     assert(kv(VersionedLake.readTable(spark, root, "u.x",
       schemaDDL = "v INT, k STRING")) == Seq(("a,b", 7), ("café 日本", 7)))
+    // the raw `]` and `\` are read as a literal path, not a glob pattern
+    assert(kv(VersionedLake.readTable(spark, root, "t",
+      schemaDDL = "v INT, k STRING")) == Seq(("a,b]\"q\\z", 7)))
     // the vacuum's live set is exactly the parsed list: the listed odd
     // file stays, its unlisted sibling goes
     assert(VersionedLake.vacuumGroup(spark, root, keepFrom = 1L) == 1)
@@ -684,5 +687,98 @@ class VersionedLakeSpec extends SparkSpec {
     assert(seen.count(_ == "B") >= members.size, seen)
     // and the pool threads did not keep the last submitter's group
     assert(sc.getLocalProperty("spark.jobGroup.id") == null)
+  }
+
+  test("commitLoop: a body raced on every attempt throws after " +
+    "maxAttempts naming the writer, and leaves no claim and no data of " +
+    "its own behind") {
+    import org.apache.hadoop.fs.Path
+    val root = Files.createTempDirectory("vlakeg-loop").toString
+    VersionedLake.commitAll(Seq("t" -> Seq(1L).toDF("x")), root)
+    var attempts = 0
+    val ex = intercept[IllegalStateException] {
+      VersionedLake.commitLoop(spark, root, "RacedWriter.append",
+          maxAttempts = 3) { gc =>
+        attempts += 1
+        gc.carryAllExcept(Set("t"))
+        gc.write("t", Seq(2L).toDF("x"), mode = "append")
+        // a competing writer claims the next number and publishes first
+        val rival = VersionedLake.beginGroupCommit(spark, root)
+        rival.carryAllExcept(Set("c"))
+        rival.write("c", Seq(attempts.toLong).toDF("x"))
+        rival.publish()
+        gc.publishIfBaseIs(gc.basedOn.get)
+      }
+    }
+    assert(attempts == 3)
+    assert(ex.getMessage.contains("RacedWriter.append"), ex.getMessage)
+    assert(ex.getMessage.contains("3 times"), ex.getMessage)
+    // the loser's claims (v2, v4, v6) were released; the winners' stand
+    val committed = VersionedLake.versions(spark, root)
+    assert(committed == Seq(1L, 3L, 5L, 7L))
+    val claims = new java.io.File(root, "_manifests").list().toSeq
+      .filter(_.endsWith(".claim"))
+      .map(_.stripPrefix("v").stripSuffix(".claim").toLong)
+    assert(claims.forall(committed.contains), claims)
+    // no `t/_data/v{N}` of the loser's survives its aborts
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tData = new Path(root, "t/_data")
+    assert(fs.listStatus(tData).map(_.getPath.getName).toSeq == Seq("v1"))
+    assert(VersionedLake.readTable(spark, root, "t").as[Long].collect()
+      .toSeq == Seq(1L))
+  }
+
+  test("carryAllExcept carries every other base table through an append, " +
+    "an optional member like tombstones included; with no base it is a " +
+    "no-op") {
+    val root = Files.createTempDirectory("vlakeg-carryall").toString
+    val gc0 = VersionedLake.beginGroupCommit(spark, root)
+    gc0.carryAllExcept(Set("encoded")) // no base: nothing to carry
+    gc0.write("encoded", Seq(1L).toDF("id"))
+    gc0.write("model", Seq(9L).toDF("m"))
+    gc0.publish()
+    val gc1 = VersionedLake.beginGroupCommit(spark, root)
+    gc1.carryAllExcept(Set("tombstones"))
+    gc1.write("tombstones", Seq(1L).toDF("id"), mode = "append")
+    gc1.publish()
+    val v2 = VersionedLake.groupTableRelFiles(spark, root, Some(2L))
+    val gc2 = VersionedLake.beginGroupCommit(spark, root)
+    gc2.carryAllExcept(Set("encoded"))
+    gc2.write("encoded", Seq(2L).toDF("id"), mode = "append")
+    gc2.publish()
+    val v3 = VersionedLake.groupTableRelFiles(spark, root, Some(3L))
+    assert(v3.keySet == Set("encoded", "model", "tombstones"))
+    assert(v3("tombstones") == v2("tombstones"))
+    assert(v3("model") == v2("model"))
+    assert(VersionedLake.readTable(spark, root, "encoded").as[Long].collect()
+      .sorted.toSeq == Seq(1L, 2L))
+  }
+
+  test("a read takes manifest paths literally: several directories with " +
+    "glob metacharacters in one read return each listed file once") {
+    import org.apache.hadoop.fs.Path
+    val tbl = Files.createTempDirectory("vlake-glob").toString
+    val src = Files.createTempDirectory("vlake-glob-src").toString + "/d"
+    Seq(7).toDF("v").coalesce(1).write.parquet(src)
+    val fs = new Path(tbl).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val part = fs.listStatus(new Path(src)).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get
+    val dirs = Seq("a[1]", "b*{x}?", "c\\d", "plain")
+    val rels = dirs.zipWithIndex.map { case (d, i) =>
+      s"_data/v1/k=$d/part-0000$i-1.parquet" }
+    rels.foreach { rel =>
+      val dst = new Path(tbl, rel)
+      fs.mkdirs(dst.getParent)
+      Files.copy(java.nio.file.Paths.get(part.toUri.getPath),
+        java.nio.file.Paths.get(dst.toUri.getPath))
+    }
+    fs.mkdirs(new Path(tbl, "_manifests"))
+    Files.write(java.nio.file.Paths.get(tbl, "_manifests", "v1.json"),
+      rels.map(r => "\"" + r.replace("\\", "\\\\") + "\"")
+        .mkString("{\"version\":1,\"files\":[", ",", "]}")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val rows = VersionedLake.read(spark, tbl, schemaDDL = "v INT, k STRING")
+      .collect().map(r => (r.getAs[String]("k"), r.getAs[Int]("v")))
+    assert(rows.sorted.toSeq == dirs.map(_ -> 7).sorted)
   }
 }
