@@ -2552,15 +2552,14 @@ object Queries {
         graft.flows.StreamingSemDeDup.setup(
           emb.filter(col("vec_id") % 5 =!= 0), "vec_id", "embedding", root,
           k = 4, iters = 3)
-      // one version resolve for both reads (group consistency by
+      // one snapshot for both reads (group consistency by
       // construction). Explicit schema: partition-column type inference
       // would read cid back as INT (values 0..k-1), and the long-vs-int
       // mismatch both breaks assignStored's (id, q, cid) long contract
       // downstream and wraps the partition column in a cast that can
       // defeat pruning
-      val v = VersionedLake.versions(s, root).last
-      val assignments = VersionedLake.readTable(s, root, "assignments",
-        Some(v),
+      val snap = VersionedLake.snapshot(s, root)
+      val assignments = snap.read("assignments",
         schemaDDL = "vec_id BIGINT, q ARRAY<BIGINT>, dist BIGINT, cid BIGINT")
       // unbounded pinned for oracle exactness (see q106's note); the
       // bounded arrival path is oracle-proven by q108b's forced split
@@ -2568,7 +2567,7 @@ object Queries {
           assignments,
           emb.filter(col("vec_id") % 5 === 0),
           "vec_id", "embedding",
-          VersionedLake.readTable(s, root, "centroids", Some(v)),
+          snap.read("centroids"),
           tau = 0.45, maxClusterSize = Int.MaxValue)
         .orderBy(col("vec_id"))
     }),
@@ -2974,10 +2973,7 @@ object Queries {
       val hold = refitAt(s"$tmp/cand2", AnnRefitFloorHold)
       // the OBSERVED serving root (not the RefitResult's claim): "" when
       // no refit ever cut — the frame must reflect what a reader sees
-      val serving =
-        if (graft.sources.VersionedLake.versions(s, ptr).nonEmpty)
-          graft.sources.ServingPointer.resolve(s, ptr)
-        else ""
+      val serving = graft.sources.ServingPointer.current(s, ptr).getOrElse("")
       import s.implicits._
       Seq(
         ("floor_hold", AnnRefitFloorHold, hold.cut, hold.meanRecall,
@@ -3008,15 +3004,13 @@ object Queries {
       def stage(retireWhere: Column): (Long, Long, Boolean) = {
         graft.flows.AnnIndex.delete(
           emb.filter(retireWhere).select(col("vec_id")), "vec_id", root)
-        val v = graft.sources.VersionedLake.versions(s, root).last
-        val dead = graft.sources.VersionedLake.tableRowCount(s, root,
-          "tombstones", Some(v))
-        val stored = graft.sources.VersionedLake.tableRowCount(s, root,
-          "encoded", Some(v))
+        val snap = graft.sources.VersionedLake.snapshot(s, root)
+        val (dead, stored) = (snap.rowCount("tombstones"),
+          snap.rowCount("encoded"))
         graft.flows.AnnIndex.maintainAndFold(s, root, "vec_id",
           foldAtFraction = 0.2)
-        val folded = !graft.sources.VersionedLake
-          .groupTableRelFiles(s, root, None).contains("tombstones")
+        val folded = !graft.sources.VersionedLake.snapshot(s, root).tables
+          .contains("tombstones")
         (dead, stored, folded)
       }
       val (d1, s1, f1) = stage(col("vec_id") % 25 === 0)

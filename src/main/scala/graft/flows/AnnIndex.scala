@@ -106,14 +106,47 @@ object AnnIndex {
       vecCol: String): DataFrame =
     df.select(col(idCol).cast("long").as(idCol), col(vecCol))
 
-  /** Latest committed version, with the branded error a typo'd root or
-    * an append-before-build deserves (a bare `.last` on the empty list
-    * would surface as an unactionable "empty.last").
+  /** The branded error a typo'd root or an append-before-build deserves
+    * (a bare snapshot would say only "no committed versions").
     */
-  private def latestVersion(spark: SparkSession, root: String): Long = {
-    val vs = VersionedLake.versions(spark, root)
-    require(vs.nonEmpty, s"no ANN index at $root (build it first)")
-    vs.last
+  private def requireIndex(spark: SparkSession, root: String): Unit =
+    require(VersionedLake.versions(spark, root).nonEmpty,
+      s"no ANN index at $root (build it first)")
+
+  private val Tombstones = "tombstones"
+
+  /** The index tables at ONE snapshot — the one place their schemas are
+    * pinned (partition-column inference would narrow `cell` to INT).
+    * Members are read lazily, so each flow reads only what it uses.
+    * `tomb` holds the pending retirements: None before the first
+    * [[delete]] (and again after a [[foldTombstones]] — a fold drops the
+    * table rather than staging an empty one).
+    */
+  private final class Stored(snap: VersionedLake.Snapshot, idCol: String) {
+    lazy val coarse: DataFrame = snap.read("coarse")
+    lazy val books: DataFrame = snap.read("codebooks")
+    lazy val encoded: DataFrame = snap.read("encoded",
+      schemaDDL = s"$idCol BIGINT, codes ARRAY<BIGINT>, cell BIGINT")
+    lazy val quant: DataFrame = snap.read("quant",
+      schemaDDL = s"$idCol BIGINT, q ARRAY<BIGINT>")
+    lazy val tomb: Option[DataFrame] =
+      if (!snap.tables.contains(Tombstones)) None
+      else Some(snap.read(Tombstones, schemaDDL = s"$idCol BIGINT"))
+
+    /** `df` minus the retired ids. The anti-join build side is the
+      * broadcast tombstone set — the corpus side never shuffles, so a
+      * tombstoned search keeps the same scan shape as a clean one (the
+      * `cell` partition pruning pushes through the join; plan-pinned).
+      */
+    def live(df: DataFrame): DataFrame =
+      tomb.fold(df)(t => df.join(broadcast(t), Seq(idCol), "left_anti"))
+  }
+
+  /** The latest index snapshot (branded on a missing root). */
+  private def latest(spark: SparkSession,
+      root: String): VersionedLake.Snapshot = {
+    requireIndex(spark, root)
+    VersionedLake.snapshot(spark, root)
   }
 
   /** Encode `batch` against the STORED model (map-only —
@@ -140,7 +173,7 @@ object AnnIndex {
   def append(batch: DataFrame, idCol: String, vecCol: String, root: String,
       scale: Int = Cluster.QuantScale, maxAttempts: Int = 5,
       raceWindow: () => Unit = () => ()): Long = {
-    latestVersion(batch.sparkSession, root) // branded require before claiming
+    requireIndex(batch.sparkSession, root) // before claiming
     commitAppend(normalized(batch, idCol, vecCol), idCol, vecCol, root,
       scale, maxAttempts, raceWindow, "AnnIndex.append", batchId = None).get
   }
@@ -159,50 +192,25 @@ object AnnIndex {
       batchId: Option[Long]): Option[Long] = {
     val spark = src.sparkSession
     VersionedLake.commitLoop(spark, root, writer, maxAttempts) { gc =>
-      if (batchId.exists(b => gc.appliedAtBase.exists(b <= _))) {
+      val base = gc.base.get
+      if (batchId.exists(b => base.applied.exists(b <= _))) {
         gc.abort(); Some(None)
       } else {
-        val v = gc.basedOn.get
-        val coarse = VersionedLake.readTable(spark, root, "coarse", Some(v))
-        val books = VersionedLake.readTable(spark, root, "codebooks", Some(v))
+        val model = new Stored(base, idCol)
         // model tables, pending tombstones and any future member
         gc.carryAllExcept(Set("encoded", "quant"))
         gc.writeAll(Seq(
-          ("encoded",
-            Similarity.ivfPqEncode(src, idCol, vecCol, coarse, books, scale),
-            "append", Seq("cell")),
+          ("encoded", Similarity.ivfPqEncode(src, idCol, vecCol,
+            model.coarse, model.books, scale), "append", Seq("cell")),
           ("quant", src.select(col(idCol),
             Cluster.quantizeFloor(col(vecCol), scale).as("q")),
             "append", Nil)))
         batchId.foreach(gc.markApplied)
         raceWindow()
-        gc.publishIfBaseIs(v).map(Some(_))
+        gc.publishIfBaseIs(base.version).map(Some(_))
       }
     }
   }
-
-  private val Tombstones = "tombstones"
-
-  /** The pending retirements at version `v`, or None before the first
-    * [[delete]] (and again after a [[foldTombstones]] — a fold drops the
-    * table rather than staging an empty one).
-    */
-  private def tombstonesOpt(spark: SparkSession, root: String, v: Long,
-      idCol: String): Option[DataFrame] =
-    if (VersionedLake.groupTableRelFiles(spark, root, Some(v))
-        .contains(Tombstones))
-      Some(VersionedLake.readTable(spark, root, Tombstones, Some(v),
-        schemaDDL = s"$idCol BIGINT"))
-    else None
-
-  /** Exclude retired ids from an index read. The anti-join build side is
-    * the broadcast tombstone set — the corpus side never shuffles, so a
-    * tombstoned search keeps the same scan shape as a clean one (the
-    * `cell` partition pruning pushes through the join; plan-pinned).
-    */
-  private def minusTombstones(df: DataFrame, tomb: Option[DataFrame],
-      idCol: String): DataFrame =
-    tomb.fold(df)(t => df.join(broadcast(t), Seq(idCol), "left_anti"))
 
   /** Retire `ids` from the index merge-on-read style: ONE group commit
     * appends them to the `tombstones` table and carries every other
@@ -224,14 +232,14 @@ object AnnIndex {
       maxAttempts: Int = 5,
       raceWindow: () => Unit = () => ()): Long = {
     val spark = ids.sparkSession
-    latestVersion(spark, root) // branded require before claiming a number
+    requireIndex(spark, root) // before claiming a number
     val retired = ids.select(col(idCol).cast("long").as(idCol)).distinct()
     VersionedLake.commitLoop(spark, root, "AnnIndex.delete",
         maxAttempts) { gc =>
       gc.carryAllExcept(Set(Tombstones))
       gc.write(Tombstones, retired, mode = "append")
       raceWindow()
-      gc.publishIfBaseIs(gc.basedOn.get)
+      gc.publishIfBaseIs(gc.base.get.version)
     }
   }
 
@@ -254,41 +262,34 @@ object AnnIndex {
   def foldTombstones(spark: SparkSession, root: String, idCol: String,
       keepVersions: Int = 2,
       raceWindow: () => Unit = () => ()): Long = {
-    val v0 = latestVersion(spark, root)
+    val snap0 = latest(spark, root)
     // no-op pre-check at the CURRENT latest, so a fold with nothing
     // pending never claims (and aborts) a version number
-    if (tombstonesOpt(spark, root, v0, idCol).isEmpty) return v0
+    if (!snap0.tables.contains(Tombstones)) return snap0.version
     val gc = VersionedLake.beginGroupCommit(spark, root)
     VersionedLake.runOrAbort(gc) {
-      // re-resolve everything at the commit's OWN base: a commit landing
+      // re-read everything at the commit's OWN base: a commit landing
       // between the pre-check and the claim must not desync the carry
       // list from the rewrite reads
-      val v = gc.basedOn.get
-      tombstonesOpt(spark, root, v, idCol) match {
-        case None => // folded in the gap — nothing pending at our base
-          gc.abort()
-          VersionedLake.versions(spark, root).last
-        case Some(tomb) =>
-          val encoded = VersionedLake.readTable(spark, root, "encoded",
-            Some(v),
-            schemaDDL = s"$idCol BIGINT, codes ARRAY<BIGINT>, cell BIGINT")
-          val quant = VersionedLake.readTable(spark, root, "quant", Some(v),
-            schemaDDL = s"$idCol BIGINT, q ARRAY<BIGINT>")
-          gc.carryAllExcept(Set("encoded", "quant", Tombstones))
-          gc.writeAll(Seq(
-            ("encoded", minusTombstones(encoded, Some(tomb), idCol),
-              "overwrite", Seq("cell")),
-            ("quant", minusTombstones(quant, Some(tomb), idCol),
-              "overwrite", Nil)))
-          raceWindow()
-          gc.publishIfBaseIs(v) match {
-            case None => VersionedLake.versions(spark, root).last
-            case Some(nv) =>
-              val committed = VersionedLake.versions(spark, root)
-              VersionedLake.vacuumGroup(spark, root,
-                keepFrom = committed.takeRight(keepVersions).head)
-              nv
-          }
+      val base = gc.base.get
+      val idx = new Stored(base, idCol)
+      if (idx.tomb.isEmpty) { // folded in the gap — nothing pending
+        gc.abort()
+        VersionedLake.versions(spark, root).last
+      } else {
+        gc.carryAllExcept(Set("encoded", "quant", Tombstones))
+        gc.writeAll(Seq(
+          ("encoded", idx.live(idx.encoded), "overwrite", Seq("cell")),
+          ("quant", idx.live(idx.quant), "overwrite", Nil)))
+        raceWindow()
+        gc.publishIfBaseIs(base.version) match {
+          case None => VersionedLake.versions(spark, root).last
+          case Some(nv) =>
+            val committed = VersionedLake.versions(spark, root)
+            VersionedLake.vacuumGroup(spark, root,
+              keepFrom = committed.takeRight(keepVersions).head)
+            nv
+        }
       }
     }
   }
@@ -315,7 +316,7 @@ object AnnIndex {
     */
   def maintain(spark: SparkSession, root: String,
       targetBytes: Long = 64L * 1024 * 1024, keepVersions: Int = 2): Long = {
-    latestVersion(spark, root) // branded require on a missing/typo'd root
+    requireIndex(spark, root)
     StreamingRetention.compactState(spark, root, targetBytes,
       carryTables = Set("coarse", "codebooks"),
       partitioned = Map("encoded" -> Seq("cell")),
@@ -326,7 +327,7 @@ object AnnIndex {
     * merge-on-read scaladoc names ("fold when tombstones cross a
     * fraction of the corpus") — COMPUTED, not left to the caller: the
     * retired and stored row counts come from parquet FOOTERS of the
-    * manifest-listed files ([[VersionedLake.tableRowCount]] — O(files)
+    * manifest-listed files ([[VersionedLake.Snapshot.rowCount]] — O(files)
     * driver-side metadata reads, no scan, no Spark job), and
     * [[foldTombstones]] runs only when retired/stored ≥ `foldAtFraction`.
     * Below the threshold the pass NEVER folds — searches keep paying the
@@ -342,11 +343,10 @@ object AnnIndex {
       targetBytes: Long = 64L * 1024 * 1024, keepVersions: Int = 2): Long = {
     require(foldAtFraction > 0.0 && foldAtFraction <= 1.0,
       s"foldAtFraction must be in (0, 1], got $foldAtFraction")
-    val v = latestVersion(spark, root)
-    if (VersionedLake.groupTableRelFiles(spark, root, Some(v))
-        .contains(Tombstones)) {
-      val dead = VersionedLake.tableRowCount(spark, root, Tombstones, Some(v))
-      val stored = VersionedLake.tableRowCount(spark, root, "encoded", Some(v))
+    val snap = latest(spark, root)
+    if (snap.tables.contains(Tombstones)) {
+      val dead = snap.rowCount(Tombstones)
+      val stored = snap.rowCount("encoded")
       if (stored > 0 && dead.toDouble / stored >= foldAtFraction) {
         foldTombstones(spark, root, idCol, keepVersions)
         ()
@@ -424,20 +424,11 @@ object AnnIndex {
       idCol: String, qdf0: DataFrame, k: Int, nprobe: Int,
       c: Int): DataFrame = {
     val qdf = qdf0.localCheckpoint()
-    val v = latestVersion(spark, root)
-    val coarse = VersionedLake.readTable(spark, root, "coarse", Some(v))
-    val books = VersionedLake.readTable(spark, root, "codebooks", Some(v))
-    val tomb = tombstonesOpt(spark, root, v, idCol)
-    val encoded = minusTombstones(
-      VersionedLake.readTable(spark, root, "encoded", Some(v),
-        schemaDDL = s"$idCol BIGINT, codes ARRAY<BIGINT>, cell BIGINT"),
-      tomb, idCol)
-    val quant = minusTombstones(
-      VersionedLake.readTable(spark, root, "quant", Some(v),
-        schemaDDL = s"$idCol BIGINT, q ARRAY<BIGINT>"),
-      tomb, idCol)
-    val approx = Similarity.ivfPqBatchTopKRerank(encoded, quant, idCol,
-      coarse, books, qdf, "query_id", "__q", nprobe, c, k)
+    val idx = new Stored(latest(spark, root), idCol)
+    val quant = idx.live(idx.quant)
+    val approx = Similarity.ivfPqBatchTopKRerank(idx.live(idx.encoded),
+      quant, idCol, idx.coarse, idx.books, qdf, "query_id", "__q", nprobe,
+      c, k)
       .select(col("query_id"), col(idCol))
     val exact = graft.plans.TopKPerKey(
       quant.crossJoin(broadcast(qdf))
@@ -464,21 +455,12 @@ object AnnIndex {
     */
   def search(spark: SparkSession, root: String, idCol: String,
       queryQuant: Array[Long], nprobe: Int, c: Int, n: Int): DataFrame = {
-    val v = latestVersion(spark, root)
-    val coarse = VersionedLake.readTable(spark, root, "coarse", Some(v))
-    val books = VersionedLake.readTable(spark, root, "codebooks", Some(v))
+    val idx = new Stored(latest(spark, root), idCol)
     // tombstoned ids are excluded BEFORE the ADC short-list forms — a
     // retired doc must not occupy one of the c slots and push a live
     // candidate out of the re-rank
-    val tomb = tombstonesOpt(spark, root, v, idCol)
-    val encoded = minusTombstones(
-      VersionedLake.readTable(spark, root, "encoded", Some(v),
-        schemaDDL = s"$idCol BIGINT, codes ARRAY<BIGINT>, cell BIGINT"),
-      tomb, idCol)
-    val quant = VersionedLake.readTable(spark, root, "quant", Some(v),
-      schemaDDL = s"$idCol BIGINT, q ARRAY<BIGINT>")
-    Similarity.ivfPqTopKRerank(encoded, quant, idCol, coarse, books,
-      queryQuant, nprobe, c, n)
+    Similarity.ivfPqTopKRerank(idx.live(idx.encoded), idx.quant, idCol,
+      idx.coarse, idx.books, queryQuant, nprobe, c, n)
   }
 
   /** Batch search over the stored index
@@ -500,20 +482,11 @@ object AnnIndex {
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
       nprobe: Int, c: Int, n: Int,
       scale: Int = Cluster.QuantScale): DataFrame = {
-    val v = latestVersion(spark, root)
-    val coarse = VersionedLake.readTable(spark, root, "coarse", Some(v))
-    val books = VersionedLake.readTable(spark, root, "codebooks", Some(v))
-    val tomb = tombstonesOpt(spark, root, v, idCol)
-    val encoded = minusTombstones(
-      VersionedLake.readTable(spark, root, "encoded", Some(v),
-        schemaDDL = s"$idCol BIGINT, codes ARRAY<BIGINT>, cell BIGINT"),
-      tomb, idCol)
-    val quant = VersionedLake.readTable(spark, root, "quant", Some(v),
-      schemaDDL = s"$idCol BIGINT, q ARRAY<BIGINT>")
+    val idx = new Stored(latest(spark, root), idCol)
     val q0 = queries.select(col(queryIdCol).cast("long").as(queryIdCol),
       Cluster.quantizeFloor(col(queryVecCol), scale).as("__q"))
-    Similarity.ivfPqBatchTopKRerank(encoded, quant, idCol, coarse, books,
-      q0, queryIdCol, "__q", nprobe, c, n)
+    Similarity.ivfPqBatchTopKRerank(idx.live(idx.encoded), idx.quant, idCol,
+      idx.coarse, idx.books, q0, queryIdCol, "__q", nprobe, c, n)
   }
 
   /** The outcome of a [[refit]]: whether the candidate passed the gate
@@ -595,10 +568,7 @@ object AnnIndex {
       candidateRoot: String, ptr: String, recallFloor: Double,
       keepFailedCandidate: Boolean): RefitResult = {
     val mean = dial.filter(col("query_id").isNull).head.getDouble(3)
-    val prevServed =
-      if (VersionedLake.versions(spark,
-        ptr).nonEmpty) Some(graft.sources.ServingPointer.resolve(spark, ptr))
-      else None
+    val prevServed = graft.sources.ServingPointer.current(spark, ptr)
     if (mean >= recallFloor) {
       graft.sources.ServingPointer.set(spark, ptr, candidateRoot)
       RefitResult(cut = true, mean, candidateRoot, Some(candidateRoot))

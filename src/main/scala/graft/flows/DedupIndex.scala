@@ -154,7 +154,7 @@ object DedupIndex {
       build(spark, docs, idCol, textCol, corpusPath, root, shingleN,
         numHashes, bands, subsetTag, layoutParts)
     }
-    // one version resolve for all three reads — the group guarantee makes
+    // one snapshot for all three reads — the group guarantee makes
     // the trio mutually consistent by construction. Explicit schemas on
     // the partitioned tables: partition-column INFERENCE would read the
     // ph/pb dir values back as INT, and the arrival path's typed pruning
@@ -162,14 +162,12 @@ object DedupIndex {
     // in a cast that defeats PartitionFilters.
     val idType = graft.sources.Lake.table(spark, sfDir, table)
       .schema(idCol).dataType.sql
-    val v = VersionedLake.versions(spark, finalDir).last
+    val snap = VersionedLake.snapshot(spark, finalDir)
     Index(
-      VersionedLake.readTable(spark, finalDir, "hashed", Some(v),
-        schemaDDL = s"id $idType, hs ARRAY<BIGINT>, " +
-          s"${Dedup.IdLayoutCol} BIGINT"),
-      VersionedLake.readTable(spark, finalDir, "banded", Some(v),
-        schemaDDL = s"id $idType, band INT, bucket BIGINT, " +
-          s"${Dedup.BandLayoutCol} BIGINT"),
-      VersionedLake.readTable(spark, finalDir, "pairs", Some(v)))
+      snap.read("hashed", schemaDDL = s"id $idType, hs ARRAY<BIGINT>, " +
+        s"${Dedup.IdLayoutCol} BIGINT"),
+      snap.read("banded", schemaDDL = s"id $idType, band INT, " +
+        s"bucket BIGINT, ${Dedup.BandLayoutCol} BIGINT"),
+      snap.read("pairs"))
   }
 }

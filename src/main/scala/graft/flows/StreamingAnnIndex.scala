@@ -21,7 +21,7 @@ import graft.sources.VersionedLake
   * batch id as its `applied` watermark, through the lake's one
   * race-detected commit loop ([[VersionedLake.commitLoop]]). Each attempt
   * reads the watermark from the base it chains from
-  * ([[VersionedLake.GroupCommit.appliedAtBase]]); a batch replayed after
+  * ([[VersionedLake.GroupCommit.base]]'s `applied`); a batch replayed after
   * a crash (committed but not yet checkpointed) releases its claim and
   * publishes nothing — without that a replay would append the same codes
   * TWICE and a later search could return duplicate ids inside its top-n.

@@ -28,7 +28,7 @@ import graft.sources.VersionedLake
   * manifest carries the batch id as its `applied` watermark — atomically
   * visible or not at all. Each batch claims its version first and reads
   * the watermark from the base it chains from
-  * ([[VersionedLake.GroupCommit.appliedAtBase]]); a batch replayed after
+  * ([[VersionedLake.GroupCommit.base]]'s `applied`); a batch replayed after
   * a crash (committed but not yet checkpointed) releases the claim and
   * publishes nothing, so a kill at ANY point between micro-batches
   * re-lands the identical final state (q116b runs the kill-and-resume
@@ -119,8 +119,7 @@ object StreamingDedup {
         stabilize = Some(_.localCheckpoint()))
       try {
         // every stored read pinned to the commit's own base
-        val dropped = Dedup.storedIncrementalPairs(spark, root,
-            gc.basedOn, nh, nb)
+        val dropped = Dedup.storedIncrementalPairs(gc.base, nh, nb)
           .filter(col("jaccard") >= jaccardThreshold)
           .select(col("id_b")).distinct()
         val survivors = docs.select(col("__doc_id"))

@@ -135,7 +135,7 @@ private[flows] object StreamingRetention {
       body: VersionedLake.GroupCommit => Unit): Boolean = {
     val gc = VersionedLake.beginGroupCommit(spark, root)
     VersionedLake.runOrAbort(gc) {
-      if (gc.appliedAtBase.exists(batchId <= _)) { gc.abort(); false }
+      if (gc.base.flatMap(_.applied).exists(batchId <= _)) { gc.abort(); false }
       else {
         body(gc)
         gc.markApplied(batchId)
@@ -175,14 +175,13 @@ private[flows] object StreamingRetention {
     // retry path belongs)
     val gc = VersionedLake.beginGroupCommit(spark, root)
     VersionedLake.runOrAbort(gc) {
-    val v = gc.basedOn.get
+    // the commit's base answers table listing AND tiering for the whole
+    // pass — it was parsed once, at the claim
+    val base = gc.base.get
+    val v = base.version
+    val relByTable = base.tables
     val f = new Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // ONE manifest read answers table listing AND tiering for the whole
-    // pass — per-table accessor calls would re-list and re-parse the
-    // pre-compaction manifest (the cycle's largest) once per table, on
-    // every retention cadence hit
-    val relByTable = VersionedLake.groupTableRelFiles(spark, root, Some(v))
     // batched sizing: ONE recursive listing per distinct version
     // directory instead of one getFileStatus RPC per data file — the
     // per-file form is O(accrued files) sequential namenode/object-store
@@ -237,7 +236,7 @@ private[flows] object StreamingRetention {
         else {
           val smallBytes = small.map(p => sizes.getOrElse(p, 0L)).sum
           val n = LakeWriter.compactionFileCount(smallBytes, targetBytes)
-          val df = VersionedLake.readRelFiles(spark, root, small)
+          val df = base.readFiles(small)
           val repacked =
             if (pb.isEmpty) df.repartition(n)
             // hash on (partition cols, skew salt): one task group per

@@ -32,7 +32,7 @@ import graft.sources.VersionedLake
   * as its `applied` watermark — the carry re-lists the fitted model's
   * files in the new manifest for free, no data rewrite. Each batch claims
   * its version first and reads the watermark from the base it chains
-  * from ([[VersionedLake.GroupCommit.appliedAtBase]]); a batch replayed
+  * from ([[VersionedLake.GroupCommit.base]]'s `applied`); a batch replayed
   * after a crash (committed but not yet checkpointed) releases the claim
   * and publishes nothing — without that a replay would find its OWN rows
   * in `assignments` and drop the whole batch against itself.
@@ -108,14 +108,12 @@ object StreamingSemDeDup {
     val spark = batch.sparkSession
     StreamingRetention.applyOnce(spark, root, batchId) { gc =>
       // every read at the commit's own base (group consistency)
-      val v = gc.basedOn.get
-      val centroids = VersionedLake.readTable(spark, root, "centroids",
-        Some(v))
+      val base = gc.base.get
+      val centroids = base.read("centroids")
       // explicit schema: partition-column inference would read cid back
       // as INT and break the long contract downstream (same note as q111)
-      val assignments = VersionedLake.readTable(spark, root,
-        "assignments", Some(v), schemaDDL =
-          s"$idCol BIGINT, q ARRAY<BIGINT>, dist BIGINT, cid BIGINT")
+      val assignments = base.read("assignments", schemaDDL =
+        s"$idCol BIGINT, q ARRAY<BIGINT>, dist BIGINT, cid BIGINT")
       // assign the batch ONCE (one quantize+argmin kernel pass, eagerly
       // checkpointed): the same frame serves the survivor rule AND the
       // assignments append — previously assignStored ran twice per batch

@@ -179,7 +179,7 @@ object TrainingCorpus {
     * `survivors`) commits as ONE atomic [[VersionedLake]] group version
     * per batch, with the batch id as the manifest's `applied` watermark.
     * The batch claims its version first and reads the watermark from the
-    * base it chains from ([[VersionedLake.GroupCommit.appliedAtBase]]); a
+    * base it chains from ([[VersionedLake.GroupCommit.base]]); a
     * replayed batch id releases the claim and publishes nothing
     * (exactly-once). Index membership
     * follows the streams' "a dropped doc's near-dup status must not
@@ -212,7 +212,7 @@ object TrainingCorpus {
     val spark = batch.sparkSession
     StreamingRetention.applyOnce(spark, root, batchId) { gc =>
       // every stored read at the commit's own base (None: first batch)
-      val v = gc.basedOn
+      val base = gc.base
       val docs = batch.select(col("doc_id").cast("long").as("doc_id"),
         col("lang"), col("text"))
       // quality + fingerprint, materialized once: feeds the exact stage,
@@ -223,11 +223,8 @@ object TrainingCorpus {
         .localCheckpoint()
       val batchCanon = graft.plans.TopKPerKey(quality,
         Seq(col("fp")), Seq(col("doc_id").asc), 1)
-      val storedFps = v match {
-        case Some(vv) => VersionedLake.readTable(spark, root, "fps",
-          Some(vv), schemaDDL = "fp STRING")
-        case None => batchCanon.select(col("fp")).limit(0)
-      }
+      val storedFps = base.fold(batchCanon.select(col("fp")).limit(0))(
+        _.read("fps", schemaDDL = "fp STRING"))
       val exactKept = batchCanon.join(storedFps, Seq("fp"), "left_anti")
         .localCheckpoint()
       // eager localCheckpoint (same rationale as StreamingDedup.applyBatch):
@@ -238,7 +235,7 @@ object TrainingCorpus {
         stabilize = Some(_.localCheckpoint()))
       var lexKept: DataFrame = null
       try {
-        val droppedLex = Dedup.storedIncrementalPairs(spark, root, v, nh, nb)
+        val droppedLex = Dedup.storedIncrementalPairs(base, nh, nb)
           .filter(col("jaccard") >= jaccardThreshold)
           .select(col("id_b")).distinct()
         lexKept = exactKept
@@ -294,11 +291,9 @@ object TrainingCorpus {
           .select(col("doc_id"), col("lang"), col("c.start").as("start"),
             col("c.n_tokens").cast("long").as("n_tokens"),
             col("c.chunk").as("chunk"))
-        val storedPack = v match {
-          case Some(vv) => VersionedLake.readTable(spark, root, "packstate",
-            Some(vv), schemaDDL = "lang STRING, cum BIGINT")
-          case None => chunked.select(col("lang"), lit(0L).as("cum")).limit(0)
-        }
+        val storedPack = base.fold(
+            chunked.select(col("lang"), lit(0L).as("cum")).limit(0))(
+          _.read("packstate", schemaDDL = "lang STRING, cum BIGINT"))
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("lang")).orderBy(col("doc_id"), col("start"))
           .rowsBetween(org.apache.spark.sql.expressions.Window

@@ -603,8 +603,8 @@ object Dedup {
   /** The arrival pair step of the lake-backed lexical flows
     * ([[graft.flows.StreamingDedup]], [[graft.flows.TrainingCorpus]]):
     * the batch's index frames `nh`/`nb` against the `hashed`/`banded`
-    * tables stored at group version `base` of `root` — with no base yet
-    * (the first batch), against nothing. Explicit schemas: partition-column
+    * tables stored at group snapshot `base` — with no base yet (the first
+    * batch), against nothing. Explicit schemas: partition-column
     * inference would read the ph/pb dir values back as INT and the pruning
     * filters' BIGINT literals would cast the partition attribute, defeating
     * PartitionFilters. The path is the measured state-size dial
@@ -612,18 +612,17 @@ object Dedup {
     * clear ~1 GiB; below that the full-scan join's two passes cost less
     * than the pruned path's fixed per-batch toll.
     */
-  private[graft] def storedIncrementalPairs(spark: SparkSession,
-      root: String, base: Option[Long], nh: DataFrame,
+  private[graft] def storedIncrementalPairs(
+      base: Option[VersionedLake.Snapshot], nh: DataFrame,
       nb: DataFrame): DataFrame =
     base match {
       case None =>
         minHashIncrementalPairsFromIndexes(nh.limit(0), nb.limit(0), nh, nb)
-      case Some(v) =>
-        val sh = VersionedLake.readTable(spark, root, "hashed", Some(v),
+      case Some(snap) =>
+        val sh = snap.read("hashed",
           schemaDDL = s"id BIGINT, hs ARRAY<BIGINT>, $IdLayoutCol BIGINT")
-        val sb = VersionedLake.readTable(spark, root, "banded", Some(v),
-          schemaDDL =
-            s"id BIGINT, band INT, bucket BIGINT, $BandLayoutCol BIGINT")
+        val sb = snap.read("banded", schemaDDL =
+          s"id BIGINT, band INT, bucket BIGINT, $BandLayoutCol BIGINT")
         if (pruneStoredReads(sh, sb))
           minHashIncrementalPairsPruned(sh, sb, nh, nb)
         else minHashIncrementalPairsFromIndexes(sh, sb, nh, nb)

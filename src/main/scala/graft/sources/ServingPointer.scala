@@ -40,14 +40,20 @@ object ServingPointer {
     VersionedLake.commit(
       spark.createDataFrame(java.util.List.of(Row(root)), schema), ptr)
 
+  /** The currently served root, or None when the pointer was never set
+    * — one manifest-directory listing answers both.
+    */
+  def current(spark: SparkSession, ptr: String): Option[String] =
+    VersionedLake.tryRead(spark, ptr, schemaDDL = "root STRING")
+      .map(_.head.getString(0))
+
   /** The currently served root. Branded on an unset pointer — a typo'd
     * pointer path must not surface as a bare "no committed versions".
     */
   def resolve(spark: SparkSession, ptr: String): String = {
-    require(VersionedLake.versions(spark, ptr).nonEmpty,
-      s"no serving pointer at $ptr (set it first)")
-    VersionedLake.read(spark, ptr, schemaDDL = "root STRING")
-      .head.getString(0)
+    val root = current(spark, ptr)
+    require(root.nonEmpty, s"no serving pointer at $ptr (set it first)")
+    root.get
   }
 
   /** Every root this pointer has ever served, one row per cut in commit

@@ -422,16 +422,34 @@ object VersionedLake {
       schemaDDL: String = null,
       manifestStore: Option[ManifestStore] = None): DataFrame = {
     val store = storeFor(spark, table, manifestStore)
-    val v = resolveVersion(store, table, version)
+    readVersion(spark, store, table, resolveVersion(store, table, version),
+      mergeSchema, schemaDDL)
+  }
+
+  /** [[read]] of the latest version tolerating an uncommitted table
+    * (None) — ONE manifest-directory listing answers both "does it exist"
+    * and "read it".
+    */
+  private[sources] def tryRead(spark: SparkSession, table: String,
+      schemaDDL: String = null): Option[DataFrame] = {
+    val store = storeFor(spark, table, None)
+    store.committedVersions().lastOption.map(
+      readVersion(spark, store, table, _, mergeSchema = true, schemaDDL))
+  }
+
+  private def readVersion(spark: SparkSession, store: ManifestStore,
+      table: String, v: Long, mergeSchema: Boolean,
+      schemaDDL: String): DataFrame = {
     val files = manifestFiles(store, table, v)
     require(files.nonEmpty, s"version $v of $table lists no files")
     readFiles(spark, table, files, mergeSchema, schemaDDL)
   }
 
   /** Union read over EVERY committed version's file list (distinct
-    * paths) — for MONOTONE, duplicate-tolerant, append-only tables (a
-    * progress ledger, an audit trail), NOT a general time-travel read
-    * (on an overwrite table it would resurrect replaced data).
+    * paths), or None for an uncommitted table — for MONOTONE,
+    * duplicate-tolerant, append-only tables (a progress ledger, an audit
+    * trail), NOT a general time-travel read (on an overwrite table it
+    * would resurrect replaced data).
     *
     * Why it exists: the append-mode concurrency contract lets two racing
     * appends each chain from the same base, so the LATER manifest omits
@@ -442,16 +460,7 @@ object VersionedLake {
     * the carried files many times over. Per-batch crash atomicity is
     * unchanged (uncommitted `_data` dirs are in no manifest). Corollary
     * for vacuum: don't vacuum such a table past an unmerged fork —
-    * vacuum keeps only files referenced by manifests ≥ `keepFrom`.
-    */
-  def readAllVersions(spark: SparkSession, table: String,
-      mergeSchema: Boolean = true, schemaDDL: String = null,
-      manifestStore: Option[ManifestStore] = None): DataFrame =
-    tryReadAllVersions(spark, table, mergeSchema, schemaDDL, manifestStore)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no committed versions at $table"))
-
-  /** [[readAllVersions]] tolerating an uncommitted table (None) — ONE
+    * vacuum keeps only files referenced by manifests ≥ `keepFrom`. ONE
     * manifest-directory listing answers both "does it exist" and "read
     * it", so a per-micro-batch resume poll doesn't pay a second LIST on
     * an object store just to pre-check emptiness.
@@ -530,14 +539,67 @@ object VersionedLake {
     t.nonEmpty && t.matches("[A-Za-z0-9][A-Za-z0-9_.-]*") &&
       t != "version" && t != "tables" && t != "files"
 
-  /** A parsed group manifest: per-table file lists plus the optional
-    * `applied` watermark.
+  /** One committed version of the group at `root`, resolved and parsed
+    * ONCE: every member table's MANIFEST-RELATIVE file list and the
+    * `applied` stream watermark (None: no batch applied yet). A published
+    * manifest is immutable, so every read through one snapshot is pinned
+    * to [[version]] — mutually consistent across members, and unmoved by
+    * any commit that lands after the snapshot was taken. A reader takes
+    * ONE snapshot and reads every member it needs from it; a writer reads
+    * its commit's base through [[GroupCommit.base]].
     */
-  private final case class GroupManifest(tables: Map[String, Seq[String]],
-      applied: Option[Long])
+  final class Snapshot private[VersionedLake] (spark: SparkSession,
+      root: String, val version: Long, val tables: Map[String, Seq[String]],
+      val applied: Option[Long]) {
 
-  private def groupManifest(store: ManifestStore, root: String,
-      version: Long): GroupManifest = {
+    private def files(table: String): Seq[String] =
+      tables.getOrElse(table, throw new java.io.FileNotFoundException(
+        s"table $table not in group v$version at $root"))
+
+    /** Read member `table` (`mergeSchema`/`schemaDDL` as in
+      * [[VersionedLake.read]]).
+      */
+    def read(table: String, mergeSchema: Boolean = true,
+        schemaDDL: String = null): DataFrame = {
+      val fs = files(table)
+      require(fs.nonEmpty,
+        s"table $table of group v$version at $root lists no files")
+      VersionedLake.readFiles(spark, root, fs, mergeSchema, schemaDDL)
+    }
+
+    /** Read an explicit SUBSET of this snapshot's manifest-relative files
+      * — the incremental-compaction read path: a retention pass reads
+      * only the small-file tail it is about to rewrite, never the carried
+      * large files. Partition columns are recovered per version directory
+      * exactly as [[read]] does.
+      */
+    def readFiles(rel: Seq[String]): DataFrame = {
+      require(rel.nonEmpty, s"readFiles with no files at $root")
+      VersionedLake.readFiles(spark, root, rel, mergeSchema = true,
+        schemaDDL = null)
+    }
+
+    /** Row count of member `table` from parquet FOOTERS only — O(files)
+      * driver-side footer reads (a few KB each, summed row-group counts),
+      * no data pages, no executors, no Spark job. What a maintenance
+      * policy reads to price a rewrite decision (e.g.
+      * [[graft.flows.AnnIndex.maintainAndFold]]'s tombstone-fraction
+      * dial) without paying a scan: at 100 TB the manifest's file list is
+      * the bound, not the bytes.
+      */
+    def rowCount(table: String): Long = {
+      val conf = spark.sparkContext.hadoopConfiguration
+      files(table).map { rel =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new Path(root, rel), conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+    }
+  }
+
+  private def groupSnapshot(spark: SparkSession, store: ManifestStore,
+      root: String, version: Long): Snapshot = {
     val m = parseManifest(store, version)
     val tables = m.get("tables") match {
       case Some(JObject(fields)) => fields.map { case (t, v) =>
@@ -547,7 +609,8 @@ object VersionedLake {
       case _ => throw new IllegalStateException(
         s"v$version of $root is not a group manifest")
     }
-    GroupManifest(tables, m.get("applied").collect { case JInt(b) => b.toLong })
+    new Snapshot(spark, root, version, tables,
+      m.get("applied").collect { case JInt(b) => b.toLong })
   }
 
   /** An in-flight atomic multi-table commit: the version number is already
@@ -562,20 +625,15 @@ object VersionedLake {
     */
   final class GroupCommit private[VersionedLake] (spark: SparkSession,
       root: String, store: ManifestStore, val version: Long,
-      val basedOn: Option[Long]) {
-    // `basedOn` is the latest version COMMITTED when this commit claimed
-    // its number — exposed so a writer derives its reads and
-    // publishIfBaseIs base from the SAME version the commit chains from;
-    // its watermark and carry list come from [[appliedAtBase]] and
-    // [[carryAllExcept]]. A separately-read "latest" can sit one commit
-    // behind the claim (a fold landing in the gap), making carry() throw
-    // on a table the manifest no longer lists — a loud crash where a
-    // retry belongs.
-    //
-    // The base manifest is parsed once per commit: append carry lists,
-    // carry(), the two accessors and the sticky watermark all read it.
-    private lazy val base: Option[GroupManifest] =
-      basedOn.map(groupManifest(store, root, _))
+      val base: Option[Snapshot]) {
+    // `base` is the latest version COMMITTED when this commit claimed its
+    // number, parsed once — a writer reads its state, its watermark
+    // (`base.applied`) and its publishIfBaseIs version from it, so all
+    // derive from the SAME version the commit chains from; append carry
+    // lists, carry(), [[carryAllExcept]] and the sticky watermark read it
+    // too. A separately-read "latest" can sit one commit behind the claim
+    // (a fold landing in the gap), making carry() throw on a table the
+    // manifest no longer lists — a loud crash where a retry belongs.
     private var applied: Option[Long] = None
     private val staged =
       scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
@@ -711,8 +769,8 @@ object VersionedLake {
       * and rewrites only the small-file tail, so its I/O is O(new data
       * since the last pass), not O(accumulated state). `carriedFiles` are
       * manifest-relative paths and must belong to `table` (enforced) —
-      * they normally come from the previous group manifest
-      * ([[groupTableRelFiles]]); the vacuum keeps them alive because the
+      * they normally come from the base manifest ([[base]]'s `tables`);
+      * the vacuum keeps them alive because the
       * published manifest references them, whichever `_data/v{K}`
       * directory they live in.
       */
@@ -784,14 +842,9 @@ object VersionedLake {
         s"no previous version at $root to carry $table from"))
       staged(table) = prev.tables.getOrElse(table,
         throw new IllegalArgumentException(
-          s"table $table not present in v${basedOn.get} of $root"))
+          s"table $table not present in v${prev.version} of $root"))
       ()
     }
-
-    /** The base version's stream watermark (None: no base, or no batch
-      * applied yet) — what tells an exactly-once writer's replay apart.
-      */
-    def appliedAtBase: Option[Long] = base.flatMap(_.applied)
 
     /** [[carry]] every base-version table except `written`, in sorted
       * order — optional members included (see [[carry]] for why).
@@ -878,8 +931,12 @@ object VersionedLake {
       manifestStore: Option[ManifestStore] = None): GroupCommit = {
     val store = storeFor(spark, root, manifestStore)
     val next = claimNext(store, root, maxAttempts)
-    new GroupCommit(spark, root, store, next,
-      store.committedVersions().lastOption)
+    // a base that fails to parse releases the claim it would have burned
+    val base =
+      try store.committedVersions().lastOption
+        .map(groupSnapshot(spark, store, root, _))
+      catch { case e: Throwable => store.deleteClaim(next); throw e }
+    new GroupCommit(spark, root, store, next, base)
   }
 
   /** Commit several tables as ONE atomic version of the group at `root`.
@@ -896,22 +953,27 @@ object VersionedLake {
     gc.publish()
   }
 
+  /** The group at `root` at one version (default: latest): ONE
+    * committed-version listing and ONE manifest parse, however many
+    * members are then read (see [[Snapshot]]).
+    */
+  def snapshot(spark: SparkSession, root: String,
+      version: Option[Long] = None,
+      manifestStore: Option[ManifestStore] = None): Snapshot = {
+    val store = storeFor(spark, root, manifestStore)
+    groupSnapshot(spark, store, root, resolveVersion(store, root, version))
+  }
+
   /** Read one member table of the group at `root` (default: latest
-    * version). The version resolves ONCE for the whole group, so two
-    * `readTable` calls at the same pinned version are guaranteed mutually
-    * consistent; callers wanting cross-table consistency at "latest"
-    * resolve `versions(...).last` once and pin it.
+    * version). A caller reading more than one member takes one
+    * [[snapshot]] instead, which pins them all to the same version.
     */
   def readTable(spark: SparkSession, root: String, table: String,
       version: Option[Long] = None, mergeSchema: Boolean = true,
       schemaDDL: String = null,
-      manifestStore: Option[ManifestStore] = None): DataFrame = {
-    val store = storeFor(spark, root, manifestStore)
-    val v = resolveVersion(store, root, version)
-    val files = memberFiles(store, root, v, table)
-    require(files.nonEmpty, s"table $table of group v$v at $root lists no files")
-    readFiles(spark, root, files, mergeSchema, schemaDDL)
-  }
+      manifestStore: Option[ManifestStore] = None): DataFrame =
+    snapshot(spark, root, version, manifestStore)
+      .read(table, mergeSchema, schemaDDL)
 
   /** Resolve a requested version against the committed list — the ONE
     * definition of "no versions" / "version not present" (the specs
@@ -926,82 +988,6 @@ object VersionedLake {
     v
   }
 
-  /** One member table's file list, with the shared missing-table error. */
-  private def memberFiles(store: ManifestStore, root: String, v: Long,
-      table: String): Seq[String] =
-    groupManifest(store, root, v).tables.getOrElse(table,
-      throw new java.io.FileNotFoundException(
-        s"table $table not in group v$v at $root"))
-
-  /** Absolute data-file paths of one member table at a version (default:
-    * latest) — what a retention pass stats to size its compaction rewrite
-    * (file COUNT and BYTES without reading any data).
-    */
-  def tableFiles(spark: SparkSession, root: String, table: String,
-      version: Option[Long] = None,
-      manifestStore: Option[ManifestStore] = None): Seq[String] = {
-    val store = storeFor(spark, root, manifestStore)
-    val v = resolveVersion(store, root, version)
-    memberFiles(store, root, v, table)
-      .map(rel => new Path(root, rel).toString)
-  }
-
-  /** The stream watermark (`applied`) published with group `version`;
-    * None when that version carries none (no stream has committed a
-    * batch). One manifest read, no Spark job — the exactly-once flows
-    * consult it before every micro-batch.
-    */
-  def lastApplied(spark: SparkSession, root: String, version: Long,
-      manifestStore: Option[ManifestStore] = None): Option[Long] =
-    groupManifest(storeFor(spark, root, manifestStore), root, version).applied
-
-  /** Row count of one member table at a version (default: latest) from
-    * parquet FOOTERS only — O(files) driver-side footer reads (a few KB
-    * each, summed row-group counts), no data pages, no executors, no
-    * Spark job. What a maintenance policy reads to price a rewrite
-    * decision (e.g. [[graft.flows.AnnIndex.maintainAndFold]]'s
-    * tombstone-fraction dial) without paying a scan: at 100 TB the
-    * manifest's file list is the bound, not the bytes.
-    */
-  def tableRowCount(spark: SparkSession, root: String, table: String,
-      version: Option[Long] = None,
-      manifestStore: Option[ManifestStore] = None): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    tableFiles(spark, root, table, version, manifestStore).map { p =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new Path(p), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
-  }
-
-  /** Every member table's MANIFEST-RELATIVE data-file paths at a version
-    * (default: latest) in ONE manifest read — the whole-group view a
-    * retention pass iterates ([[graft.flows.StreamingRetention]]) and what
-    * [[GroupCommit.writeWithCarried]] consumes (the manifest lists
-    * relative paths; a retention pass that carried absolute ones would
-    * publish a manifest no reader could resolve).
-    */
-  private[graft] def groupTableRelFiles(spark: SparkSession, root: String,
-      version: Option[Long] = None,
-      manifestStore: Option[ManifestStore] = None): Map[String, Seq[String]] = {
-    val store = storeFor(spark, root, manifestStore)
-    groupManifest(store, root, resolveVersion(store, root, version)).tables
-  }
-
-  /** Read an explicit SUBSET of a group's manifest-relative files — the
-    * incremental-compaction read path: a retention pass reads only the
-    * small-file tail it is about to rewrite, never the carried large
-    * files. Partition columns are recovered per version directory exactly
-    * as [[readTable]] does.
-    */
-  private[graft] def readRelFiles(spark: SparkSession, root: String,
-      files: Seq[String], mergeSchema: Boolean = true,
-      schemaDDL: String = null): DataFrame = {
-    require(files.nonEmpty, s"readRelFiles with no files at $root")
-    readFiles(spark, root, files, mergeSchema, schemaDDL)
-  }
-
   /** Group analog of [[vacuum]]: delete member-table data files referenced
     * by NO group manifest ≥ `keepFrom`, plus older manifests and expired
     * crashed claims. Same in-flight protection as the single-table vacuum
@@ -1012,7 +998,7 @@ object VersionedLake {
       claimTtlMs: Long = 24L * 3600 * 1000,
       manifestStore: Option[ManifestStore] = None): Int =
     sweep(spark, root, keepFrom, claimTtlMs, manifestStore,
-      (store, v) => groupManifest(store, root, v).tables.values.flatten,
+      (store, v) => groupSnapshot(spark, store, root, v).tables.values.flatten,
       // member data roots: every first-level dir with a `_data` child (the
       // manifests' table keys cover committed tables; this sweep also
       // finds tables only ever staged by crashed commits)

@@ -28,7 +28,7 @@ import graft.operators.Relational
   * version intact and the whole batch either visible or not
   * (all-or-nothing, crash-interleaving pinned in ProgressLedgerSpec).
   *
-  * Reads are [[graft.sources.VersionedLake.readAllVersions]] — the union
+  * Reads are [[graft.sources.VersionedLake.tryReadAllVersions]] — the union
   * of EVERY committed version's files, which the ledger's monotone,
   * duplicate-tolerant semantics make exactly right: two pipelines racing
   * `markDone` on a shared ledger may each chain their append from the

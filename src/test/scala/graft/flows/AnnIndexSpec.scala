@@ -75,12 +75,12 @@ class AnnIndexSpec extends SparkSpec {
       "embedding", root, dims = 64, coarseK = 2, coarseIters = 2,
       m = 4, k = 2, iters = 2)
     val v1 = VersionedLake.versions(spark, root).last
-    val filesBefore = VersionedLake.groupTableRelFiles(spark, root, Some(v1))
+    val filesBefore = VersionedLake.snapshot(spark, root, Some(v1)).tables
     AnnIndex.append(emb.filter(col("vec_id") % 2 =!= 0), "vec_id",
       "embedding", root)
     val v2 = VersionedLake.versions(spark, root).last
     assert(v2 == v1 + 1)
-    val filesAfter = VersionedLake.groupTableRelFiles(spark, root, Some(v2))
+    val filesAfter = VersionedLake.snapshot(spark, root, Some(v2)).tables
     // model tables: IDENTICAL file lists (carried verbatim)
     assert(filesAfter("coarse") == filesBefore("coarse"))
     assert(filesAfter("codebooks") == filesBefore("codebooks"))
@@ -126,14 +126,14 @@ class AnnIndexSpec extends SparkSpec {
     AnnIndex.append(emb.filter(col("vec_id") % 10 === 5), "vec_id",
       "embedding", root)
     val vPre = VersionedLake.versions(spark, root).last
-    val before = VersionedLake.groupTableRelFiles(spark, root, Some(vPre))
+    val before = VersionedLake.snapshot(spark, root, Some(vPre)).tables
     val qq = quantOf(emb, 0L)
     def searchNow() = AnnIndex.search(spark, root, "vec_id", qq,
       nprobe = 2, c = 50, n = 20)
       .collect().map(r => (r.getLong(0), r.getLong(3))).toSeq
     val preCompact = searchNow()
     val nv = AnnIndex.maintain(spark, root)
-    val after = VersionedLake.groupTableRelFiles(spark, root, Some(nv))
+    val after = VersionedLake.snapshot(spark, root, Some(nv)).tables
     // model carried verbatim; data tables bin-packed below the old count
     assert(after("coarse") == before("coarse"))
     assert(after("codebooks") == before("codebooks"))
@@ -462,10 +462,10 @@ class AnnIndexSpec extends SparkSpec {
     val pre = searchNow()
     val victims = pre.map(_._1).filter(_ != 0L).take(2)
     val vBefore = VersionedLake.versions(spark, root).last
-    val before = VersionedLake.groupTableRelFiles(spark, root, Some(vBefore))
+    val before = VersionedLake.snapshot(spark, root, Some(vBefore)).tables
     AnnIndex.delete((victims :+ 999999L).toDF("vec_id"), "vec_id", root)
     val vAfter = VersionedLake.versions(spark, root).last
-    val after = VersionedLake.groupTableRelFiles(spark, root, Some(vAfter))
+    val after = VersionedLake.snapshot(spark, root, Some(vAfter)).tables
     // metadata-only: every pre-existing table's file list is carried
     // verbatim; the commit added ONLY the tombstone table
     before.keys.foreach(t => assert(after(t) == before(t), s"table $t"))
@@ -490,7 +490,7 @@ class AnnIndexSpec extends SparkSpec {
     AnnIndex.append(emb.filter(col("vec_id") % 5 === 0), "vec_id",
       "embedding", root)
     val vApp = VersionedLake.versions(spark, root).last
-    assert(VersionedLake.groupTableRelFiles(spark, root, Some(vApp))
+    assert(VersionedLake.snapshot(spark, root, Some(vApp)).tables
       .contains("tombstones"))
     assert(!searchNow().map(_._1).exists(victims.contains))
     // misuse is branded like the rest of the API
@@ -573,7 +573,7 @@ class AnnIndexSpec extends SparkSpec {
     deleter.join()
     assert(fired && deleteErr == null, s"delete thread failed: $deleteErr")
     val vLast = VersionedLake.versions(spark, root).last
-    val rel = VersionedLake.groupTableRelFiles(spark, root, Some(vLast))
+    val rel = VersionedLake.snapshot(spark, root, Some(vLast)).tables
     assert(rel.contains("tombstones"),
       "the concurrent retirement must survive the append")
     assert(VersionedLake.readTable(spark, root, "tombstones",
@@ -607,7 +607,7 @@ class AnnIndexSpec extends SparkSpec {
     // maintain with pending tombstones: compacted/carried, NEVER folded
     AnnIndex.maintain(spark, root)
     val vM = VersionedLake.versions(spark, root).last
-    assert(VersionedLake.groupTableRelFiles(spark, root, Some(vM))
+    assert(VersionedLake.snapshot(spark, root, Some(vM)).tables
       .contains("tombstones"))
     AnnIndex.delete(retiring.filter(col("vec_id") % 2 === 1), "vec_id", root)
     val qq = quantOf(emb, 0L)
@@ -648,7 +648,7 @@ class AnnIndexSpec extends SparkSpec {
     foldDone.countDown()
     appender.join()
     assert(appendErr == null, s"append thread failed: $appendErr")
-    val racedRel = VersionedLake.groupTableRelFiles(spark, root, Some(vRaced))
+    val racedRel = VersionedLake.snapshot(spark, root, Some(vRaced)).tables
     assert(racedRel.contains("tombstones"),
       "aborted fold must leave the retirements pending")
     assert(VersionedLake.readTable(spark, root, "encoded",
@@ -659,7 +659,7 @@ class AnnIndexSpec extends SparkSpec {
     // merge-on-read (anti-join) and fold-on-write (rewrite) are the
     // same index
     val folded = AnnIndex.foldTombstones(spark, root, "vec_id")
-    val rel = VersionedLake.groupTableRelFiles(spark, root, Some(folded))
+    val rel = VersionedLake.snapshot(spark, root, Some(folded)).tables
     assert(!rel.contains("tombstones"))
     assert(VersionedLake.readTable(spark, root, "encoded",
         schemaDDL = "vec_id BIGINT, codes ARRAY<BIGINT>, cell BIGINT")
@@ -686,27 +686,27 @@ class AnnIndexSpec extends SparkSpec {
     AnnIndex.append(emb.filter(col("vec_id") % 2 =!= 0), "vec_id",
       "embedding", root)
     // footer-summed counts == real counts on the multi-version layout
-    assert(VersionedLake.tableRowCount(spark, root, "encoded") == 60L)
-    assert(VersionedLake.tableRowCount(spark, root, "quant") == 60L)
+    assert(VersionedLake.snapshot(spark, root).rowCount("encoded") == 60L)
+    assert(VersionedLake.snapshot(spark, root).rowCount("quant") == 60L)
     // retire 2 of 60 (3.3%): under the default 20% threshold
     AnnIndex.delete(Seq(7L, 9L).toDF("vec_id"), "vec_id", root)
-    assert(VersionedLake.tableRowCount(spark, root, "tombstones") == 2L)
+    assert(VersionedLake.snapshot(spark, root).rowCount("tombstones") == 2L)
     val qq = quantOf(emb, 0L)
     def searchNow() = AnnIndex.search(spark, root, "vec_id", qq,
       nprobe = 2, c = 30, n = 10)
       .collect().map(r => (r.getLong(0), r.getLong(3))).toSeq
     val pre = searchNow()
     AnnIndex.maintainAndFold(spark, root, "vec_id")
-    assert(VersionedLake.groupTableRelFiles(spark, root, None)
+    assert(VersionedLake.snapshot(spark, root).tables
       .contains("tombstones"),
       "3.3% retired must stay merge-on-read under the 20% default")
     assert(searchNow() == pre)
     // a threshold below the measured fraction triggers the fold: dead
     // codes rewritten out, tombstone table dropped, search invariant
     AnnIndex.maintainAndFold(spark, root, "vec_id", foldAtFraction = 0.02)
-    val rel = VersionedLake.groupTableRelFiles(spark, root, None)
+    val rel = VersionedLake.snapshot(spark, root).tables
     assert(!rel.contains("tombstones"), "2/60 >= 2% must fold")
-    assert(VersionedLake.tableRowCount(spark, root, "encoded") == 58L)
+    assert(VersionedLake.snapshot(spark, root).rowCount("encoded") == 58L)
     assert(searchNow() == pre,
       "merge-on-read and fold-on-write are the same index")
     // idempotent: nothing pending, the next pass is compaction-only

@@ -44,7 +44,7 @@ class StreamingAnnIndexSpec extends SparkSpec {
     StreamingAnnIndex.setup(corpus, "vec_id", "embedding", root, dims = 64,
       coarseK = 2, coarseIters = 2, m = 4, k = 2, iters = 2)
     val v1 = VersionedLake.versions(spark, root).last
-    val model1 = VersionedLake.groupTableRelFiles(spark, root, Some(v1))
+    val model1 = VersionedLake.snapshot(spark, root, Some(v1)).tables
     assert(StreamingAnnIndex.applyBatch(b0, 0L, "vec_id", "embedding",
       root, graft.operators.Cluster.QuantScale))
     val afterB0 = codesCount(root)
@@ -59,7 +59,7 @@ class StreamingAnnIndexSpec extends SparkSpec {
       root, graft.operators.Cluster.QuantScale))
     assert(codesCount(root) == 60)
     // model carried verbatim through both batch commits
-    val latest = VersionedLake.groupTableRelFiles(spark, root)
+    val latest = VersionedLake.snapshot(spark, root).tables
     assert(latest("coarse") == model1("coarse"))
     assert(latest("codebooks") == model1("codebooks"))
     // the streamed index is search-identical to the batch API's
@@ -94,16 +94,16 @@ class StreamingAnnIndexSpec extends SparkSpec {
       .collect().map(x => (x.getLong(0), x.getLong(3))).toSeq
     val before = top()
     val vPre = VersionedLake.versions(spark, root).last
-    val model = VersionedLake.groupTableRelFiles(spark, root, Some(vPre))
-    val appliedPre = VersionedLake.lastApplied(spark, root, vPre)
+    val model = VersionedLake.snapshot(spark, root, Some(vPre)).tables
+    val appliedPre = VersionedLake.snapshot(spark, root, Some(vPre)).applied
     val nv = StreamingAnnIndex.compactState(spark, root, keepVersions = 1)
     assert(nv > vPre)
-    val after = VersionedLake.groupTableRelFiles(spark, root, Some(nv))
+    val after = VersionedLake.snapshot(spark, root, Some(nv)).tables
     assert(after("coarse") == model("coarse"))
     assert(after("codebooks") == model("codebooks"))
     // the watermark is a manifest field the compacting commit keeps
     assert(appliedPre == Some(1L))
-    assert(VersionedLake.lastApplied(spark, root, nv) == appliedPre)
+    assert(VersionedLake.snapshot(spark, root, Some(nv)).applied == appliedPre)
     // each cell dir had 3 small files (setup + 2 batches) -> re-packed
     assert(after("encoded").size < model("encoded").size)
     assert(top() == before)
@@ -149,9 +149,9 @@ class StreamingAnnIndexSpec extends SparkSpec {
     AnnIndex.delete(Seq(2L, 4L).toDF("vec_id"), "vec_id", root)
     val vDel = VersionedLake.versions(spark, root).last
     assert(vDel > vPre)
-    assert(VersionedLake.lastApplied(spark, root, vDel) == Some(0L))
-    assert(VersionedLake.lastApplied(spark, root, vDel) ==
-      VersionedLake.lastApplied(spark, root, vPre))
+    assert(VersionedLake.snapshot(spark, root, Some(vDel)).applied == Some(0L))
+    assert(VersionedLake.snapshot(spark, root, Some(vDel)).applied ==
+      VersionedLake.snapshot(spark, root, Some(vPre)).applied)
     assert(!StreamingAnnIndex.applyBatch(emb.filter(col("vec_id") % 4 === 1),
       0L, "vec_id", "embedding", root, graft.operators.Cluster.QuantScale),
       "a replay across the retirement must short-circuit")
@@ -159,13 +159,13 @@ class StreamingAnnIndexSpec extends SparkSpec {
     assert(StreamingAnnIndex.applyBatch(emb.filter(col("vec_id") % 4 === 3),
       1L, "vec_id", "embedding", root, graft.operators.Cluster.QuantScale))
     val vLast = VersionedLake.versions(spark, root).last
-    assert(VersionedLake.groupTableRelFiles(spark, root, Some(vLast))
+    assert(VersionedLake.snapshot(spark, root, Some(vLast)).tables
       .contains("tombstones"),
       "the batch commit must carry the pending retirements")
     StreamingAnnIndex.compactState(spark, root,
       targetBytes = 1L * 1024 * 1024)
     val vC = VersionedLake.versions(spark, root).last
-    assert(VersionedLake.groupTableRelFiles(spark, root, Some(vC))
+    assert(VersionedLake.snapshot(spark, root, Some(vC)).tables
       .contains("tombstones"),
       "retention compacts the tombstone table, never drops it")
     val top = AnnIndex.search(spark, root, "vec_id", quantOf(emb, 2L),
@@ -208,7 +208,7 @@ class StreamingAnnIndexSpec extends SparkSpec {
     deleter.join()
     assert(fired && deleteErr == null, s"delete thread failed: $deleteErr")
     val vLast = VersionedLake.versions(spark, root).last
-    assert(VersionedLake.groupTableRelFiles(spark, root, Some(vLast))
+    assert(VersionedLake.snapshot(spark, root, Some(vLast)).tables
       .contains("tombstones"),
       "the interleaved retirement must survive the batch commit")
     assert(codesCount(root) == 60, "the raced batch's codes must land")
@@ -227,7 +227,7 @@ class StreamingAnnIndexSpec extends SparkSpec {
       m = 4, k = 2, iters = 2)
     val b0 = emb.filter(col("vec_id") % 2 === 1)
     val v1 = VersionedLake.versions(spark, root).last
-    assert(VersionedLake.lastApplied(spark, root, v1).isEmpty)
+    assert(VersionedLake.snapshot(spark, root, Some(v1)).applied.isEmpty)
     // raceWindow runs after markApplied and before the publish
     val e = intercept[IllegalStateException] {
       StreamingAnnIndex.applyBatch(b0, 0L, "vec_id", "embedding", root,
@@ -236,12 +236,12 @@ class StreamingAnnIndexSpec extends SparkSpec {
     }
     assert(e.getMessage == "killed")
     assert(VersionedLake.versions(spark, root) == Seq(v1))
-    assert(VersionedLake.lastApplied(spark, root, v1).isEmpty)
+    assert(VersionedLake.snapshot(spark, root, Some(v1)).applied.isEmpty)
     assert(codesCount(root) == 30)
     assert(StreamingAnnIndex.applyBatch(b0, 0L, "vec_id", "embedding", root,
       graft.operators.Cluster.QuantScale))
     val v2 = VersionedLake.versions(spark, root).last
-    assert(VersionedLake.lastApplied(spark, root, v2) == Some(0L))
+    assert(VersionedLake.snapshot(spark, root, Some(v2)).applied == Some(0L))
     assert(codesCount(root) == 60)
   }
 }

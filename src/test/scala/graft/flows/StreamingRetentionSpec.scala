@@ -48,7 +48,7 @@ class StreamingRetentionSpec extends SparkSpec {
       ()
     }
     def tFiles(): Seq[String] =
-      VersionedLake.groupTableRelFiles(spark, root)("t")
+      VersionedLake.snapshot(spark, root).tables("t")
     // a fat first commit makes the pass-1 output strictly larger than any
     // later single-row append, so the size tiers are unambiguous whatever
     // the parquet footer overhead is
@@ -118,7 +118,7 @@ class StreamingRetentionSpec extends SparkSpec {
       .repartition(4), mode = "append", partitionBy = Seq("cid"))
     gc2.carry("applied")
     gc2.publish()
-    val hotBytes = VersionedLake.groupTableRelFiles(spark, root)("t")
+    val hotBytes = VersionedLake.snapshot(spark, root).tables("t")
       .filter(_.contains("cid=1"))
       .map(rel => new java.io.File(s"$root/$rel").length()).sum
     // target chosen so the hot value MUST split (≥ 3 buckets) and the
@@ -127,7 +127,7 @@ class StreamingRetentionSpec extends SparkSpec {
     val nv = StreamingRetention.compactState(spark, root, target,
       carryTables = Set("applied"), partitioned = Map("t" -> Seq("cid")),
       keepVersions = 1)
-    val after = VersionedLake.groupTableRelFiles(spark, root, Some(nv))("t")
+    val after = VersionedLake.snapshot(spark, root, Some(nv)).tables("t")
     val hotFiles = after.filter(_.contains("cid=1"))
     val coldFiles = after.filter(_.contains("cid=2"))
     assert(hotFiles.size >= 2,
@@ -156,7 +156,7 @@ class StreamingRetentionSpec extends SparkSpec {
     StreamingRetention.compactState(spark, root,
       targetBytes = 64L * 1024 * 1024, carryTables = Set("applied"),
       partitioned = Map("t" -> Seq("cid")), keepVersions = 1)
-    def tFiles() = VersionedLake.groupTableRelFiles(spark, root)("t")
+    def tFiles() = VersionedLake.snapshot(spark, root).tables("t")
     val Seq(quiet) = tFiles().filter(_.contains("cid=2"))
     val m0 = mtime(root, quiet)
     // one new append lands in cid=1 ONLY: cid=2 stays a solo-file dir
@@ -201,14 +201,14 @@ class StreamingRetentionSpec extends SparkSpec {
       .repartition(4), mode = "append", partitionBy = Seq("cid"))
     gc2.carry("applied")
     gc2.publish()
-    val hotBytes = VersionedLake.groupTableRelFiles(spark, root)("t")
+    val hotBytes = VersionedLake.snapshot(spark, root).tables("t")
       .filter(_.contains("__HIVE_DEFAULT_PARTITION__"))
       .map(rel => new java.io.File(s"$root/$rel").length()).sum
     assert(hotBytes > 0, "fixture must land a null-partition dir")
     val nv = StreamingRetention.compactState(spark, root, hotBytes / 3,
       carryTables = Set("applied"), partitioned = Map("t" -> Seq("cid")),
       keepVersions = 1)
-    val after = VersionedLake.groupTableRelFiles(spark, root, Some(nv))("t")
+    val after = VersionedLake.snapshot(spark, root, Some(nv)).tables("t")
     assert(after.count(_.contains("__HIVE_DEFAULT_PARTITION__")) >= 2,
       s"hot NULL value must salt-split: $after")
     // rows (null cids included) survive the salted rewrite

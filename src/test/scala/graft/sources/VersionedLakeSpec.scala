@@ -520,7 +520,7 @@ class VersionedLakeSpec extends SparkSpec {
     } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     // one task wrote five files: same partition number, same attempt UUID
     val partFile = "part-(\\d+)-([0-9a-fA-F-]{36})".r.unanchored
-    val ids = VersionedLake.tableFiles(spark, root, "t")
+    val ids = VersionedLake.snapshot(spark, root).tables("t")
       .map(p => new org.apache.hadoop.fs.Path(p).getName)
       .collect { case partFile(num, uuid) => (num, uuid) }
     assert(ids.size == 5)
@@ -553,8 +553,8 @@ class VersionedLakeSpec extends SparkSpec {
     val group = VersionedLake.readTable(spark, root, "t")
     assert(group.columns.toSeq.sorted == Seq("k", "v"))
     assert(rows(group) == want)
-    assert(VersionedLake.groupTableRelFiles(spark, root, Some(2L)) ==
-      VersionedLake.groupTableRelFiles(spark, root, Some(1L)))
+    assert(VersionedLake.snapshot(spark, root, Some(2L)).tables ==
+      VersionedLake.snapshot(spark, root, Some(1L)).tables)
   }
 
   test("manifest codec reads manifests in the exact bytes the hand-rolled " +
@@ -608,11 +608,11 @@ class VersionedLakeSpec extends SparkSpec {
     // a new commit chains from the legacy manifest without losing files
     VersionedLake.commit(Seq(8).toDF("v"), tbl, mode = "append")
     assert(VersionedLake.read(spark, tbl).count() == 4)
-    assert(VersionedLake.groupTableRelFiles(spark, root, Some(1L)) == Map(
+    assert(VersionedLake.snapshot(spark, root, Some(1L)).tables == Map(
       "t" -> Seq(s"t/_data/v1/$oddRaw/part-00000-1.parquet"),
       "u.x" -> Seq("u.x/_data/v1/k=café 日本/part-00000-3.parquet",
         "u.x/_data/v1/k=a,b/part-00001-3.parquet")))
-    assert(VersionedLake.lastApplied(spark, root, 1L).isEmpty)
+    assert(VersionedLake.snapshot(spark, root, Some(1L)).applied.isEmpty)
     assert(kv(VersionedLake.readTable(spark, root, "u.x",
       schemaDDL = "v INT, k STRING")) == Seq(("a,b", 7), ("café 日本", 7)))
     // the raw `]` and `\` are read as a literal path, not a glob pattern
@@ -629,21 +629,21 @@ class VersionedLakeSpec extends SparkSpec {
     "across commits that do not mark, vacuum included") {
     val root = Files.createTempDirectory("vlakeg-applied").toString
     VersionedLake.commitAll(Seq("t" -> Seq(1L).toDF("x")), root)
-    assert(VersionedLake.lastApplied(spark, root, 1L).isEmpty)
+    assert(VersionedLake.snapshot(spark, root, Some(1L)).applied.isEmpty)
     val gc = VersionedLake.beginGroupCommit(spark, root)
     gc.write("t", Seq(2L).toDF("x"), mode = "append")
     gc.markApplied(5L)
     assert(gc.publish() == 2L)
-    assert(VersionedLake.lastApplied(spark, root, 2L) == Some(5L))
+    assert(VersionedLake.snapshot(spark, root, Some(2L)).applied == Some(5L))
     // carry-only and overwrite commits keep it without naming it
     val gc2 = VersionedLake.beginGroupCommit(spark, root)
     gc2.carry("t")
     gc2.publish()
     VersionedLake.commitAll(Seq("u" -> Seq(3L).toDF("x")), root)
-    assert(VersionedLake.lastApplied(spark, root, 4L) == Some(5L))
+    assert(VersionedLake.snapshot(spark, root, Some(4L)).applied == Some(5L))
     // the watermark survives the vacuum of every version that set it
     VersionedLake.vacuumGroup(spark, root, keepFrom = 4L)
-    assert(VersionedLake.lastApplied(spark, root, 4L) == Some(5L))
+    assert(VersionedLake.snapshot(spark, root, Some(4L)).applied == Some(5L))
   }
 
   test("staging writes run under the submitter's Spark job group, not " +
@@ -707,7 +707,7 @@ class VersionedLakeSpec extends SparkSpec {
         rival.carryAllExcept(Set("c"))
         rival.write("c", Seq(attempts.toLong).toDF("x"))
         rival.publish()
-        gc.publishIfBaseIs(gc.basedOn.get)
+        gc.publishIfBaseIs(gc.base.get.version)
       }
     }
     assert(attempts == 3)
@@ -741,12 +741,12 @@ class VersionedLakeSpec extends SparkSpec {
     gc1.carryAllExcept(Set("tombstones"))
     gc1.write("tombstones", Seq(1L).toDF("id"), mode = "append")
     gc1.publish()
-    val v2 = VersionedLake.groupTableRelFiles(spark, root, Some(2L))
+    val v2 = VersionedLake.snapshot(spark, root, Some(2L)).tables
     val gc2 = VersionedLake.beginGroupCommit(spark, root)
     gc2.carryAllExcept(Set("encoded"))
     gc2.write("encoded", Seq(2L).toDF("id"), mode = "append")
     gc2.publish()
-    val v3 = VersionedLake.groupTableRelFiles(spark, root, Some(3L))
+    val v3 = VersionedLake.snapshot(spark, root, Some(3L)).tables
     assert(v3.keySet == Set("encoded", "model", "tombstones"))
     assert(v3("tombstones") == v2("tombstones"))
     assert(v3("model") == v2("model"))
@@ -780,5 +780,114 @@ class VersionedLakeSpec extends SparkSpec {
     val rows = VersionedLake.read(spark, tbl, schemaDDL = "v INT, k STRING")
       .collect().map(r => (r.getAs[String]("k"), r.getAs[Int]("v")))
     assert(rows.sorted.toSeq == dirs.map(_ -> 7).sorted)
+  }
+
+  /** A [[HadoopManifestStore]] that counts committed-version listings and
+    * manifest reads.
+    */
+  private final class CountingStore(inner: ManifestStore)
+      extends ManifestStore {
+    var listings = 0
+    var reads = 0
+    def committedVersions(): Seq[Long] = {
+      listings += 1; inner.committedVersions()
+    }
+    def claimedVersions(): Seq[Long] = inner.claimedVersions()
+    def tryClaim(version: Long): Boolean = inner.tryClaim(version)
+    def publish(version: Long, manifest: Array[Byte]): Boolean =
+      inner.publish(version, manifest)
+    def readManifest(version: Long): Array[Byte] = {
+      reads += 1; inner.readManifest(version)
+    }
+    def deleteManifest(version: Long): Unit = inner.deleteManifest(version)
+    def deleteClaim(version: Long): Unit = inner.deleteClaim(version)
+    def claimModifiedAtMs(version: Long): Option[Long] =
+      inner.claimModifiedAtMs(version)
+  }
+
+  private def countingStore(root: String): CountingStore =
+    new CountingStore(new HadoopManifestStore(new org.apache.hadoop.fs.Path(
+      root).getFileSystem(spark.sparkContext.hadoopConfiguration), root))
+
+  test("snapshot: one listing and one manifest read however many members " +
+    "it reads; a group commit parses its base once") {
+    val root = Files.createTempDirectory("vlakeg-snapcount").toString
+    val gc0 = VersionedLake.beginGroupCommit(spark, root)
+    gc0.writeAll(Seq("a", "b", "c").map(t =>
+      (t, Seq(1L, 2L).toDF("x"), "overwrite", Seq.empty[String])))
+    gc0.markApplied(3L)
+    gc0.publish()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[Long].collect().sorted.toSeq
+    val store = countingStore(root)
+    val snap = VersionedLake.snapshot(spark, root,
+      manifestStore = Some(store))
+    assert(Seq("a", "b", "c").map(t => rows(snap.read(t))) ==
+      Seq.fill(3)(Seq(1L, 2L)))
+    assert(snap.rowCount("b") == 2L)
+    assert(snap.applied == Some(3L))
+    assert((store.listings, store.reads) == ((1, 1)))
+    // the list-then-readTable prologue a snapshot replaces: one listing
+    // to pick the version, then a listing and a manifest read per member
+    // (the footer row count and the watermark read, done per call as
+    // well, cost another listing and two reads: 5 and 5 in all)
+    val perCall = countingStore(root)
+    val v = VersionedLake.versions(spark, root, Some(perCall)).last
+    Seq("a", "b", "c").foreach(t => VersionedLake.readTable(spark, root, t,
+      Some(v), manifestStore = Some(perCall)).collect())
+    assert((perCall.listings, perCall.reads) == ((4, 3)))
+    // a writer reads, carries and publishes from its one parsed base
+    val wstore = countingStore(root)
+    val gc = VersionedLake.beginGroupCommit(spark, root,
+      manifestStore = Some(wstore))
+    val base = gc.base.get
+    assert(base.version == 1L && base.applied == Some(3L))
+    assert(rows(base.read("a")) == Seq(1L, 2L))
+    gc.carryAllExcept(Set("a"))
+    gc.write("a", Seq(5L).toDF("x"), mode = "append")
+    assert(gc.publish() == 2L)
+    assert(wstore.reads == 1)
+    val latest = VersionedLake.snapshot(spark, root)
+    assert(latest.applied == Some(3L)) // sticky through the commit
+    assert(rows(latest.read("a")) == Seq(1L, 2L, 5L))
+    assert(latest.tables("b") == snap.tables("b"))
+  }
+
+  test("a snapshot stays pinned: reads after a newer commit overwrote one " +
+    "member and dropped another return the snapshot's version; an " +
+    "unknown member is branded") {
+    val root = Files.createTempDirectory("vlakeg-snappin").toString
+    VersionedLake.commitAll(Seq("a" -> Seq(1L, 2L).toDF("x"),
+      "b" -> Seq(7L).toDF("x")), root)
+    val snap = VersionedLake.snapshot(spark, root)
+    assert(snap.version == 1L)
+    VersionedLake.commitAll(Seq("a" -> Seq(9L).toDF("x")), root)
+    assert(snap.read("a").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+    assert(snap.read("b").as[Long].collect().toSeq == Seq(7L))
+    val latest = VersionedLake.snapshot(spark, root)
+    assert(latest.version == 2L && latest.tables.keySet == Set("a"))
+    assert(latest.read("a").as[Long].collect().toSeq == Seq(9L))
+    val ex = intercept[java.io.FileNotFoundException](snap.read("zzz"))
+    assert(ex.getMessage.contains("table zzz not in group v1"),
+      ex.getMessage)
+    // and the version errors every reader shares
+    val ex2 = intercept[IllegalArgumentException](
+      VersionedLake.snapshot(spark, root, Some(5L)))
+    assert(ex2.getMessage.contains("version 5 not in"), ex2.getMessage)
+    val ex3 = intercept[IllegalArgumentException](
+      VersionedLake.snapshot(spark, s"$root-nowhere"))
+    assert(ex3.getMessage.contains("no committed versions at"),
+      ex3.getMessage)
+  }
+
+  test("beginGroupCommit parses its base at the claim: a base that is not " +
+    "a group manifest throws there and releases the claim") {
+    val tbl = Files.createTempDirectory("vlake-notgroup").toString
+    VersionedLake.commit(Seq(1L).toDF("x"), tbl)
+    val ex = intercept[IllegalStateException](
+      VersionedLake.beginGroupCommit(spark, tbl))
+    assert(ex.getMessage.contains("is not a group manifest"), ex.getMessage)
+    assert(new java.io.File(tbl, "_manifests").list().toSeq
+      .filterNot(_.startsWith(".")).sorted == Seq("v1.claim", "v1.json"))
   }
 }
