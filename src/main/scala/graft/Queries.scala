@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{Cpf, SchemaConform, TextFunctions}
 import graft.operators.{Corpus, Dedup, MultiModal, Relational, Similarity}
-import graft.sources.{FixedWidthReader, Lake}
+import graft.sources.{FixedWidthReader, Lake, ParquetRead}
 
 /** The engine's query inventory: one named query per SURVEY §2 operator
   * class, each paired (in [[Queries.oracles]]) with ANSI SQL the driver runs
@@ -1285,7 +1285,7 @@ object Queries {
             .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate")),
           col("o_orderdate")),
         path)
-      s.read.parquet(path)
+      ParquetRead(s, path)
         .filter(col("ano_particao") === 1995 && col("mes_particao") === 3)
         .groupBy(to_date(col("o_orderdate")).cast("string").as("order_date"))
         .agg(count(lit(1)).as("n_orders"),
@@ -1363,7 +1363,7 @@ object Queries {
       // max(ts) + row count from the just-written single file in ONE job —
       // no second source scan; the count feeds the engine's
       // state-partition policy (Incremental.statePartitions)
-      val agg0 = s.read.parquet(s"$tmp/in")
+      val agg0 = ParquetRead(s, s"$tmp/in")
         .agg(max(col("ts")), count(lit(1))).head()
       val maxTs = agg0.getTimestamp(0)
       val nRows = agg0.getLong(1)
@@ -1428,8 +1428,8 @@ object Queries {
       purchases.write.parquet(s"$tmp/purchases")
       // footer-only count of the bigger landed side feeds the engine's
       // state-partition policy — no data scan
-      val nRows = math.max(s.read.parquet(s"$tmp/clicks").count(),
-        s.read.parquet(s"$tmp/purchases").count())
+      val nRows = math.max(ParquetRead(s, s"$tmp/clicks").count(),
+        ParquetRead(s, s"$tmp/purchases").count())
       val name = "q113_joined"
       s.catalog.dropTempView(name)
       val cs = s.readStream.schema(clicks.schema).parquet(s"$tmp/clicks")
@@ -1472,7 +1472,7 @@ object Queries {
       val stream = s.readStream.schema(changes.schema)
         .parquet(s"$tmp/changes")
       graft.streaming.Incremental.withStreamPolicy(stream,
-        s.read.parquet(s"$tmp/changes").count()) {
+        ParquetRead(s, s"$tmp/changes").count()) {
         val q = graft.streaming.Incremental.cdcToSnapshot(stream,
             keys = Seq("user_id"), order = Seq(col("ts"), col("event_id")),
             op = when(col("status") === "error", "delete").otherwise("upsert"),
@@ -1481,7 +1481,7 @@ object Queries {
           .start()
         try q.awaitTermination() finally q.stop()
       }
-      s.read.parquet(snapshotPath).orderBy(col("user_id"))
+      ParquetRead(s, snapshotPath).orderBy(col("user_id"))
     }),
 
     // STREAMING exactly-once THROUGH FAILURE: the same CDC merge as q114,
@@ -1526,12 +1526,12 @@ object Queries {
       // the policy detects the stateless relay and keeps session
       // parallelism for both lifecycles (same detection as q114)
       graft.streaming.Incremental.withStreamPolicy(changeStream,
-        s.read.parquet(s"$tmp/changes").count()) {
+        ParquetRead(s, s"$tmp/changes").count()) {
         // kill after the first batch lands, resume from the same
         // checkpoint, drain (the shared crash window — runKillResume)
         runKillResume(() => merge())
       }
-      s.read.parquet(snapshotPath).orderBy(col("user_id"))
+      ParquetRead(s, snapshotPath).orderBy(col("user_id"))
     }),
 
     // STREAMING near-dup dedup (beyond-reference §2.9): the q81 arrival
@@ -1551,7 +1551,7 @@ object Queries {
       val stream = s.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$tmp/in")
       graft.streaming.Incremental.withStreamPolicy(stream,
-        s.read.parquet(s"$tmp/in").count()) {
+        ParquetRead(s, s"$tmp/in").count()) {
         val q = graft.flows.StreamingDedup.writer(stream, "doc_id", "text",
           s"$tmp/state", s"$tmp/ckpt", jaccardThreshold = 0.5).start()
         try q.awaitTermination() finally q.stop()
@@ -1576,7 +1576,7 @@ object Queries {
       def dedup() = graft.flows.StreamingDedup.writer(stream, "doc_id",
         "text", s"$tmp/state", s"$tmp/ckpt", jaccardThreshold = 0.5)
       graft.streaming.Incremental.withStreamPolicy(stream,
-        s.read.parquet(s"$tmp/in").count()) {
+        ParquetRead(s, s"$tmp/in").count()) {
         runKillResume(() => dedup())
       }
       graft.flows.StreamingDedup.survivors(s, s"$tmp/state")
@@ -1607,7 +1607,7 @@ object Queries {
         "text", s"$tmp/state", s"$tmp/ckpt", jaccardThreshold = 0.5,
         retainEvery = 1, retainTargetBytes = 1L * 1024 * 1024)
       graft.streaming.Incremental.withStreamPolicy(stream,
-        s.read.parquet(s"$tmp/in").count()) {
+        ParquetRead(s, s"$tmp/in").count()) {
         runKillResume(() => dedup())
       }
       graft.flows.StreamingDedup.survivors(s, s"$tmp/state")
@@ -1643,7 +1643,7 @@ object Queries {
       val stream = s.readStream.schema(arriving.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$tmp/in")
       graft.streaming.Incremental.withStreamPolicy(stream,
-        s.read.parquet(s"$tmp/in").count()) {
+        ParquetRead(s, s"$tmp/in").count()) {
         val q = graft.flows.StreamingSemDeDup.writer(stream, "vec_id",
           "embedding", s"$tmp/state", s"$tmp/ckpt", tau = 0.45,
           maxClusterSize = Int.MaxValue).start()
@@ -1677,7 +1677,7 @@ object Queries {
         "embedding", s"$tmp/state", s"$tmp/ckpt", tau = 0.45,
         maxClusterSize = Int.MaxValue)
       graft.streaming.Incremental.withStreamPolicy(stream,
-        s.read.parquet(s"$tmp/in").count()) {
+        ParquetRead(s, s"$tmp/in").count()) {
         runKillResume(() => dedup())
       }
       graft.flows.StreamingSemDeDup.survivors(s, s"$tmp/state")
@@ -1711,7 +1711,7 @@ object Queries {
         maxClusterSize = Int.MaxValue, retainEvery = 1,
         retainTargetBytes = 1L * 1024 * 1024)
       graft.streaming.Incremental.withStreamPolicy(stream,
-        s.read.parquet(s"$tmp/in").count()) {
+        ParquetRead(s, s"$tmp/in").count()) {
         runKillResume(() => dedup())
       }
       graft.flows.StreamingSemDeDup.survivors(s, s"$tmp/state")
@@ -2102,7 +2102,7 @@ object Queries {
       t(s, dir, "events").select(col("event_id"), col("event_type"), col("value"))
         .repartition(16).write.parquet(inPath)
       LakeWriter.compact(s, inPath, outPath, targetBytes = 64L * 1024 * 1024)
-      s.read.parquet(outPath)
+      ParquetRead(s, outPath)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sumDec(col("value")).as("sum_value"))
         .orderBy(col("event_type"))
@@ -2388,7 +2388,7 @@ object Queries {
       val emb = t(s, dir, "embeddings")
       Cluster.fitCentroids(emb, "vec_id", "embedding", k = 4, iters = 3)
         .write.mode("overwrite").parquet(root)
-      Cluster.assignStored(emb, "vec_id", "embedding", s.read.parquet(root))
+      Cluster.assignStored(emb, "vec_id", "embedding", ParquetRead(s, root))
         .select(col("vec_id"), col("cid"))
         .orderBy(col("vec_id"))
     }),
@@ -2766,7 +2766,7 @@ object Queries {
         "embedding", s"$tmp/index", s"$tmp/ckpt", retainEvery = 1,
         retainTargetBytes = 1L * 1024 * 1024)
       graft.streaming.Incremental.withStreamPolicy(stream,
-        s.read.parquet(s"$tmp/in").count()) {
+        ParquetRead(s, s"$tmp/in").count()) {
         runKillResume(() => ingest())
       }
       val qq = emb.filter(col("vec_id") === 0)

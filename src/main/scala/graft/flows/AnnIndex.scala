@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
 
 import graft.operators.{Cluster, Similarity}
-import graft.sources.VersionedLake
+import graft.sources.{ManifestStore, VersionedLake}
 
 /** Persistent IVF-PQ ANN index — the PRODUCTION shape of
   * approximate-nearest-neighbor search at corpus scale, completing the
@@ -75,14 +75,16 @@ object AnnIndex {
     */
   def build(df: DataFrame, idCol: String, vecCol: String, root: String,
       dims: Int, coarseK: Int, coarseIters: Int, m: Int, k: Int,
-      iters: Int, scale: Int = Cluster.QuantScale): Long = {
+      iters: Int, scale: Int = Cluster.QuantScale,
+      manifestStore: Option[ManifestStore] = None): Long = {
     val spark = df.sparkSession
-    require(VersionedLake.versions(spark, root).isEmpty,
+    require(VersionedLake.versions(spark, root, manifestStore).isEmpty,
       s"ANN index already exists at $root (build a new root and cut over)")
     val src = normalized(df, idCol, vecCol)
     val (coarse, books, encoded) = Similarity.ivfPqIndex(src, idCol, vecCol,
       dims, coarseK, coarseIters, m, k, iters, scale)
-    val gc = VersionedLake.beginGroupCommit(spark, root)
+    val gc = VersionedLake.beginGroupCommit(spark, root,
+      manifestStore = manifestStore)
     // independent frames (coarse/books are bounded literal frames,
     // encoded is materialized, quant re-maps the corpus) — staged
     // concurrently so the four write jobs overlap (guide §2.6)
@@ -109,9 +111,11 @@ object AnnIndex {
   /** The branded error a typo'd root or an append-before-build deserves
     * (a bare snapshot would say only "no committed versions").
     */
+  private def noIndexAt(root: String): String =
+    s"no ANN index at $root (build it first)"
+
   private def requireIndex(spark: SparkSession, root: String): Unit =
-    require(VersionedLake.versions(spark, root).nonEmpty,
-      s"no ANN index at $root (build it first)")
+    require(VersionedLake.versions(spark, root).nonEmpty, noIndexAt(root))
 
   private val Tombstones = "tombstones"
 
@@ -142,12 +146,18 @@ object AnnIndex {
       tomb.fold(df)(t => df.join(broadcast(t), Seq(idCol), "left_anti"))
   }
 
-  /** The latest index snapshot (branded on a missing root). */
+  /** The latest index snapshot (branded on a missing root): one listing. */
   private def latest(spark: SparkSession,
       root: String): VersionedLake.Snapshot = {
-    requireIndex(spark, root)
-    VersionedLake.snapshot(spark, root)
+    val snap = VersionedLake.trySnapshot(spark, root)
+    require(snap.nonEmpty, noIndexAt(root))
+    snap.get
   }
+
+  /** The ids indexed at `snap`. */
+  private[flows] def indexedIds(snap: VersionedLake.Snapshot,
+      idCol: String): DataFrame =
+    new Stored(snap, idCol).encoded.select(col(idCol))
 
   /** Encode `batch` against the STORED model (map-only —
     * [[Similarity.ivfPqEncode]]) and append its codes + quantized
@@ -188,10 +198,11 @@ object AnnIndex {
     */
   private[flows] def commitAppend(src: DataFrame, idCol: String,
       vecCol: String, root: String, scale: Int, maxAttempts: Int,
-      raceWindow: () => Unit, writer: String,
-      batchId: Option[Long]): Option[Long] = {
+      raceWindow: () => Unit, writer: String, batchId: Option[Long],
+      manifestStore: Option[ManifestStore] = None): Option[Long] = {
     val spark = src.sparkSession
-    VersionedLake.commitLoop(spark, root, writer, maxAttempts) { gc =>
+    VersionedLake.commitLoop(spark, root, writer, maxAttempts,
+        manifestStore) { gc =>
       val base = gc.base.get
       if (batchId.exists(b => base.applied.exists(b <= _))) {
         gc.abort(); Some(None)
@@ -481,8 +492,14 @@ object AnnIndex {
   def searchBatch(spark: SparkSession, root: String, idCol: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
       nprobe: Int, c: Int, n: Int,
-      scale: Int = Cluster.QuantScale): DataFrame = {
-    val idx = new Stored(latest(spark, root), idCol)
+      scale: Int = Cluster.QuantScale): DataFrame =
+    searchBatch(latest(spark, root), idCol, queries, queryIdCol,
+      queryVecCol, nprobe, c, n, scale)
+
+  private def searchBatch(snap: VersionedLake.Snapshot, idCol: String,
+      queries: DataFrame, queryIdCol: String, queryVecCol: String,
+      nprobe: Int, c: Int, n: Int, scale: Int): DataFrame = {
+    val idx = new Stored(snap, idCol)
     val q0 = queries.select(col(queryIdCol).cast("long").as(queryIdCol),
       Cluster.quantizeFloor(col(queryVecCol), scale).as("__q"))
     Similarity.ivfPqBatchTopKRerank(idx.live(idx.encoded), idx.quant, idCol,
@@ -599,11 +616,19 @@ object AnnIndex {
   def semanticDedupDecisions(spark: SparkSession, root: String,
       idCol: String, batch: DataFrame, batchIdCol: String,
       batchVecCol: String, nprobe: Int, c: Int, threshold: Long,
-      scale: Int = Cluster.QuantScale): DataFrame = {
+      scale: Int = Cluster.QuantScale): DataFrame =
+    semanticDedupDecisions(latest(spark, root), idCol, batch, batchIdCol,
+      batchVecCol, nprobe, c, threshold, scale)
+
+  /** [[semanticDedupDecisions]] against the index at `snap`. */
+  private[flows] def semanticDedupDecisions(snap: VersionedLake.Snapshot,
+      idCol: String, batch: DataFrame, batchIdCol: String,
+      batchVecCol: String, nprobe: Int, c: Int, threshold: Long,
+      scale: Int): DataFrame = {
     require(batchIdCol != idCol,
       s"batchIdCol must differ from the index id column '$idCol' " +
         "(the decisions frame carries both)")
-    val top1 = searchBatch(spark, root, idCol,
+    val top1 = searchBatch(snap, idCol,
       batch.select(col(batchIdCol), col(batchVecCol)), batchIdCol,
       batchVecCol, nprobe, c, n = 1, scale)
       .select(col(batchIdCol), col(idCol).as("nn_id"),

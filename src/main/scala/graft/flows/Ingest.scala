@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.SchemaConform
 import graft.operators.{JsonNormalize, Relational}
-import graft.sources.LakeWriter
+import graft.sources.{LakeWriter, ParquetRead}
 
 /** Flow-family ingest bodies (SURVEY §7.1/5): the reference's ~33 extraction
   * flows share one landing shape — conform column names, cast everything to
@@ -59,7 +59,7 @@ object Ingest {
     */
   def reconcile(path: String, expected: Long, spark: org.apache.spark.sql.SparkSession,
       tolerance: Double = 0.05): Unit =
-    Relational.reconcileCount(spark.read.parquet(path).count(), expected, tolerance)
+    Relational.reconcileCount(ParquetRead(spark, path).count(), expected, tolerance)
 
   /** Cursor/scroll pagination harness — the engine half of the reference's
     * Elasticsearch scroll loop (reference:

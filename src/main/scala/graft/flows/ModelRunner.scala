@@ -5,7 +5,7 @@ import java.util.regex.Pattern
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-import graft.sources.LakeWriter
+import graft.sources.{LakeWriter, ParquetRead}
 
 /** How a model's result is persisted after its SQL runs. */
 sealed trait Materialization
@@ -152,12 +152,12 @@ final class ModelRunner(val models: Seq[Model]) {
         df.createOrReplaceTempView(m.name); df
       case Materialization.Table(path) =>
         df.write.mode("overwrite").parquet(path)
-        val back = spark.read.parquet(path)
+        val back = ParquetRead(spark, path)
         back.createOrReplaceTempView(m.name); back
       case Materialization.Incremental(path, dateCol) =>
         LakeWriter.overwritePartitions(
           LakeWriter.withDatePartitions(df, col(dateCol)), path)
-        val back = spark.read.parquet(path)
+        val back = ParquetRead(spark, path)
         back.createOrReplaceTempView(m.name); back
     }
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
 import graft.operators.{Cluster, Dedup, Relational}
-import graft.sources.VersionedLake
+import graft.sources.{ManifestStore, VersionedLake}
 
 /** End-to-end training-corpus build: the full document → training-sample
   * path, composed entirely from the engine's operators so each stage keeps
@@ -188,7 +188,10 @@ object TrainingCorpus {
     * ANN index gets every LEXICAL survivor (semantically-dropped
     * included). ANN maintenance runs BEFORE the main commit and is made
     * idempotent by an anti-join against the already-indexed ids, so a
-    * crash in the window between the two commits replays cleanly.
+    * crash in the window between the two commits replays cleanly. The
+    * ANN index is read at ONE snapshot per batch: the semantic decisions
+    * and that anti-join see the same version (`annStore`: the ANN root's
+    * manifest store, default Hadoop).
     *
     * Returns true iff the batch applied (false = replay short-circuit).
     * Read results with [[arrivalChunks]]/[[arrivalSurvivors]].
@@ -205,7 +208,8 @@ object TrainingCorpus {
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
       dims: Int = 64, coarseK: Int = 4, coarseIters: Int = 2,
       m: Int = 4, k: Int = 4, iters: Int = 2,
-      nprobe: Int = 2, c: Int = 50): Boolean = {
+      nprobe: Int = 2, c: Int = 50,
+      annStore: Option[ManifestStore] = None): Boolean = {
     require(semThreshold <= 0 ||
       (batchEmbeddings.nonEmpty && annRoot.nonEmpty),
       "semantic arrival dedup needs batchEmbeddings and annRoot")
@@ -241,22 +245,22 @@ object TrainingCorpus {
         lexKept = exactKept
           .join(droppedLex, col("doc_id") === col("id_b"), "left_anti")
           .localCheckpoint()
-        val annExists = annRoot.nonEmpty &&
-          VersionedLake.versions(spark, annRoot).nonEmpty
-        val semKept =
-          if (semThreshold <= 0) lexKept
-          else if (!annExists) lexKept // bootstrap: nothing stored to compare
-          else {
-            val embB = batchEmbeddings.get
-              .select(col("doc_id").cast("long").as("doc_id"),
-                col("embedding"))
-              .join(lexKept.select(col("doc_id")), Seq("doc_id"), "left_semi")
-            val droppedSem = AnnIndex.semanticDedupDecisions(spark, annRoot,
-                "corpus_id", embB, "doc_id", "embedding", nprobe, c,
-                semThreshold)
-              .filter(col("dropped")).select(col("doc_id"))
-            lexKept.join(droppedSem, Seq("doc_id"), "left_anti")
-          }
+        // the ANN index at one version for the whole batch (None: the
+        // bootstrap batch, nothing stored to compare against)
+        val ann =
+          if (semThreshold <= 0) None
+          else VersionedLake.trySnapshot(spark, annRoot, annStore)
+        val semKept = ann.fold(lexKept) { snap =>
+          val embB = batchEmbeddings.get
+            .select(col("doc_id").cast("long").as("doc_id"),
+              col("embedding"))
+            .join(lexKept.select(col("doc_id")), Seq("doc_id"), "left_semi")
+          val droppedSem = AnnIndex.semanticDedupDecisions(snap,
+              "corpus_id", embB, "doc_id", "embedding", nprobe, c,
+              semThreshold, Cluster.QuantScale)
+            .filter(col("dropped")).select(col("doc_id"))
+          lexKept.join(droppedSem, Seq("doc_id"), "left_anti")
+        }
         // ANN maintenance BEFORE the main commit (a crash between the two
         // replays the batch; the anti-join below makes the re-append a
         // no-op). Members: every LEXICAL survivor, semantically-dropped
@@ -267,18 +271,22 @@ object TrainingCorpus {
               col("embedding"))
             .join(lexKept.select(col("doc_id").as("corpus_id")),
               Seq("corpus_id"), "left_semi")
-          if (!annExists) {
-            if (!embIdx.isEmpty)
-              AnnIndex.build(embIdx, "corpus_id", "embedding", annRoot,
-                dims, coarseK, coarseIters, m, k, iters)
-          } else {
-            val indexed = VersionedLake.readTable(spark, annRoot,
-              "encoded", schemaDDL =
-                "corpus_id BIGINT, codes ARRAY<BIGINT>, cell BIGINT")
-              .select(col("corpus_id"))
-            val embNew = embIdx.join(indexed, Seq("corpus_id"), "left_anti")
-            if (!embNew.isEmpty)
-              AnnIndex.append(embNew, "corpus_id", "embedding", annRoot)
+          ann match {
+            case None =>
+              if (!embIdx.isEmpty)
+                AnnIndex.build(embIdx, "corpus_id", "embedding", annRoot,
+                  dims, coarseK, coarseIters, m, k, iters,
+                  manifestStore = annStore)
+            case Some(snap) =>
+              val embNew = embIdx.join(AnnIndex.indexedIds(snap, "corpus_id"),
+                Seq("corpus_id"), "left_anti")
+              // the snapshot proves the index exists: no pre-check listing
+              if (!embNew.isEmpty)
+                AnnIndex.commitAppend(
+                  AnnIndex.normalized(embNew, "corpus_id", "embedding"),
+                  "corpus_id", "embedding", annRoot, Cluster.QuantScale,
+                  maxAttempts = 5, raceWindow = () => (), writer = "AnnIndex.append",
+                  batchId = None, manifestStore = annStore)
           }
           ()
         }

@@ -5,8 +5,10 @@ import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.LongType
 
 /** Test-lake table access: one parquet per table under an sf dir
-  * (TESTDATA.md). Reads are plain `spark.read.parquet` so Catalyst gets
-  * full pushdown (PushedFilters / ReadSchema reach the parquet scan).
+  * (TESTDATA.md). Reads go through [[ParquetRead]]: the plain parquet
+  * reader with the footer schema resolved on the driver (no Spark job per
+  * read), so Catalyst still gets full pushdown (PushedFilters /
+  * ReadSchema reach the parquet scan).
   */
 object Lake {
   val tableNames: Seq[String] = Seq(
@@ -24,11 +26,12 @@ object Lake {
     // events keep default nanos behavior everywhere. It cannot be restored
     // after this call returns: parquet reader conf is consumed lazily at
     // plan time (first action on the returned DataFrame), so a reset here
-    // would make that action throw on the NANOS column.
+    // would make that action throw on the NANOS column. It is set BEFORE
+    // the read: the footer schema is resolved under it.
     if (name == "events" &&
         spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = ParquetRead(spark, s"$dir/$name.parquet")
     if (name == "events" &&
         df.schema.fields.exists(f => f.name == "ts" && f.dataType == LongType))
       df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))

@@ -164,7 +164,7 @@ object LakeWriter {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val totalBytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(inPath)).getLength
     val nFiles = compactionFileCount(totalBytes, targetBytes)
-    spark.read.parquet(inPath)
+    ParquetRead(spark, inPath)
       .repartition(nFiles)
       .write.mode("overwrite").parquet(outPath)
     nFiles

@@ -57,12 +57,13 @@ object ServingPointer {
   }
 
   /** Every root this pointer has ever served, one row per cut in commit
-    * order: (version, root). The cutover audit trail.
+    * order: (version, root). The cutover audit trail — one manifest
+    * listing for all the cuts.
     */
   def history(spark: SparkSession, ptr: String): Seq[(Long, String)] = {
-    val vs = VersionedLake.versions(spark, ptr)
-    require(vs.nonEmpty, s"no serving pointer at $ptr (set it first)")
-    vs.map(v => v -> VersionedLake.read(spark, ptr, Some(v),
-      schemaDDL = "root STRING").head.getString(0))
+    val cuts = VersionedLake.readEachVersion(spark, ptr,
+      schemaDDL = "root STRING")
+    require(cuts.nonEmpty, s"no serving pointer at $ptr (set it first)")
+    cuts.map { case (v, df) => v -> df.head.getString(0) }
   }
 }

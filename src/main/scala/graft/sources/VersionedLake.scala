@@ -478,6 +478,18 @@ object VersionedLake {
     }
   }
 
+  /** Every committed version of `table`, ascending, each with its own
+    * [[read]] — ONE listing for all of them (a [[read]] per version would
+    * re-list the manifests for each). Empty for an uncommitted table.
+    */
+  def readEachVersion(spark: SparkSession, table: String,
+      schemaDDL: String = null,
+      manifestStore: Option[ManifestStore] = None): Seq[(Long, DataFrame)] = {
+    val store = storeFor(spark, table, manifestStore)
+    store.committedVersions().map(v =>
+      v -> readVersion(spark, store, table, v, mergeSchema = true, schemaDDL))
+  }
+
   /** Read an explicit manifest file list rooted at `root`, grouping by
     * per-version data directory and anchoring each group's read at its own
     * basePath: partitioned commits nest files under col=value dirs, and
@@ -485,7 +497,10 @@ object VersionedLake {
     * prune on them — PartitionFilters) from a manifest's explicit file
     * list. An explicit `schemaDDL` pins column types — partition-column
     * type INFERENCE would e.g. read a bigint dir value back as INT, a
-    * mismatch that breaks typed consumers downstream.
+    * mismatch that breaks typed consumers downstream. Without one, the
+    * data schema comes from the listed files' footers, read on the driver
+    * ([[ParquetRead.files]]: the first file's, or every file's merged
+    * under `mergeSchema`) — no schema-inference job, no listing.
     */
   private def readFiles(spark: SparkSession, root: String,
       files: Seq[String], mergeSchema: Boolean, schemaDDL: String): DataFrame = {
@@ -502,11 +517,13 @@ object VersionedLake {
       // listed paths are literal file names, never glob patterns: a raw
       // `[`, `{`, `*`, `?` or `\` in a foreign writer's partition directory
       // would otherwise be expanded and miss the file
-      val r0 = spark.read.option("basePath", new Path(root, vdir).toString)
-        .option("__globPaths__", "false")
-      val r1 = if (schemaDDL != null) r0.schema(schemaDDL)
-        else r0.option("mergeSchema", mergeSchema.toString)
-      r1.parquet(fs0.map(rel => new Path(root, rel).toString): _*)
+      val basePath = "basePath" -> new Path(root, vdir).toString
+      val paths = fs0.map(rel => new Path(root, rel).toString)
+      if (schemaDDL != null)
+        spark.read.options(Map(basePath, "__globPaths__" -> "false"))
+          .schema(schemaDDL).parquet(paths: _*)
+      else ParquetRead.files(spark, paths,
+        Map(basePath, "mergeSchema" -> mergeSchema.toString))
     }
     parts.reduceLeft(_.unionByName(_, allowMissingColumns = true))
   }
@@ -901,10 +918,12 @@ object VersionedLake {
     * to `maxAttempts` times, then throw naming `writer`.
     */
   private[graft] def commitLoop[A](spark: SparkSession, root: String,
-      writer: String, maxAttempts: Int)(body: GroupCommit => Option[A]): A =
+      writer: String, maxAttempts: Int,
+      manifestStore: Option[ManifestStore] = None)(
+      body: GroupCommit => Option[A]): A =
     (1 to maxAttempts).iterator.map { attempt =>
       if (attempt > 1) retryBackoff(attempt - 1)
-      val gc = beginGroupCommit(spark, root)
+      val gc = beginGroupCommit(spark, root, manifestStore = manifestStore)
       val out = runOrAbort(gc)(body(gc))
       if (out.isEmpty) gc.abort()
       out
@@ -962,6 +981,16 @@ object VersionedLake {
       manifestStore: Option[ManifestStore] = None): Snapshot = {
     val store = storeFor(spark, root, manifestStore)
     groupSnapshot(spark, store, root, resolveVersion(store, root, version))
+  }
+
+  /** [[snapshot]] of the latest version, or None for an uncommitted root:
+    * ONE listing answers both "does it exist" and "which version".
+    */
+  def trySnapshot(spark: SparkSession, root: String,
+      manifestStore: Option[ManifestStore] = None): Option[Snapshot] = {
+    val store = storeFor(spark, root, manifestStore)
+    store.committedVersions().lastOption
+      .map(groupSnapshot(spark, store, root, _))
   }
 
   /** Read one member table of the group at `root` (default: latest

@@ -74,7 +74,7 @@ final case class ProgressLedger(spark: SparkSession, path: String) {
     val versioned = VersionedLake.tryReadAllVersions(spark, path)
     val legacy = {
       val lf = legacyFiles
-      if (lf.nonEmpty) Some(spark.read.parquet(lf: _*)) else None
+      if (lf.nonEmpty) Some(graft.sources.ParquetRead.files(spark, lf)) else None
     }
     (versioned, legacy) match {
       case (Some(v), Some(l)) => Some(v.unionByName(l, allowMissingColumns = true))

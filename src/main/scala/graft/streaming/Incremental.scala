@@ -259,7 +259,7 @@ object Incremental {
           throw new java.io.IOException(
             s"snapshot recovery failed: $backup -> $snap")
         val base =
-          if (fs.exists(snap)) spark.read.parquet(snapshotPath)
+          if (fs.exists(snap)) graft.sources.ParquetRead(spark, snapshotPath)
           else batch.select(keys.map(col) ++ payload.map(col): _*).limit(0)
         val merged = graft.operators.Relational.applyCdc(
           base, batch, keys, order, op, payload)

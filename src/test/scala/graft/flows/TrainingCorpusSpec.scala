@@ -202,4 +202,42 @@ class TrainingCorpusSpec extends SparkSpec {
       TrainingCorpus.applyBatch(b1, 9L, root, semThreshold = 5L))
     ()
   }
+
+  test("applyBatch reads the ANN index at ONE snapshot per batch: the " +
+    "semantic decisions and the membership anti-join share it, for one " +
+    "listing and one manifest parse before the append claims") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("tc_annsnap").toString
+    val root = s"$base/state"; val ann = s"$base/ann"
+    def txt(tag: String): String =
+      ((1 to 40).map(i => s"tok${tag}x$i") ++
+        Seq("the", "of", "and", "in", "is")).mkString(" ")
+    def docs(ids: Long*) =
+      ids.map(i => (i, "pt", txt(i.toString))).toDF("doc_id", "lang", "text")
+    def v(x: Int*): Seq[Float] = x.map(_.toFloat)
+    val emb = Seq((1L, v(1, 0, 0, 0)), (2L, v(0, 1, 0, 0)),
+      (5L, v(0, 0, 0, 1)),
+      (3L, v(1, 0, 0, 0)), // == stored 1: semantically dropped
+      (4L, v(0, 0, 1, 0))  // far from everything stored: kept
+    ).toDF("doc_id", "embedding")
+    def run(df: org.apache.spark.sql.DataFrame, id: Long,
+        store: Option[graft.sources.ManifestStore]): Boolean =
+      TrainingCorpus.applyBatch(df, id, root,
+        batchEmbeddings = Some(emb), annRoot = ann, semThreshold = 1000L,
+        chunkTokens = 8, overlap = 2, binCapacity = 64L,
+        dims = 4, coarseK = 2, coarseIters = 2, m = 2, k = 2, iters = 2,
+        nprobe = 2, c = 10, annStore = store)
+    assert(run(docs(1L, 2L, 5L), 0L, None)) // bootstraps the index
+    val store = graft.sources.CountingStore(spark, ann)
+    assert(run(docs(3L, 4L), 1L, Some(store)))
+    assert(store.atFirstClaim == Some((1, 1)))
+    val surv = TrainingCorpus.arrivalSurvivors(spark, root)
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    assert(surv == Seq(1L, 2L, 4L, 5L))
+    // the ANN index gets every lexical survivor, the dropped 3 included
+    val snap = graft.sources.VersionedLake.snapshot(spark, ann)
+    assert(snap.version == 2L)
+    assert(AnnIndex.indexedIds(snap, "corpus_id").as[Long].collect().sorted
+      .toSeq == Seq(1L, 2L, 3L, 4L, 5L))
+  }
 }
