@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
 
 import graft.operators.{Cluster, Similarity}
-import graft.sources.{ManifestStore, VersionedLake}
+import graft.sources.VersionedLake
 
 /** Persistent IVF-PQ ANN index — the PRODUCTION shape of
   * approximate-nearest-neighbor search at corpus scale, completing the
@@ -75,16 +75,14 @@ object AnnIndex {
     */
   def build(df: DataFrame, idCol: String, vecCol: String, root: String,
       dims: Int, coarseK: Int, coarseIters: Int, m: Int, k: Int,
-      iters: Int, scale: Int = Cluster.QuantScale,
-      manifestStore: Option[ManifestStore] = None): Long = {
+      iters: Int, scale: Int = Cluster.QuantScale): Long = {
     val spark = df.sparkSession
-    require(VersionedLake.versions(spark, root, manifestStore).isEmpty,
+    require(VersionedLake.versions(spark, root).isEmpty,
       s"ANN index already exists at $root (build a new root and cut over)")
     val src = normalized(df, idCol, vecCol)
     val (coarse, books, encoded) = Similarity.ivfPqIndex(src, idCol, vecCol,
       dims, coarseK, coarseIters, m, k, iters, scale)
-    val gc = VersionedLake.beginGroupCommit(spark, root,
-      manifestStore = manifestStore)
+    val gc = VersionedLake.beginGroupCommit(spark, root)
     // independent frames (coarse/books are bounded literal frames,
     // encoded is materialized, quant re-maps the corpus) — staged
     // concurrently so the four write jobs overlap (guide §2.6)
@@ -181,12 +179,24 @@ object AnnIndex {
     * the batch (map-only, O(batch)); races are per-commit-window rare.
     */
   def append(batch: DataFrame, idCol: String, vecCol: String, root: String,
-      scale: Int = Cluster.QuantScale, maxAttempts: Int = 5,
+      scale: Int = Cluster.QuantScale, maxAttempts: Int = AppendAttempts,
       raceWindow: () => Unit = () => ()): Long = {
     requireIndex(batch.sparkSession, root) // before claiming
+    appendExisting(batch, idCol, vecCol, root, scale, maxAttempts,
+      raceWindow)
+  }
+
+  private val AppendAttempts = 5
+
+  /** [[append]] without its existence check, for a caller whose own
+    * snapshot of `root` already shows the index is there.
+    */
+  private[flows] def appendExisting(batch: DataFrame, idCol: String,
+      vecCol: String, root: String, scale: Int = Cluster.QuantScale,
+      maxAttempts: Int = AppendAttempts,
+      raceWindow: () => Unit = () => ()): Long =
     commitAppend(normalized(batch, idCol, vecCol), idCol, vecCol, root,
       scale, maxAttempts, raceWindow, "AnnIndex.append", batchId = None).get
-  }
 
   /** The append body both arrival paths share ([[append]] and
     * [[StreamingAnnIndex.applyBatch]]): encode `src` against the model at
@@ -198,11 +208,10 @@ object AnnIndex {
     */
   private[flows] def commitAppend(src: DataFrame, idCol: String,
       vecCol: String, root: String, scale: Int, maxAttempts: Int,
-      raceWindow: () => Unit, writer: String, batchId: Option[Long],
-      manifestStore: Option[ManifestStore] = None): Option[Long] = {
+      raceWindow: () => Unit, writer: String,
+      batchId: Option[Long]): Option[Long] = {
     val spark = src.sparkSession
-    VersionedLake.commitLoop(spark, root, writer, maxAttempts,
-        manifestStore) { gc =>
+    VersionedLake.commitLoop(spark, root, writer, maxAttempts) { gc =>
       val base = gc.base.get
       if (batchId.exists(b => base.applied.exists(b <= _))) {
         gc.abort(); Some(None)

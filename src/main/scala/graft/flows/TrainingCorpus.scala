@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
 import graft.operators.{Cluster, Dedup, Relational}
-import graft.sources.{ManifestStore, VersionedLake}
+import graft.sources.VersionedLake
 
 /** End-to-end training-corpus build: the full document → training-sample
   * path, composed entirely from the engine's operators so each stage keeps
@@ -190,8 +190,7 @@ object TrainingCorpus {
     * idempotent by an anti-join against the already-indexed ids, so a
     * crash in the window between the two commits replays cleanly. The
     * ANN index is read at ONE snapshot per batch: the semantic decisions
-    * and that anti-join see the same version (`annStore`: the ANN root's
-    * manifest store, default Hadoop).
+    * and that anti-join see the same version.
     *
     * Returns true iff the batch applied (false = replay short-circuit).
     * Read results with [[arrivalChunks]]/[[arrivalSurvivors]].
@@ -208,8 +207,7 @@ object TrainingCorpus {
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
       dims: Int = 64, coarseK: Int = 4, coarseIters: Int = 2,
       m: Int = 4, k: Int = 4, iters: Int = 2,
-      nprobe: Int = 2, c: Int = 50,
-      annStore: Option[ManifestStore] = None): Boolean = {
+      nprobe: Int = 2, c: Int = 50): Boolean = {
     require(semThreshold <= 0 ||
       (batchEmbeddings.nonEmpty && annRoot.nonEmpty),
       "semantic arrival dedup needs batchEmbeddings and annRoot")
@@ -249,7 +247,7 @@ object TrainingCorpus {
         // bootstrap batch, nothing stored to compare against)
         val ann =
           if (semThreshold <= 0) None
-          else VersionedLake.trySnapshot(spark, annRoot, annStore)
+          else VersionedLake.trySnapshot(spark, annRoot)
         val semKept = ann.fold(lexKept) { snap =>
           val embB = batchEmbeddings.get
             .select(col("doc_id").cast("long").as("doc_id"),
@@ -275,18 +273,14 @@ object TrainingCorpus {
             case None =>
               if (!embIdx.isEmpty)
                 AnnIndex.build(embIdx, "corpus_id", "embedding", annRoot,
-                  dims, coarseK, coarseIters, m, k, iters,
-                  manifestStore = annStore)
+                  dims, coarseK, coarseIters, m, k, iters)
             case Some(snap) =>
               val embNew = embIdx.join(AnnIndex.indexedIds(snap, "corpus_id"),
                 Seq("corpus_id"), "left_anti")
               // the snapshot proves the index exists: no pre-check listing
               if (!embNew.isEmpty)
-                AnnIndex.commitAppend(
-                  AnnIndex.normalized(embNew, "corpus_id", "embedding"),
-                  "corpus_id", "embedding", annRoot, Cluster.QuantScale,
-                  maxAttempts = 5, raceWindow = () => (), writer = "AnnIndex.append",
-                  batchId = None, manifestStore = annStore)
+                AnnIndex.appendExisting(embNew, "corpus_id", "embedding",
+                  annRoot)
           }
           ()
         }

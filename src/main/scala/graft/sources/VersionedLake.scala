@@ -483,9 +483,8 @@ object VersionedLake {
     * re-list the manifests for each). Empty for an uncommitted table.
     */
   def readEachVersion(spark: SparkSession, table: String,
-      schemaDDL: String = null,
-      manifestStore: Option[ManifestStore] = None): Seq[(Long, DataFrame)] = {
-    val store = storeFor(spark, table, manifestStore)
+      schemaDDL: String = null): Seq[(Long, DataFrame)] = {
+    val store = storeFor(spark, table, None)
     store.committedVersions().map(v =>
       v -> readVersion(spark, store, table, v, mergeSchema = true, schemaDDL))
   }
@@ -918,12 +917,10 @@ object VersionedLake {
     * to `maxAttempts` times, then throw naming `writer`.
     */
   private[graft] def commitLoop[A](spark: SparkSession, root: String,
-      writer: String, maxAttempts: Int,
-      manifestStore: Option[ManifestStore] = None)(
-      body: GroupCommit => Option[A]): A =
+      writer: String, maxAttempts: Int)(body: GroupCommit => Option[A]): A =
     (1 to maxAttempts).iterator.map { attempt =>
       if (attempt > 1) retryBackoff(attempt - 1)
-      val gc = beginGroupCommit(spark, root, manifestStore = manifestStore)
+      val gc = beginGroupCommit(spark, root)
       val out = runOrAbort(gc)(body(gc))
       if (out.isEmpty) gc.abort()
       out
@@ -986,9 +983,8 @@ object VersionedLake {
   /** [[snapshot]] of the latest version, or None for an uncommitted root:
     * ONE listing answers both "does it exist" and "which version".
     */
-  def trySnapshot(spark: SparkSession, root: String,
-      manifestStore: Option[ManifestStore] = None): Option[Snapshot] = {
-    val store = storeFor(spark, root, manifestStore)
+  def trySnapshot(spark: SparkSession, root: String): Option[Snapshot] = {
+    val store = storeFor(spark, root, None)
     store.committedVersions().lastOption
       .map(groupSnapshot(spark, store, root, _))
   }

@@ -220,17 +220,26 @@ class TrainingCorpusSpec extends SparkSpec {
       (3L, v(1, 0, 0, 0)), // == stored 1: semantically dropped
       (4L, v(0, 0, 1, 0))  // far from everything stored: kept
     ).toDF("doc_id", "embedding")
-    def run(df: org.apache.spark.sql.DataFrame, id: Long,
-        store: Option[graft.sources.ManifestStore]): Boolean =
+    def run(df: org.apache.spark.sql.DataFrame, id: Long): Boolean =
       TrainingCorpus.applyBatch(df, id, root,
         batchEmbeddings = Some(emb), annRoot = ann, semThreshold = 1000L,
         chunkTokens = 8, overlap = 2, binCapacity = 64L,
         dims = 4, coarseK = 2, coarseIters = 2, m = 2, k = 2, iters = 2,
-        nprobe = 2, c = 10, annStore = store)
-    assert(run(docs(1L, 2L, 5L), 0L, None)) // bootstraps the index
-    val store = graft.sources.CountingStore(spark, ann)
-    assert(run(docs(3L, 4L), 1L, Some(store)))
-    assert(store.atFirstClaim == Some((1, 1)))
+        nprobe = 2, c = 10)
+    assert(run(docs(1L, 2L, 5L), 0L)) // bootstraps the index
+    var applied = false
+    val calls = graft.sources.ManifestCallLog.during(spark, ann) {
+      applied = run(docs(3L, 4L), 1L)
+    }
+    assert(applied)
+    // up to the append's claim (its listing of claimed numbers, then the
+    // mkdirs that precedes the claim file), the ANN root was listed once
+    // and its v1 manifest parsed once
+    val dir = s"$ann/_manifests"
+    val beforeClaim = calls.takeWhile(_._1 != "mkdirs")
+    assert(beforeClaim.size < calls.size, calls)
+    assert(beforeClaim == Seq("list" -> dir, "open" -> s"$dir/v1.json",
+      "list" -> dir), calls)
     val surv = TrainingCorpus.arrivalSurvivors(spark, root)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(surv == Seq(1L, 2L, 4L, 5L))

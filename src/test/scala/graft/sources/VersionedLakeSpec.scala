@@ -782,6 +782,33 @@ class VersionedLakeSpec extends SparkSpec {
     assert(rows.sorted.toSeq == dirs.map(_ -> 7).sorted)
   }
 
+  /** A [[HadoopManifestStore]] that counts committed-version listings and
+    * manifest reads.
+    */
+  private final class CountingStore(inner: ManifestStore)
+      extends ManifestStore {
+    var listings = 0
+    var reads = 0
+    def committedVersions(): Seq[Long] = {
+      listings += 1; inner.committedVersions()
+    }
+    def claimedVersions(): Seq[Long] = inner.claimedVersions()
+    def tryClaim(version: Long): Boolean = inner.tryClaim(version)
+    def publish(version: Long, manifest: Array[Byte]): Boolean =
+      inner.publish(version, manifest)
+    def readManifest(version: Long): Array[Byte] = {
+      reads += 1; inner.readManifest(version)
+    }
+    def deleteManifest(version: Long): Unit = inner.deleteManifest(version)
+    def deleteClaim(version: Long): Unit = inner.deleteClaim(version)
+    def claimModifiedAtMs(version: Long): Option[Long] =
+      inner.claimModifiedAtMs(version)
+  }
+
+  private def countingStore(root: String): CountingStore =
+    new CountingStore(new HadoopManifestStore(new org.apache.hadoop.fs.Path(
+      root).getFileSystem(spark.sparkContext.hadoopConfiguration), root))
+
   test("snapshot: one listing and one manifest read however many members " +
     "it reads; a group commit parses its base once") {
     val root = Files.createTempDirectory("vlakeg-snapcount").toString
@@ -792,7 +819,7 @@ class VersionedLakeSpec extends SparkSpec {
     gc0.publish()
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[Long].collect().sorted.toSeq
-    val store = CountingStore(spark, root)
+    val store = countingStore(root)
     val snap = VersionedLake.snapshot(spark, root,
       manifestStore = Some(store))
     assert(Seq("a", "b", "c").map(t => rows(snap.read(t))) ==
@@ -804,13 +831,13 @@ class VersionedLakeSpec extends SparkSpec {
     // to pick the version, then a listing and a manifest read per member
     // (the footer row count and the watermark read, done per call as
     // well, cost another listing and two reads: 5 and 5 in all)
-    val perCall = CountingStore(spark, root)
+    val perCall = countingStore(root)
     val v = VersionedLake.versions(spark, root, Some(perCall)).last
     Seq("a", "b", "c").foreach(t => VersionedLake.readTable(spark, root, t,
       Some(v), manifestStore = Some(perCall)).collect())
     assert((perCall.listings, perCall.reads) == ((4, 3)))
     // a writer reads, carries and publishes from its one parsed base
-    val wstore = CountingStore(spark, root)
+    val wstore = countingStore(root)
     val gc = VersionedLake.beginGroupCommit(spark, root,
       manifestStore = Some(wstore))
     val base = gc.base.get
