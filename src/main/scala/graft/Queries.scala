@@ -1891,8 +1891,9 @@ object Queries {
         .orderBy(col("user_id"))
     }),
 
-    // Versioned-lake read: orders committed as v1 (even keys) + an
-    // APPEND v2 (odd keys — a pure metadata union, no rewrite), then read
+    // Versioned-lake read: orders committed as the one member of a group,
+    // v1 (even keys) + an APPEND v2 (odd keys — a pure metadata union, no
+    // rewrite), then read
     // through the manifest protocol. The agg over the resolved snapshot
     // must equal the raw table — the read-path correctness of the commit
     // protocol, oracle-proven.
@@ -1903,10 +1904,12 @@ object Queries {
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val orders = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
-      VersionedLake.commit(orders.filter(col("o_orderkey") % 2 === 0), tbl)
-      VersionedLake.commit(orders.filter(col("o_orderkey") % 2 === 1), tbl,
+      VersionedLake.commitAll(
+        Seq("orders" -> orders.filter(col("o_orderkey") % 2 === 0)), tbl)
+      VersionedLake.commitAll(
+        Seq("orders" -> orders.filter(col("o_orderkey") % 2 === 1)), tbl,
         mode = "append")
-      VersionedLake.read(s, tbl)
+      VersionedLake.readTable(s, tbl, "orders")
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"), sumDec(col("o_totalprice")).as("tot"))
         .orderBy(col("o_orderpriority"))
@@ -2187,16 +2190,16 @@ object Queries {
       val p = new org.apache.hadoop.fs.Path(tbl)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val orders = t(s, dir, "orders")
-      VersionedLake.commit(
+      VersionedLake.commitAll(Seq("orders" ->
         orders.filter(col("o_orderkey") % 2 === 0)
-          .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice")),
+          .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))),
         tbl)
-      VersionedLake.commit(
+      VersionedLake.commitAll(Seq("orders" ->
         orders.filter(col("o_orderkey") % 2 === 1)
           .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"),
-            col("o_orderstatus")),
+            col("o_orderstatus"))),
         tbl, mode = "append")
-      VersionedLake.read(s, tbl)
+      VersionedLake.readTable(s, tbl, "orders")
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"),
           count(col("o_orderstatus")).as("n_status"),

@@ -16,17 +16,21 @@ object Lake {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // events.ts is parquet TIMESTAMP(NANOS), which Spark's reader rejects;
-    // the legacy flag surfaces it as a nanos bigint, and we restore a real
-    // timestamp at microsecond grain with exact integer division (a double
-    // `/` would lose precision past 2^53 ns).
+    // The generated fixtures store events.ts as TIMESTAMP(MICROS), which
+    // Spark reads natively, and the rebuild below does not fire for them.
+    // A foreign events file may store it as TIMESTAMP(NANOS), which
+    // Spark's reader rejects; the legacy flag surfaces it as a nanos
+    // bigint, and we restore a real timestamp at microsecond grain with
+    // exact integer division (a double `/` would lose precision past
+    // 2^53 ns). Only ParquetReadSpec's hand-written NANOS file exercises
+    // that branch.
     //
     // The flag is touched ONLY for events reads (never for the other nine
     // tables), and only when not already set — sessions that never read
     // events keep default nanos behavior everywhere. It cannot be restored
     // after this call returns: parquet reader conf is consumed lazily at
     // plan time (first action on the returned DataFrame), so a reset here
-    // would make that action throw on the NANOS column. It is set BEFORE
+    // would make that action throw on a NANOS column. It is set BEFORE
     // the read: the footer schema is resolved under it.
     if (name == "events" &&
         spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")

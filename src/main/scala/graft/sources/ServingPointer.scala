@@ -4,16 +4,16 @@ import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The blue/green cutover primitive for stored state: a tiny
-  * [[VersionedLake]] table holding ONE row — the root currently being
-  * served. Every stored model here (the MinHash dedup index, the
-  * IVF-PQ ANN index, the SemDeDup centroids) refits by building a NEW
-  * root and cutting readers over; this is the cut. [[set]] is an atomic
-  * single-table commit (manifest rename / conditional PUT — the same
-  * CAS every commit uses), so a reader resolves either the old root or
-  * the new one, never a torn in-between; readers that already resolved
-  * the old root keep reading it untouched (roots are immutable-once-
-  * built, and the pointer never deletes), which is exactly the
-  * blue/green contract: drain, then retire the old root out of band.
+  * [[VersionedLake]] group whose one member, `pointer`, holds ONE row —
+  * the root currently being served. Every stored model here (the MinHash
+  * dedup index, the IVF-PQ ANN index, the SemDeDup centroids) refits by
+  * building a NEW root and cutting readers over; this is the cut. [[set]]
+  * is an atomic one-member commit (manifest rename / conditional PUT —
+  * the same CAS every commit uses), so a reader resolves either the old
+  * root or the new one, never a torn in-between; readers that already
+  * resolved the old root keep reading it untouched (roots are
+  * immutable-once-built, and the pointer never deletes), which is exactly
+  * the blue/green contract: drain, then retire the old root out of band.
   *
   * Why a lake table and not a config entry: the pointer inherits the
   * lake's durability, its version history ([[history]] — who served
@@ -27,8 +27,12 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   */
 object ServingPointer {
 
+  private val Member = "pointer"
   private val schema =
     StructType(Seq(StructField("root", StringType, nullable = false)))
+
+  private def servedRoot(snap: VersionedLake.Snapshot): String =
+    snap.read(Member, schemaDDL = "root STRING").head.getString(0)
 
   /** Atomically point `ptr` at `root` (the cut). Returns the pointer's
     * committed version. The target is not validated here — a deployment
@@ -37,15 +41,14 @@ object ServingPointer {
     * half-built root would fail loudly at first resolve+read anyway.
     */
   def set(spark: SparkSession, ptr: String, root: String): Long =
-    VersionedLake.commit(
-      spark.createDataFrame(java.util.List.of(Row(root)), schema), ptr)
+    VersionedLake.commitAll(Seq(Member ->
+      spark.createDataFrame(java.util.List.of(Row(root)), schema)), ptr)
 
   /** The currently served root, or None when the pointer was never set
     * — one manifest-directory listing answers both.
     */
   def current(spark: SparkSession, ptr: String): Option[String] =
-    VersionedLake.tryRead(spark, ptr, schemaDDL = "root STRING")
-      .map(_.head.getString(0))
+    VersionedLake.trySnapshot(spark, ptr).map(servedRoot)
 
   /** The currently served root. Branded on an unset pointer — a typo'd
     * pointer path must not surface as a bare "no committed versions".
@@ -61,9 +64,8 @@ object ServingPointer {
     * listing for all the cuts.
     */
   def history(spark: SparkSession, ptr: String): Seq[(Long, String)] = {
-    val cuts = VersionedLake.readEachVersion(spark, ptr,
-      schemaDDL = "root STRING")
+    val cuts = VersionedLake.snapshots(spark, ptr)
     require(cuts.nonEmpty, s"no serving pointer at $ptr (set it first)")
-    cuts.map { case (v, df) => v -> df.head.getString(0) }
+    cuts.map(snap => snap.version -> servedRoot(snap))
   }
 }

@@ -7,65 +7,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s.{JArray, JInt, JObject, JString, JValue}
 import org.json4s.jackson.JsonMethods
 
-/** Manifest-based versioned lake table — the minimal lakehouse commit
-  * protocol (what table formats reduce to for a single unpartitioned
-  * table): every commit writes NEW data files under `_data/` and then
-  * atomically renames a manifest listing exactly the files visible in that
-  * version. Readers resolve a manifest (latest or pinned) and read only its
-  * files, so:
-  *
-  *  - writers never mutate visible data (a failed commit leaves orphaned
-  *    data files, never a corrupt table);
-  *  - concurrent readers see a consistent snapshot;
-  *  - old versions remain readable (time travel / instant rollback) until
-  *    vacuumed.
-  *
-  * This re-expresses the reference's staged-delete-then-reload upload mode
-  * (reference: pipelines/utils/tasks.py:812-933) as an O(1) metadata swap
-  * instead of a destructive window where the table is half-loaded.
-  *
-  * Manifest format: `_manifests/v{N}.json` = `{"version":N,"files":[...]}`
-  * (relative paths), written and parsed with json4s: Spark leaves `,`
-  * and non-ASCII text raw in partition directories and a foreign writer
-  * may add quotes or backslashes, so the codec must be a real JSON one.
-  * Group manifests add a `tables` map and an optional `applied` stream
-  * watermark (see the group layout below). The ATOMICITY PRIMITIVE is
-  * pluggable via [[ManifestStore]]: on HDFS-like filesystems
-  * ([[HadoopManifestStore]], the default) a claim is create-no-overwrite
-  * and a manifest publish is write-tmp-then-rename; on object stores ([[CasManifestStore]] over a
-  * [[CasBlobStore]]) both are a conditional PUT (`If-None-Match: *`, the
-  * S3/GCS first-writer-wins precondition) — no rename needed, because a
-  * conditional PUT of the final key IS the visibility event. Data files
-  * are plain parquet either way; only manifest/claim atomicity differs
-  * per store.
-  *
-  * == Concurrency contract ==
-  *
-  *  - '''Committers''': each commit first CLAIMS its version number by
-  *    creating `_manifests/v{N}.claim` with create-no-overwrite — atomic
-  *    on HDFS and POSIX, so two committers racing to the same N produce
-  *    exactly one winner; the loser recomputes N and retries (bounded by
-  *    `maxAttempts`). The claim is taken BEFORE any data write, so no two
-  *    commits ever share a `_data/v{N}` directory. A committer that
-  *    crashes between claim and manifest burns its number (versions may
-  *    be non-contiguous); later commits skip past it because the next
-  *    number is computed over claims AND manifests.
-  *  - '''Readers''': resolve a manifest (latest or pinned) and read only
-  *    its immutable file list — a reader never observes a half-commit,
-  *    because the manifest rename is the only visibility event.
-  *  - '''Append mode''': an append carries the files of the latest
-  *    version COMMITTED when it claimed. Serial appends (the stored-state
-  *    pattern in [[graft.flows.DedupIndex]]) therefore chain completely;
-  *    two appends racing each other may each chain from the same base —
-  *    concurrent writers wanting strict append serialization must
-  *    serialize externally (the same rule Delta's OCC enforces by
-  *    aborting, surfaced here by version numbering).
-  *  - '''Vacuum vs readers''': vacuum deletes files unreferenced by every
-  *    manifest ≥ `keepFrom`; a reader of any KEPT version is unaffected
-  *    mid-vacuum. A reader pinned BELOW `keepFrom` races with the delete
-  *    by design — the caller owns picking a `keepFrom` older than any
-  *    in-flight read (the same retention contract lakehouse formats ship).
-  */
 /** The atomicity surface the [[VersionedLake]] commit protocol needs from
   * manifest storage. `tryClaim` and `publish` MUST be first-writer-wins
   * atomic (exactly one of N racing callers returns true for a given
@@ -220,6 +161,79 @@ final class CasManifestStore(blob: CasBlobStore,
     blob.modifiedAtMs(key(s"v$version.claim"))
 }
 
+/** Manifest-based versioned lake — the minimal lakehouse commit protocol.
+  * A root holds a GROUP of member tables (a single table is a one-member
+  * group) under ONE manifest sequence: every commit writes NEW data files
+  * under `<root>/<table>/_data/v{N}/` and then atomically publishes
+  * `<root>/_manifests/v{N}.json`, which lists exactly the files of every
+  * member visible in version N. Readers resolve a manifest (latest or
+  * pinned) and read only its files, so:
+  *
+  *  - writers never mutate visible data (a failed commit leaves orphaned
+  *    data files, never a corrupt table);
+  *  - concurrent readers see a consistent snapshot across members: one
+  *    publish covers the whole group, so a reader can NEVER observe table
+  *    A at version n beside table B at n−1 (the guarantee the `_COMPLETE`
+  *    marker pattern only approximated);
+  *  - old versions remain readable (time travel / instant rollback) until
+  *    vacuumed.
+  *
+  * This re-expresses the reference's staged-delete-then-reload upload mode
+  * (reference: pipelines/utils/tasks.py:812-933) as an O(1) metadata swap
+  * instead of a destructive window where the table is half-loaded.
+  *
+  * Manifest format:
+  * `{"version":N,"tables":{"a":["a/_data/vN/part…"],"b":[…]},"applied":B}`
+  * (root-relative paths), written and parsed with json4s: Spark leaves `,`
+  * and non-ASCII text raw in partition directories and a foreign writer
+  * may add quotes or backslashes, so the codec must be a real JSON one. A
+  * manifest without `tables` fails loudly at parse (`is not a group
+  * manifest`). `applied` is optional: the exactly-once watermark of the
+  * stream that writes the group (the last micro-batch id whose data this
+  * version holds — Delta's `txn` action reduced to one field). It is
+  * STICKY: a commit that does not call [[GroupCommit.markApplied]]
+  * republishes its base version's value, so compaction, retirements and
+  * carry-only commits keep it unawares.
+  *
+  * The ATOMICITY PRIMITIVE is pluggable via [[ManifestStore]]: on
+  * HDFS-like filesystems ([[HadoopManifestStore]], the default) a claim is
+  * create-no-overwrite and a manifest publish is write-tmp-then-rename; on
+  * object stores ([[CasManifestStore]] over a [[CasBlobStore]]) both are a
+  * conditional PUT (`If-None-Match: *`, the S3/GCS first-writer-wins
+  * precondition) — no rename needed, because a conditional PUT of the
+  * final key IS the visibility event. Data files are plain parquet either
+  * way; only manifest/claim atomicity differs per store.
+  *
+  * == Concurrency contract ==
+  *
+  *  - '''Committers''': each commit first CLAIMS its version number by
+  *    creating `_manifests/v{N}.claim` with create-no-overwrite — atomic
+  *    on HDFS and POSIX, so two committers racing to the same N produce
+  *    exactly one winner; the loser recomputes N and retries (bounded by
+  *    `maxAttempts`). The claim is taken BEFORE any data write, so no two
+  *    commits ever share a `<table>/_data/v{N}` directory. A committer
+  *    that fails before publishing aborts ([[runOrAbort]]: its data swept,
+  *    its claim released); one that crashes between claim and manifest
+  *    burns its number (versions may be non-contiguous), and later
+  *    commits skip past it because the next number is computed over
+  *    claims AND manifests.
+  *  - '''Readers''': resolve a manifest (latest or pinned) and read only
+  *    its immutable file lists — a reader never observes a half-commit,
+  *    because the manifest publish is the only visibility event.
+  *  - '''Append mode''': an append carries the member's files of the
+  *    latest version COMMITTED when it claimed. Serial appends (the
+  *    stored-state pattern in [[graft.flows.DedupIndex]]) therefore chain
+  *    completely; two appends racing each other may each chain from the
+  *    same base — concurrent writers wanting strict append serialization
+  *    must serialize externally (the same rule Delta's OCC enforces by
+  *    aborting, surfaced here by version numbering) or publish
+  *    race-detected ([[GroupCommit.publishIfBaseIs]]).
+  *  - '''Vacuum vs readers''': vacuum deletes files unreferenced by every
+  *    manifest ≥ `keepFrom`; a reader of any KEPT version is unaffected
+  *    mid-vacuum. A reader pinned BELOW `keepFrom` races with the delete
+  *    by design — the caller owns picking a `keepFrom` older than any
+  *    in-flight read (the same retention contract lakehouse formats ship).
+  */
 object VersionedLake {
 
   /** A lost version-claim race after `maxAttempts` tries. */
@@ -330,49 +344,10 @@ object VersionedLake {
     rels
   }
 
-  /** Commit `df` as the next version. `mode` is `"overwrite"` (the new
-    * version is exactly `df`) or `"append"` (the new version = previous
-    * files + `df`'s files — no data rewrite, pure metadata union).
-    * `partitionBy` lays the version's data out Hive-style (`col=value`
-    * directories) so reads prune partitions; the manifest records the
-    * partition-relative file paths and [[read]] recovers the partition
-    * columns per version directory. Returns the committed version number.
-    *
-    * Safe under concurrent committers (see the concurrency contract
-    * above): the version number is claimed atomically before any data
-    * write; a lost claim race retries at the next number up to
-    * `maxAttempts` times, then throws [[ConcurrentCommitException]].
-    */
-  def commit(df: DataFrame, table: String, mode: String = "overwrite",
-      partitionBy: Seq[String] = Nil, maxAttempts: Int = 10,
-      manifestStore: Option[ManifestStore] = None): Long = {
-    require(mode == "overwrite" || mode == "append", s"unknown mode $mode")
-    val spark = df.sparkSession
-    val f = fs(spark, table)
-    val store = storeFor(spark, table, manifestStore)
-    val next = claimNext(store, table, maxAttempts)
-    // the APPEND base is the latest manifest at claim time: under
-    // concurrent appends each commit carries the files of the last
-    // version it SAW — serial appends (the stored-state pattern) chain
-    // completely
-    val prev = store.committedVersions()
-    // new files land under a per-version directory: never collides with
-    // visible data, orphaned cleanly if the manifest rename fails
-    val newFiles = writeData(df, f, new Path(table, s"_data/v$next"),
-      s"_data/v$next", partitionBy)
-    val carried = if (mode == "append" && prev.nonEmpty)
-      manifestFiles(store, table, prev.last) else Seq.empty
-    val manifest = encodeManifest(
-      "version" -> JInt(next), "files" -> fileArray(carried ++ newFiles))
-    if (!store.publish(next, manifest))
-      throw new java.io.IOException(s"commit v$next lost the publish race")
-    next
-  }
-
   // ========================= manifest codec =========================
   //
-  // Both manifest shapes are json4s-rendered objects; a reader parses the
-  // whole manifest and pattern-matches the fields it needs.
+  // A manifest is a json4s-rendered object; a reader parses the whole
+  // manifest and pattern-matches the fields it needs.
 
   private def encodeManifest(fields: (String, JValue)*): Array[Byte] =
     JsonMethods.compact(JsonMethods.render(JObject(fields.toList)))
@@ -399,96 +374,6 @@ object VersionedLake {
     case _ => None
   }
 
-  private def manifestFiles(store: ManifestStore, table: String,
-      version: Long): Seq[String] =
-    parseManifest(store, version).get("files").flatMap(fileList).getOrElse(
-      throw new IllegalStateException(s"malformed manifest v$version of $table"))
-
-  /** Read a version (default: latest). Missing table/version throws.
-    *
-    * Schema DRIFT across commits is tolerated permissively (`mergeSchema`,
-    * on by default): an append-mode commit may add columns, and a merged
-    * read returns the union schema with nulls for files written before the
-    * column existed — `unionByName(allowMissingColumns)` semantics at the
-    * scan, matching the reference's drift tolerance
-    * (bq_to_subpav/utils.py:182-201). At 100 TB drift across thousands of
-    * daily commits is guaranteed, so the permissive read is the default;
-    * the cost is one footer read per distinct file at planning time. A
-    * pinned time-travel read of an old version still returns exactly that
-    * version's schema (its manifest lists only its own files).
-    */
-  def read(spark: SparkSession, table: String,
-      version: Option[Long] = None, mergeSchema: Boolean = true,
-      schemaDDL: String = null,
-      manifestStore: Option[ManifestStore] = None): DataFrame = {
-    val store = storeFor(spark, table, manifestStore)
-    readVersion(spark, store, table, resolveVersion(store, table, version),
-      mergeSchema, schemaDDL)
-  }
-
-  /** [[read]] of the latest version tolerating an uncommitted table
-    * (None) — ONE manifest-directory listing answers both "does it exist"
-    * and "read it".
-    */
-  private[sources] def tryRead(spark: SparkSession, table: String,
-      schemaDDL: String = null): Option[DataFrame] = {
-    val store = storeFor(spark, table, None)
-    store.committedVersions().lastOption.map(
-      readVersion(spark, store, table, _, mergeSchema = true, schemaDDL))
-  }
-
-  private def readVersion(spark: SparkSession, store: ManifestStore,
-      table: String, v: Long, mergeSchema: Boolean,
-      schemaDDL: String): DataFrame = {
-    val files = manifestFiles(store, table, v)
-    require(files.nonEmpty, s"version $v of $table lists no files")
-    readFiles(spark, table, files, mergeSchema, schemaDDL)
-  }
-
-  /** Union read over EVERY committed version's file list (distinct
-    * paths), or None for an uncommitted table — for MONOTONE,
-    * duplicate-tolerant, append-only tables (a progress ledger, an audit
-    * trail), NOT a general time-travel read (on an overwrite table it
-    * would resurrect replaced data).
-    *
-    * Why it exists: the append-mode concurrency contract lets two racing
-    * appends each chain from the same base, so the LATER manifest omits
-    * the earlier racer's files — a latest-version read silently loses
-    * that batch. A union-over-all-manifests read is immune: every
-    * committed batch's files appear in at least its OWN manifest, and a
-    * duplicate-tolerant consumer doesn't care that serial chains list
-    * the carried files many times over. Per-batch crash atomicity is
-    * unchanged (uncommitted `_data` dirs are in no manifest). Corollary
-    * for vacuum: don't vacuum such a table past an unmerged fork —
-    * vacuum keeps only files referenced by manifests ≥ `keepFrom`. ONE
-    * manifest-directory listing answers both "does it exist" and "read
-    * it", so a per-micro-batch resume poll doesn't pay a second LIST on
-    * an object store just to pre-check emptiness.
-    */
-  def tryReadAllVersions(spark: SparkSession, table: String,
-      mergeSchema: Boolean = true, schemaDDL: String = null,
-      manifestStore: Option[ManifestStore] = None): Option[DataFrame] = {
-    val store = storeFor(spark, table, manifestStore)
-    val vs = store.committedVersions()
-    if (vs.isEmpty) None
-    else {
-      val files = vs.flatMap(v => manifestFiles(store, table, v)).distinct
-      require(files.nonEmpty, s"no files across versions $vs at $table")
-      Some(readFiles(spark, table, files, mergeSchema, schemaDDL))
-    }
-  }
-
-  /** Every committed version of `table`, ascending, each with its own
-    * [[read]] — ONE listing for all of them (a [[read]] per version would
-    * re-list the manifests for each). Empty for an uncommitted table.
-    */
-  def readEachVersion(spark: SparkSession, table: String,
-      schemaDDL: String = null): Seq[(Long, DataFrame)] = {
-    val store = storeFor(spark, table, None)
-    store.committedVersions().map(v =>
-      v -> readVersion(spark, store, table, v, mergeSchema = true, schemaDDL))
-  }
-
   /** Read an explicit manifest file list rooted at `root`, grouping by
     * per-version data directory and anchoring each group's read at its own
     * basePath: partitioned commits nest files under col=value dirs, and
@@ -504,7 +389,7 @@ object VersionedLake {
   private def readFiles(spark: SparkSession, root: String,
       files: Seq[String], mergeSchema: Boolean, schemaDDL: String): DataFrame = {
     // version dir = everything up to and including the v{N} segment after
-    // `_data` (single-table: `_data/vN`; group tables: `t/_data/vN`)
+    // `_data` (`t/_data/vN` for member table `t`)
     def versionDir(rel: String): String = {
       val segs = rel.split("/")
       val i = segs.indexOf("_data")
@@ -527,33 +412,14 @@ object VersionedLake {
     parts.reduceLeft(_.unionByName(_, allowMissingColumns = true))
   }
 
-  // ===================== atomic multi-table groups =====================
-  //
-  // A table GROUP shares ONE manifest sequence at its root: every member
-  // table's files for version N are listed in a single manifest published
-  // by a single atomic event (rename or conditional PUT), so a reader can
-  // NEVER observe table A at version n and table B at n−1 — the guarantee
-  // the `_COMPLETE` marker pattern only approximated (a reader between the
-  // last table write and the marker write saw a torn group).
-  //
-  // Layout: `<root>/_manifests/v{N}.json` =
-  //   `{"version":N,"tables":{"a":["a/_data/vN/part…"],"b":[…]},"applied":B}`
-  // with data under `<root>/<table>/_data/v{N}/`. `applied` is optional:
-  // the exactly-once watermark of the stream that writes the group (the
-  // last micro-batch id whose data this version holds — Delta's `txn`
-  // action reduced to one field). It is STICKY: a commit that does not
-  // call [[GroupCommit.markApplied]] republishes its base version's value,
-  // so compaction, retirements and carry-only commits keep it unawares.
-  // Claim/publish atomicity is the SAME pluggable [[ManifestStore]] as
-  // single tables — one CAS publish covers the whole group (watermark
-  // included) on object stores.
+  // ====================== snapshots and commits ======================
 
   // leading alphanumeric keeps member tables out of the store's own
   // metadata directories (`_manifests`, `_data`); the reserved words are
   // the manifests' own keys
   private def tableNameOk(t: String): Boolean =
     t.nonEmpty && t.matches("[A-Za-z0-9][A-Za-z0-9_.-]*") &&
-      t != "version" && t != "tables" && t != "files"
+      t != "version" && t != "tables"
 
   /** One committed version of the group at `root`, resolved and parsed
     * ONCE: every member table's MANIFEST-RELATIVE file list and the
@@ -572,8 +438,19 @@ object VersionedLake {
       tables.getOrElse(table, throw new java.io.FileNotFoundException(
         s"table $table not in group v$version at $root"))
 
-    /** Read member `table` (`mergeSchema`/`schemaDDL` as in
-      * [[VersionedLake.read]]).
+    /** Read member `table`.
+      *
+      * Schema DRIFT across commits is tolerated permissively (`mergeSchema`,
+      * on by default): an append-mode commit may add columns, and a merged
+      * read returns the union schema with nulls for files written before
+      * the column existed — `unionByName(allowMissingColumns)` semantics at
+      * the scan, matching the reference's drift tolerance
+      * (bq_to_subpav/utils.py:182-201). At 100 TB drift across thousands of
+      * daily commits is guaranteed, so the permissive read is the default;
+      * the cost is one footer read per distinct file at planning time. A
+      * pinned time-travel read of an old version still returns exactly that
+      * version's schema (its manifest lists only its own files). An
+      * explicit `schemaDDL` pins the types instead (see `readFiles`).
       */
     def read(table: String, mergeSchema: Boolean = true,
         schemaDDL: String = null): DataFrame = {
@@ -583,11 +460,13 @@ object VersionedLake {
       VersionedLake.readFiles(spark, root, fs, mergeSchema, schemaDDL)
     }
 
-    /** Read an explicit SUBSET of this snapshot's manifest-relative files
-      * — the incremental-compaction read path: a retention pass reads
-      * only the small-file tail it is about to rewrite, never the carried
-      * large files. Partition columns are recovered per version directory
-      * exactly as [[read]] does.
+    /** Read an explicit list of manifest-relative files at this root,
+      * normally a SUBSET of this snapshot's — the incremental-compaction
+      * read path: a retention pass reads only the small-file tail it is
+      * about to rewrite, never the carried large files. (The progress
+      * ledger passes the union of every snapshot's files.) Partition
+      * columns are recovered per version directory exactly as [[read]]
+      * does.
       */
     def readFiles(rel: Seq[String]): DataFrame = {
       require(rel.nonEmpty, s"readFiles with no files at $root")
@@ -955,9 +834,13 @@ object VersionedLake {
     new GroupCommit(spark, root, store, next, base)
   }
 
-  /** Commit several tables as ONE atomic version of the group at `root`.
-    * Convenience over [[beginGroupCommit]] for callers with all frames in
-    * hand; returns the committed version.
+  /** Commit several tables as ONE atomic version of the group at `root`
+    * (one table: a one-member group). Convenience over [[beginGroupCommit]]
+    * for callers with all frames in hand; `mode` applies to every table
+    * (`"overwrite"`, or `"append"`: the new version lists the member's
+    * base files plus the new ones — a pure metadata union, no rewrite).
+    * A write that throws aborts the commit ([[runOrAbort]]). Returns the
+    * committed version.
     */
   def commitAll(tables: Seq[(String, DataFrame)], root: String,
       mode: String = "overwrite", maxAttempts: Int = 10,
@@ -965,8 +848,10 @@ object VersionedLake {
     require(tables.nonEmpty, "commitAll with no tables")
     val gc = beginGroupCommit(tables.head._2.sparkSession, root,
       maxAttempts, manifestStore)
-    tables.foreach { case (t, df) => gc.write(t, df, mode) }
-    gc.publish()
+    runOrAbort(gc) {
+      tables.foreach { case (t, df) => gc.write(t, df, mode) }
+      gc.publish()
+    }
   }
 
   /** The group at `root` at one version (default: latest): ONE
@@ -987,6 +872,15 @@ object VersionedLake {
     val store = storeFor(spark, root, None)
     store.committedVersions().lastOption
       .map(groupSnapshot(spark, store, root, _))
+  }
+
+  /** Every committed version of the group at `root`, ascending, each
+    * parsed once — ONE listing for all of them (a [[snapshot]] per version
+    * would re-list the manifests for each). Empty for an uncommitted root.
+    */
+  def snapshots(spark: SparkSession, root: String): Seq[Snapshot] = {
+    val store = storeFor(spark, root, None)
+    store.committedVersions().map(groupSnapshot(spark, store, root, _))
   }
 
   /** Read one member table of the group at `root` (default: latest
@@ -1013,29 +907,10 @@ object VersionedLake {
     v
   }
 
-  /** Group analog of [[vacuum]]: delete member-table data files referenced
-    * by NO group manifest ≥ `keepFrom`, plus older manifests and expired
-    * crashed claims. Same in-flight protection as the single-table vacuum
-    * (a manifest-less claim ≥ keepFrom or younger than `claimTtlMs` keeps
-    * its data). Returns the number of deleted data files.
-    */
-  def vacuumGroup(spark: SparkSession, root: String, keepFrom: Long,
-      claimTtlMs: Long = 24L * 3600 * 1000,
-      manifestStore: Option[ManifestStore] = None): Int =
-    sweep(spark, root, keepFrom, claimTtlMs, manifestStore,
-      (store, v) => groupSnapshot(spark, store, root, v).tables.values.flatten,
-      // member data roots: every first-level dir with a `_data` child (the
-      // manifests' table keys cover committed tables; this sweep also
-      // finds tables only ever staged by crashed commits)
-      f => if (!f.exists(new Path(root))) Seq.empty
-        else f.listStatus(new Path(root)).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName != "_manifests")
-          .map(s => new Path(s.getPath, "_data"))
-          .filter(f.exists))
-
-  /** Delete data files referenced by NO manifest ≥ `keepFrom` and all
-    * older manifests — the vacuum step that bounds storage. Returns the
-    * number of deleted data files.
+  /** Delete member-table data files referenced by NO manifest ≥
+    * `keepFrom`, plus older manifests and expired crashed claims — the
+    * vacuum step that bounds storage. Returns the number of deleted data
+    * files.
     *
     * `claimTtlMs`: a manifest-less claim younger than this is an in-flight
     * commit whatever its version number — a SLOW commit claimed before a
@@ -1045,30 +920,20 @@ object VersionedLake {
     * than the TTL are crashed commits. The same retention heuristic
     * lakehouse vacuums ship: pick a TTL longer than your longest commit.
     */
-  def vacuum(spark: SparkSession, table: String, keepFrom: Long,
+  def vacuumGroup(spark: SparkSession, root: String, keepFrom: Long,
       claimTtlMs: Long = 24L * 3600 * 1000,
-      manifestStore: Option[ManifestStore] = None): Int =
-    sweep(spark, table, keepFrom, claimTtlMs, manifestStore,
-      (store, v) => manifestFiles(store, table, v),
-      f => Seq(new Path(table, "_data")).filter(f.exists))
-
-  /** The sweep both vacuums share. `liveOf` lists one kept manifest's
-    * root-relative files; `dataRoots` are the `_data` directories to walk.
-    */
-  private def sweep(spark: SparkSession, root: String, keepFrom: Long,
-      claimTtlMs: Long, manifestStore: Option[ManifestStore],
-      liveOf: (ManifestStore, Long) => Iterable[String],
-      dataRoots: FileSystem => Seq[Path]): Int = {
+      manifestStore: Option[ManifestStore] = None): Int = {
     val f = fs(spark, root)
     val store = storeFor(spark, root, manifestStore)
     val vs = store.committedVersions()
     val keep = vs.filter(_ >= keepFrom)
     require(keep.nonEmpty, s"vacuum would delete every version of $root")
-    val live = keep.flatMap(liveOf(store, _)).toSet
+    val live = keep.flatMap(v =>
+      groupSnapshot(spark, store, root, v).tables.values.flatten).toSet
     // a commit IN FLIGHT (claim taken, manifest not yet published) has
-    // data files no manifest references yet — its whole _data/v{N} dir is
-    // off-limits. In flight = manifest-less AND (≥ keepFrom OR claim
-    // younger than the TTL).
+    // data files no manifest references yet — its `<table>/_data/v{N}`
+    // dirs are off-limits. In flight = manifest-less AND (≥ keepFrom OR
+    // claim younger than the TTL).
     val now = System.currentTimeMillis()
     def claimAgeMs(v: Long): Long =
       store.claimModifiedAtMs(v).map(now - _).getOrElse(Long.MaxValue)
@@ -1079,7 +944,15 @@ object VersionedLake {
     // scheme-qualified vs raw paths and would mark every file dead)
     val rootPrefix = f.makeQualified(new Path(root)).toUri.getPath
     var deleted = 0
-    dataRoots(f).foreach { dataRoot =>
+    // member data roots: every first-level dir with a `_data` child (the
+    // manifests' table keys cover committed tables; this sweep also finds
+    // tables only ever staged by crashed commits)
+    val dataRoots = if (!f.exists(new Path(root))) Seq.empty
+      else f.listStatus(new Path(root)).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName != "_manifests")
+        .map(s => new Path(s.getPath, "_data"))
+        .filter(f.exists)
+    dataRoots.foreach { dataRoot =>
       // FsWalk, not listFiles(recursive) — the located listing's
       // per-file cost made each superseding vacuum a multi-second stall
       // on the local FS (FsWalk scaladoc)

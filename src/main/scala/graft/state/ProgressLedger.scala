@@ -17,7 +17,8 @@ import graft.operators.Relational
   * back except through the anti join.
   *
   * COMMITS THROUGH [[graft.sources.VersionedLake]] (round 13 — the r12
-  * group-commit question answered for the ledger): a plain parquet
+  * group-commit question answered for the ledger), as the one member
+  * `marks` of a group rooted at `path`: a plain parquet
   * append exposes a torn window (some part-files visible before job
   * commit finishes, and object-store renames aren't atomic), in which a
   * crash leaves a PARTIAL mark batch — never wrong results (a missing
@@ -28,26 +29,37 @@ import graft.operators.Relational
   * version intact and the whole batch either visible or not
   * (all-or-nothing, crash-interleaving pinned in ProgressLedgerSpec).
   *
-  * Reads are [[graft.sources.VersionedLake.tryReadAllVersions]] — the union
-  * of EVERY committed version's files, which the ledger's monotone,
-  * duplicate-tolerant semantics make exactly right: two pipelines racing
-  * `markDone` on a shared ledger may each chain their append from the
-  * same base (the lake's documented append race — the later manifest
-  * omits the earlier racer's files), and a latest-version read would
-  * silently lose a batch of marks and re-queue its completed work on
-  * every resume; the union read sees every committed batch regardless of
-  * chain forks. The one operational corollary: never vacuum a ledger
-  * path past an unmerged fork.
+  * Reads union the distinct `marks` files of EVERY committed version
+  * ([[graft.sources.VersionedLake.snapshots]]: one manifest listing),
+  * which the ledger's monotone, duplicate-tolerant semantics make exactly
+  * right — and only those semantics: on an overwrite table the union
+  * would resurrect replaced data. Two pipelines racing `markDone` on a
+  * shared ledger may each chain their append from the same base (the
+  * lake's documented append race — the later manifest omits the earlier
+  * racer's files), and a latest-version read would silently lose a batch
+  * of marks and re-queue its completed work on every resume; the union
+  * read is immune, because every committed batch's files appear in at
+  * least its OWN manifest, and serial chains listing the carried files
+  * many times over cost nothing once made distinct. Per-batch crash
+  * atomicity is unchanged (uncommitted `marks/_data/v{N}` dirs are in no
+  * manifest).
+  * The one operational corollary: never vacuum a ledger path past an
+  * unmerged fork — vacuum keeps only files referenced by manifests ≥
+  * `keepFrom`.
   *
   * LEGACY COMPATIBILITY: a ledger written before the versioned commit
   * (plain parquet part-files directly under `path`) keeps counting —
-  * those files are unioned into every read, and `exists` sees them. The
-  * underscore-prefixed `_manifests`/`_data` dirs are invisible to the
-  * plain read (Spark hides `_*` paths), so the two layouts coexist at
-  * one path with no migration step.
+  * those files are unioned into every read, and `exists` sees them. They
+  * are the plain files directly under `path`, while the lake keeps its
+  * manifests and data in the `_manifests` and `marks` directories, so the
+  * two layouts coexist at one path with no migration step. A ledger
+  * committed in the lake's retired single-table manifest shape
+  * (`{"version","files"}`) is not read: it fails loudly at parse.
   */
 final case class ProgressLedger(spark: SparkSession, path: String) {
   import graft.sources.VersionedLake
+
+  private val Marks = "marks"
 
   def exists: Boolean =
     VersionedLake.versions(spark, path).nonEmpty || legacyFiles.nonEmpty
@@ -71,7 +83,9 @@ final case class ProgressLedger(spark: SparkSession, path: String) {
     * resume poll, so it must not pre-check existence with extra LISTs.
     */
   def done: Option[DataFrame] = {
-    val versioned = VersionedLake.tryReadAllVersions(spark, path)
+    val snaps = VersionedLake.snapshots(spark, path)
+    val versioned = snaps.lastOption.map(_.readFiles(
+      snaps.flatMap(_.tables.getOrElse(Marks, Nil)).distinct))
     val legacy = {
       val lf = legacyFiles
       if (lf.nonEmpty) Some(graft.sources.ParquetRead.files(spark, lf)) else None
@@ -88,11 +102,11 @@ final case class ProgressLedger(spark: SparkSession, path: String) {
     */
   def markDone(keys: DataFrame, keyCol: String, runId: String,
       doneAt: java.sql.Timestamp): Unit = {
-    VersionedLake.commit(
+    VersionedLake.commitAll(Seq(Marks ->
       keys.select(col(keyCol).cast("string").as("operator_key"))
         .distinct()
         .withColumn("run_id", lit(runId))
-        .withColumn("done_at", lit(doneAt)),
+        .withColumn("done_at", lit(doneAt))),
       path, mode = "append")
     ()
   }

@@ -101,18 +101,19 @@ class ParquetReadSpec extends SparkSpec {
     "a column: the footers fold in file order, as Spark's merge does") {
     import org.apache.hadoop.fs.Path
     val tbl = Files.createTempDirectory("pread-merge").toString
-    VersionedLake.commit(Seq(1L).toDF("x"), tbl)
-    VersionedLake.commit(Seq((2L, "b")).toDF("x", "y"), tbl, mode = "append")
+    VersionedLake.commitAll(Seq("t" -> Seq(1L).toDF("x")), tbl)
+    VersionedLake.commitAll(Seq("t" -> Seq((2L, "b")).toDF("x", "y")), tbl,
+      mode = "append")
     val fs = new Path(tbl).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = Seq("v1", "v2").flatMap(v =>
-      fs.listStatus(new Path(tbl, s"_data/$v")).map(_.getPath.toString)
+      fs.listStatus(new Path(tbl, s"t/_data/$v")).map(_.getPath.toString)
         .filter(_.endsWith(".parquet")))
     for (merge <- Seq("true", "false")) {
       val opts = Map("mergeSchema" -> merge)
       sameSchemaNoJob(ParquetRead.files(spark, files, opts),
         spark.read.options(opts).parquet(files: _*))
     }
-    val (df, jobs) = jobsDuring(VersionedLake.read(spark, tbl))
+    val (df, jobs) = jobsDuring(VersionedLake.readTable(spark, tbl, "t"))
     assert(jobs == 0)
     assert(df.schema.fieldNames.toSeq == Seq("x", "y"))
     assert(df.as[(Long, Option[String])].collect().sortBy(_._1).toSeq ==
@@ -123,14 +124,16 @@ class ParquetReadSpec extends SparkSpec {
     "inferred type and place, and a filter on one prunes partitions") {
     import org.apache.hadoop.fs.Path
     val tbl = Files.createTempDirectory("pread-part").toString
-    VersionedLake.commit(Seq((1L, 7, "a"), (2L, 8, "b"), (3L, 7, "c"))
-      .toDF("id", "cell", "s"), tbl, partitionBy = Seq("cell"))
-    val vdir = new Path(tbl, "_data/v1").toString
+    val gc = VersionedLake.beginGroupCommit(spark, tbl)
+    gc.write("t", Seq((1L, 7, "a"), (2L, 8, "b"), (3L, 7, "c"))
+      .toDF("id", "cell", "s"), partitionBy = Seq("cell"))
+    gc.publish()
+    val vdir = new Path(tbl, "t/_data/v1").toString
     val fs = new Path(tbl).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = FsWalk.files(fs, new Path(vdir)).map(_.getPath.toString)
       .filter(_.endsWith(".parquet"))
     val opts = Map("basePath" -> vdir, "mergeSchema" -> "true")
-    val df = sameSchemaNoJob(VersionedLake.read(spark, tbl),
+    val df = sameSchemaNoJob(VersionedLake.readTable(spark, tbl, "t"),
       spark.read.options(opts + ("__globPaths__" -> "false"))
         .parquet(files: _*))
     assert(df.schema.fieldNames.toSeq == Seq("id", "s", "cell"))

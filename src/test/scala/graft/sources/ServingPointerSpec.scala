@@ -31,6 +31,20 @@ class ServingPointerSpec extends SparkSpec {
       Seq(v1 -> "/lake/index_blue", v2 -> "/lake/index_green"))
   }
 
+  test("history lists the pointer's manifests once and parses each cut " +
+    "once, however many cuts there are") {
+    val ptr = Files.createTempDirectory("sptr-hist").toString + "/serving"
+    val cuts = (1 to 3).map(i => ServingPointer.set(spark, ptr, s"/lake/r$i"))
+    var history = Seq.empty[(Long, String)]
+    val calls = ManifestCallLog.during(spark, ptr) {
+      history = ServingPointer.history(spark, ptr)
+    }
+    assert(history == cuts.zip((1 to 3).map(i => s"/lake/r$i")))
+    val dir = s"$ptr/_manifests"
+    assert(calls == ("list" -> dir) +: cuts.map(v => "open" -> s"$dir/v$v.json"),
+      calls)
+  }
+
   test("blue/green refit on the ANN index: searches name the POINTER; " +
     "building the green root changes nothing until the cut; after the " +
     "cut searchServing follows it and the blue root stays intact") {

@@ -6,15 +6,30 @@ import graft.SparkSpec
 class VersionedLakeSpec extends SparkSpec {
   import spark.implicits._
 
+  // A single table is a one-member group: these specs commit member `t`.
+  private def ints(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+    df.collect().map(_.getInt(0)).sorted.toSeq
+
+  private def readT(root: String, version: Option[Long] = None,
+      schemaDDL: String = null): org.apache.spark.sql.DataFrame =
+    VersionedLake.readTable(spark, root, "t", version, schemaDDL = schemaDDL)
+
+  /** A one-member commit laid out Hive-style by `partitionBy`. */
+  private def commitPartitioned(df: org.apache.spark.sql.DataFrame,
+      root: String, partitionBy: Seq[String],
+      mode: String = "overwrite"): Long = {
+    val gc = VersionedLake.beginGroupCommit(spark, root)
+    gc.write("t", df, mode, partitionBy)
+    gc.publish()
+  }
+
   test("commit/read: overwrite versions are isolated snapshots") {
     val tbl = Files.createTempDirectory("vlake").toString
-    val v1 = VersionedLake.commit(Seq(1, 2, 3).toDF("x"), tbl)
-    val v2 = VersionedLake.commit(Seq(10, 20).toDF("x"), tbl)
+    val v1 = VersionedLake.commitAll(Seq("t" -> Seq(1, 2, 3).toDF("x")), tbl)
+    val v2 = VersionedLake.commitAll(Seq("t" -> Seq(10, 20).toDF("x")), tbl)
     assert((v1, v2) == ((1L, 2L)))
-    assert(VersionedLake.read(spark, tbl).collect().map(_.getInt(0)).sorted
-      .toSeq == Seq(10, 20))                      // latest = v2
-    assert(VersionedLake.read(spark, tbl, Some(1L)).collect()
-      .map(_.getInt(0)).sorted.toSeq == Seq(1, 2, 3)) // time travel
+    assert(ints(readT(tbl)) == Seq(10, 20))                 // latest = v2
+    assert(ints(readT(tbl, Some(1L))) == Seq(1, 2, 3))      // time travel
   }
 
   test("publish survives a stale tmp from a crashed committer: the retry " +
@@ -26,31 +41,30 @@ class VersionedLakeSpec extends SparkSpec {
     val mdir = new java.io.File(tbl, "_manifests")
     mdir.mkdirs()
     Files.write(new java.io.File(mdir, "v1.json.tmp").toPath,
-      "{\"version\":1,\"files\":[]}".getBytes)
-    val v1 = VersionedLake.commit(Seq(7, 8).toDF("x"), tbl)
+      "{\"version\":1,\"tables\":{\"t\":[]}}".getBytes)
+    val v1 = VersionedLake.commitAll(Seq("t" -> Seq(7, 8).toDF("x")), tbl)
     assert(v1 == 1L)
-    assert(VersionedLake.read(spark, tbl).collect().map(_.getInt(0)).sorted
-      .toSeq == Seq(7, 8))
+    assert(ints(readT(tbl)) == Seq(7, 8))
   }
 
   test("append mode unions files without rewriting data") {
     val tbl = Files.createTempDirectory("vlake2").toString
-    VersionedLake.commit(Seq(1).toDF("x"), tbl)
-    VersionedLake.commit(Seq(2).toDF("x"), tbl, mode = "append")
-    assert(VersionedLake.read(spark, tbl).collect().map(_.getInt(0)).sorted
-      .toSeq == Seq(1, 2))
+    VersionedLake.commitAll(Seq("t" -> Seq(1).toDF("x")), tbl)
+    VersionedLake.commitAll(Seq("t" -> Seq(2).toDF("x")), tbl, mode = "append")
+    assert(ints(readT(tbl)) == Seq(1, 2))
     // v1 unchanged by the append
-    assert(VersionedLake.read(spark, tbl, Some(1L)).collect()
-      .map(_.getInt(0)).toSeq == Seq(1))
+    assert(ints(readT(tbl, Some(1L))) == Seq(1))
   }
 
   test("schema evolution: append commit adds a column, reads merge permissively") {
     val tbl = Files.createTempDirectory("vlake-evolve").toString
-    VersionedLake.commit(Seq((1, "a"), (2, "b")).toDF("k", "v"), tbl)
+    VersionedLake.commitAll(Seq("t" -> Seq((1, "a"), (2, "b")).toDF("k", "v")),
+      tbl)
     // v2 appends files carrying an EXTRA column — drift, not a rewrite
-    VersionedLake.commit(Seq((3, "c", 30.0)).toDF("k", "v", "score"), tbl,
+    VersionedLake.commitAll(
+      Seq("t" -> Seq((3, "c", 30.0)).toDF("k", "v", "score")), tbl,
       mode = "append")
-    val latest = VersionedLake.read(spark, tbl)
+    val latest = readT(tbl)
     assert(latest.columns.sorted.toSeq == Seq("k", "score", "v"))
     val rows = latest.select("k", "v", "score").collect()
       .map(r => (r.getInt(0), r.getString(1),
@@ -59,20 +73,19 @@ class VersionedLakeSpec extends SparkSpec {
     assert(rows == Seq((1, "a", None), (2, "b", None), (3, "c", Some(30.0))))
     // pinned time travel to v1 returns exactly v1's schema — the new
     // column does not leak backwards
-    val v1 = VersionedLake.read(spark, tbl, Some(1L))
+    val v1 = readT(tbl, Some(1L))
     assert(v1.columns.sorted.toSeq == Seq("k", "v"))
     assert(v1.count() == 2)
   }
 
   test("partitioned commit: partition columns recovered, scan pruned, schemaDDL pins types") {
     val tbl = Files.createTempDirectory("vlake-part").toString
-    VersionedLake.commit(
+    commitPartitioned(
       Seq((1L, "a", 0L), (2L, "b", 0L), (3L, "c", 1L), (4L, "d", 2L))
         .toDF("id", "payload", "cid"),
-      tbl, partitionBy = Seq("cid"))
+      tbl, Seq("cid"))
     // partition column comes back (basePath anchoring), typed by the DDL
-    val df = VersionedLake.read(spark, tbl,
-      schemaDDL = "id BIGINT, payload STRING, cid BIGINT")
+    val df = readT(tbl, schemaDDL = "id BIGINT, payload STRING, cid BIGINT")
     assert(df.schema("cid").dataType.typeName == "long")
     assert(df.count() == 4)
     // a cid filter prunes at the PARTITION level, not per-row
@@ -81,26 +94,24 @@ class VersionedLakeSpec extends SparkSpec {
     val plan = pruned.queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*cid".r.findFirstIn(plan).isDefined, plan)
     // append of a new partition layout version still reads as one table
-    VersionedLake.commit(Seq((9L, "z", 3L)).toDF("id", "payload", "cid"),
-      tbl, mode = "append", partitionBy = Seq("cid"))
-    assert(VersionedLake.read(spark, tbl,
+    commitPartitioned(Seq((9L, "z", 3L)).toDF("id", "payload", "cid"),
+      tbl, Seq("cid"), mode = "append")
+    assert(readT(tbl,
       schemaDDL = "id BIGINT, payload STRING, cid BIGINT").count() == 5)
   }
 
   test("vacuum drops unreferenced files and old manifests, keeps live versions") {
     val tbl = Files.createTempDirectory("vlake3").toString
-    VersionedLake.commit(Seq(1).toDF("x"), tbl)
-    VersionedLake.commit(Seq(2).toDF("x"), tbl)
-    val deleted = VersionedLake.vacuum(spark, tbl, keepFrom = 2L)
+    VersionedLake.commitAll(Seq("t" -> Seq(1).toDF("x")), tbl)
+    VersionedLake.commitAll(Seq("t" -> Seq(2).toDF("x")), tbl)
+    val deleted = VersionedLake.vacuumGroup(spark, tbl, keepFrom = 2L)
     assert(deleted >= 1)
     assert(VersionedLake.versions(spark, tbl) == Seq(2L))
-    assert(VersionedLake.read(spark, tbl).collect().map(_.getInt(0))
-      .toSeq == Seq(2))
-    intercept[IllegalArgumentException](
-      VersionedLake.read(spark, tbl, Some(1L)))
+    assert(readT(tbl).collect().map(_.getInt(0)).toSeq == Seq(2))
+    intercept[IllegalArgumentException](readT(tbl, Some(1L)))
     // refusing to delete everything
     intercept[IllegalArgumentException](
-      VersionedLake.vacuum(spark, tbl, keepFrom = 99L))
+      VersionedLake.vacuumGroup(spark, tbl, keepFrom = 99L))
   }
 
   test("two interleaved committers: atomic version claims, unique version " +
@@ -117,8 +128,8 @@ class VersionedLakeSpec extends SparkSpec {
       for (i <- 1 to perThread) {
         try {
           val rows = 100 * id + i
-          val v = VersionedLake.commit(
-            spark.range(rows.toLong).toDF("x"), tbl)
+          val v = VersionedLake.commitAll(
+            Seq("t" -> spark.range(rows.toLong).toDF("x")), tbl)
           committed.add(id -> v)
         } catch { case _: Throwable => failures.incrementAndGet() }
       }
@@ -135,65 +146,66 @@ class VersionedLakeSpec extends SparkSpec {
     val validCounts = (for (id <- 1 to 2; i <- 1 to perThread)
       yield (100 * id + i).toLong).toSet
     for (v <- vs)
-      assert(validCounts.contains(
-        VersionedLake.read(spark, tbl, Some(v)).count()))
+      assert(validCounts.contains(readT(tbl, Some(v)).count()))
   }
 
   test("vacuum spares an IN-FLIGHT commit's data files (claim ≥ keepFrom, " +
     "manifest not yet landed); a crashed claim below keepFrom is swept") {
     val tbl = Files.createTempDirectory("vlakeif").toString
     for (n <- Seq(10L, 20L, 30L))
-      VersionedLake.commit(spark.range(n).toDF("x"), tbl)
+      VersionedLake.commitAll(Seq("t" -> spark.range(n).toDF("x")), tbl)
     // simulate a committer mid-commit at v4: claim taken, data being
     // written, manifest NOT yet renamed in
     val manifests = new java.io.File(s"$tbl/_manifests")
     assert(new java.io.File(manifests, "v4.claim").createNewFile())
-    val inflightDir = new java.io.File(s"$tbl/_data/v4")
+    val inflightDir = new java.io.File(s"$tbl/t/_data/v4")
     assert(inflightDir.mkdirs())
     val inflightFile = new java.io.File(inflightDir, "part-0.parquet")
     java.nio.file.Files.write(inflightFile.toPath, Array[Byte](1, 2, 3))
-    VersionedLake.vacuum(spark, tbl, keepFrom = 3L)
+    VersionedLake.vacuumGroup(spark, tbl, keepFrom = 3L)
     // the unreferenced-but-claimed v4 file SURVIVES — sweeping it would
     // corrupt v4 the moment its manifest lands
     assert(inflightFile.exists())
     assert(new java.io.File(manifests, "v4.claim").exists())
-    VersionedLake.commit(spark.range(5L).toDF("x"), tbl) // lands as v5
+    // lands as v5
+    VersionedLake.commitAll(Seq("t" -> spark.range(5L).toDF("x")), tbl)
     // below keepFrom but the claim is YOUNG (within the TTL): a slow
     // in-flight commit claimed before v5 landed — still protected
-    VersionedLake.vacuum(spark, tbl, keepFrom = 5L)
+    VersionedLake.vacuumGroup(spark, tbl, keepFrom = 5L)
     assert(inflightFile.exists())
     assert(new java.io.File(manifests, "v4.claim").exists())
     // below keepFrom AND TTL expired: a crashed commit — data swept,
     // claim removed, number stays burned
-    VersionedLake.vacuum(spark, tbl, keepFrom = 5L, claimTtlMs = 0L)
+    VersionedLake.vacuumGroup(spark, tbl, keepFrom = 5L, claimTtlMs = 0L)
     assert(!inflightFile.exists())
     assert(!new java.io.File(manifests, "v4.claim").exists())
-    assert(VersionedLake.read(spark, tbl).count() == 5L)
+    assert(readT(tbl).count() == 5L)
   }
 
   test("readers stay consistent mid-vacuum; crashed claims burn a number " +
     "without wedging the table") {
     val tbl = Files.createTempDirectory("vlakev").toString
     for (n <- Seq(10L, 20L, 30L))
-      VersionedLake.commit(spark.range(n).toDF("x"), tbl)
+      VersionedLake.commitAll(Seq("t" -> spark.range(n).toDF("x")), tbl)
     // a reader resolved on the latest version is untouched by a vacuum
     // that drops older versions, even if the delete runs mid-read
-    val pinned = VersionedLake.read(spark, tbl, Some(3L))
-    assert(VersionedLake.vacuum(spark, tbl, keepFrom = 3L) > 0)
+    val pinned = readT(tbl, Some(3L))
+    assert(VersionedLake.vacuumGroup(spark, tbl, keepFrom = 3L) > 0)
     assert(pinned.count() == 30L) // kept version: files all alive
     intercept[IllegalArgumentException](
-      VersionedLake.read(spark, tbl, Some(1L))) // dropped version is gone
+      readT(tbl, Some(1L))) // dropped version is gone
     // simulate a committer that died between claim and manifest
     val claims = new java.io.File(s"$tbl/_manifests")
     assert(new java.io.File(claims, "v4.claim").createNewFile())
     // the next commit skips the burned number instead of wedging
-    assert(VersionedLake.commit(spark.range(5L).toDF("x"), tbl) == 5L)
-    assert(VersionedLake.read(spark, tbl).count() == 5L)
+    assert(VersionedLake.commitAll(Seq("t" -> spark.range(5L).toDF("x")),
+      tbl) == 5L)
+    assert(readT(tbl).count() == 5L)
     // vacuum sweeps the orphaned claim once it falls below keepFrom AND
     // its in-flight TTL expires (ttl=0 = "treat every stale claim as dead")
-    VersionedLake.vacuum(spark, tbl, keepFrom = 5L, claimTtlMs = 0L)
+    VersionedLake.vacuumGroup(spark, tbl, keepFrom = 5L, claimTtlMs = 0L)
     assert(!new java.io.File(claims, "v4.claim").exists())
-    assert(VersionedLake.read(spark, tbl).count() == 5L)
+    assert(readT(tbl).count() == 5L)
   }
 
   /** Object-store fake: the three blob ops with REAL conditional-PUT
@@ -223,15 +235,15 @@ class VersionedLakeSpec extends SparkSpec {
     val tbl = Files.createTempDirectory("vlakecas").toString
     val blob = new InMemoryCasStore
     val store = Some(new CasManifestStore(blob): ManifestStore)
-    val v1 = VersionedLake.commit(Seq(1, 2, 3).toDF("x"), tbl,
+    val v1 = VersionedLake.commitAll(Seq("t" -> Seq(1, 2, 3).toDF("x")), tbl,
       manifestStore = store)
-    val v2 = VersionedLake.commit(Seq(10).toDF("x"), tbl, mode = "append",
-      manifestStore = store)
+    val v2 = VersionedLake.commitAll(Seq("t" -> Seq(10).toDF("x")), tbl,
+      mode = "append", manifestStore = store)
     assert((v1, v2) == ((1L, 2L)))
-    assert(VersionedLake.read(spark, tbl, manifestStore = store)
-      .collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 2, 3, 10))
-    assert(VersionedLake.read(spark, tbl, Some(1L), manifestStore = store)
-      .collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 2, 3))
+    assert(ints(VersionedLake.readTable(spark, tbl, "t",
+      manifestStore = store)) == Seq(1, 2, 3, 10))
+    assert(ints(VersionedLake.readTable(spark, tbl, "t", Some(1L),
+      manifestStore = store)) == Seq(1, 2, 3))
     // NO manifest artifacts on the filesystem: visibility lives in the blob
     assert(!new java.io.File(s"$tbl/_manifests").exists())
     assert(blob.list("_manifests/").size == 4) // 2 claims + 2 manifests
@@ -239,11 +251,11 @@ class VersionedLakeSpec extends SparkSpec {
     // the live-set keeps them all — nothing data-bearing may die (the old
     // `>= 1` count was the swept _SUCCESS sidecar, which the session no
     // longer writes; see GraftSession's committer note). v2 stays readable
-    assert(VersionedLake.vacuum(spark, tbl, keepFrom = 2L,
+    assert(VersionedLake.vacuumGroup(spark, tbl, keepFrom = 2L,
       manifestStore = store) >= 0)
     assert(VersionedLake.versions(spark, tbl, manifestStore = store)
       == Seq(2L))
-    assert(VersionedLake.read(spark, tbl, manifestStore = store)
+    assert(VersionedLake.readTable(spark, tbl, "t", manifestStore = store)
       .count() == 4L)
   }
 
@@ -260,8 +272,9 @@ class VersionedLakeSpec extends SparkSpec {
       for (i <- 1 to perThread) {
         try {
           val rows = 100 * id + i
-          val v = VersionedLake.commit(spark.range(rows.toLong).toDF("x"),
-            tbl, manifestStore = store)
+          val v = VersionedLake.commitAll(
+            Seq("t" -> spark.range(rows.toLong).toDF("x")), tbl,
+            manifestStore = store)
           committed.add(id -> v)
         } catch { case _: Throwable => failures.incrementAndGet() }
       }
@@ -276,8 +289,8 @@ class VersionedLakeSpec extends SparkSpec {
     val validCounts = (for (id <- 1 to 2; i <- 1 to perThread)
       yield (100 * id + i).toLong).toSet
     for (v <- vs)
-      assert(validCounts.contains(VersionedLake.read(spark, tbl, Some(v),
-        manifestStore = store).count()))
+      assert(validCounts.contains(VersionedLake.readTable(spark, tbl, "t",
+        Some(v), manifestStore = store).count()))
   }
 
   test("CAS claim race: a pre-claimed version forces the committer to the " +
@@ -289,7 +302,7 @@ class VersionedLakeSpec extends SparkSpec {
     // another committer already claimed v1: the conditional PUT rejects,
     // our commit retries and lands v2
     assert(cas.tryClaim(1L))
-    assert(VersionedLake.commit(Seq(1).toDF("x"), tbl,
+    assert(VersionedLake.commitAll(Seq("t" -> Seq(1).toDF("x")), tbl,
       manifestStore = store) == 2L)
     // a rival who claims each number BETWEEN our listing and our claim
     // makes every conditional PUT reject (the real race, not a stale
@@ -306,12 +319,13 @@ class VersionedLakeSpec extends SparkSpec {
       def claimModifiedAtMs(v: Long) = cas.claimModifiedAtMs(v)
     }
     intercept[VersionedLake.ConcurrentCommitException](
-      VersionedLake.commit(Seq(2).toDF("x"), tbl, maxAttempts = 3,
-        manifestStore = Some(raced)))
+      VersionedLake.commitAll(Seq("t" -> Seq(2).toDF("x")), tbl,
+        maxAttempts = 3, manifestStore = Some(raced)))
     // publish is ALSO first-writer-wins: a manifest that somehow exists at
     // our number (protocol violation) is an error, never a replacement
-    assert(cas.publish(9L, "{\"version\":9,\"files\":[]}".getBytes))
-    assert(!cas.publish(9L, "{\"version\":9,\"files\":[\"x\"]}".getBytes))
+    assert(cas.publish(9L, "{\"version\":9,\"tables\":{\"t\":[]}}".getBytes))
+    assert(!cas.publish(9L,
+      "{\"version\":9,\"tables\":{\"t\":[\"x\"]}}".getBytes))
     assert(new String(cas.readManifest(9L)).contains("[]"))
   }
 
@@ -390,19 +404,17 @@ class VersionedLakeSpec extends SparkSpec {
     // JSON codec must not
     val df = Seq(("a,b", 1), ("c]d", 2), ("plain", 3)).toDF("k", "v")
     val tbl = Files.createTempDirectory("vlake-comma").toString
-    VersionedLake.commit(df, tbl, partitionBy = Seq("k"))
-    val got = VersionedLake.read(spark, tbl, schemaDDL = "v INT, k STRING")
+    commitPartitioned(df, tbl, Seq("k"))
+    val got = readT(tbl, schemaDDL = "v INT, k STRING")
       .collect().map(r => (r.getAs[String]("k"), r.getAs[Int]("v"))).sorted.toSeq
     assert(got == Seq(("a,b", 1), ("c]d", 2), ("plain", 3)))
     // vacuum's live-set must keep every referenced file despite the commas
     // (only unreferenced sidecars — _SUCCESS/.crc — may be swept): both
     // kept versions stay fully readable after the vacuum
-    VersionedLake.commit(df.filter(col("v") === 1), tbl, partitionBy = Seq("k"))
-    VersionedLake.vacuum(spark, tbl, keepFrom = 1L)
-    assert(VersionedLake.read(spark, tbl, Some(1L),
-      schemaDDL = "v INT, k STRING").count() == 3)
-    assert(VersionedLake.read(spark, tbl, Some(2L),
-      schemaDDL = "v INT, k STRING").count() == 1)
+    commitPartitioned(df.filter(col("v") === 1), tbl, Seq("k"))
+    VersionedLake.vacuumGroup(spark, tbl, keepFrom = 1L)
+    assert(readT(tbl, Some(1L), schemaDDL = "v INT, k STRING").count() == 3)
+    assert(readT(tbl, Some(2L), schemaDDL = "v INT, k STRING").count() == 1)
     val root = Files.createTempDirectory("vlakeg-comma").toString
     VersionedLake.commitAll(Seq("t" -> df), root)
     val gotG = VersionedLake.readTable(spark, root, "t",
@@ -507,6 +519,33 @@ class VersionedLakeSpec extends SparkSpec {
     assert(rows("b") == Seq(1L, 3L))
   }
 
+  test("commitAll: a member write that throws aborts the commit — no " +
+    "claim and no _data/v{N} of its own stay behind, and the next commit " +
+    "reuses the number") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val root = Files.createTempDirectory("vlakeg-commitall-fail").toString
+    VersionedLake.commitAll(Seq("t" -> Seq(1L).toDF("x")), root)
+    val boom = udf((x: Long) =>
+      if (x >= 0) throw new IllegalStateException("boom") else x)
+    // the first member stages cleanly, the second throws
+    val e = intercept[Exception](VersionedLake.commitAll(Seq(
+      "ok" -> Seq(5L).toDF("x"),
+      "t" -> spark.range(0, 1, 1, 1).select(boom(col("id")).as("x"))),
+      root, mode = "append"))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("boom")), e)
+    val mdir = new java.io.File(root, "_manifests")
+    assert(!new java.io.File(mdir, "v2.claim").exists(),
+      mdir.list().toSeq.sorted)
+    assert(!new java.io.File(root, "ok/_data/v2").exists())
+    assert(!new java.io.File(root, "t/_data/v2").exists())
+    assert(VersionedLake.versions(spark, root) == Seq(1L))
+    // nothing is left to block the next writer at this root
+    assert(VersionedLake.commitAll(Seq("t" -> Seq(2L).toDF("x")), root,
+      mode = "append") == 2L)
+    assert(readT(root).as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+  }
+
   test("duplicate-task-commit detector: a legal multi-file task output " +
     "(maxRecordsPerFile) publishes without a false positive") {
     val root = Files.createTempDirectory("vlakemrpf").toString
@@ -537,10 +576,10 @@ class VersionedLakeSpec extends SparkSpec {
       .collect().map(r => (r.getAs[String]("k"), r.getAs[Int]("v"))).sorted.toSeq
     val want = rows(df)
     val tbl = Files.createTempDirectory("vlake-codec").toString
-    VersionedLake.commit(df, tbl, partitionBy = Seq("k"))
-    VersionedLake.commit(df.limit(0), tbl, mode = "append",
-      partitionBy = Seq("k")) // the append re-parses v1's manifest
-    val single = VersionedLake.read(spark, tbl)
+    commitPartitioned(df, tbl, Seq("k"))
+    commitPartitioned(df.limit(0), tbl, Seq("k"),
+      mode = "append") // the append re-parses v1's manifest
+    val single = readT(tbl)
     assert(single.columns.toSeq.sorted == Seq("k", "v"))
     assert(rows(single) == want)
     val root = Files.createTempDirectory("vlakeg-codec").toString
@@ -564,7 +603,8 @@ class VersionedLakeSpec extends SparkSpec {
     // UTF-8 included. Spark %-escapes `]`, `"` and `\` in partition
     // directories, so its real output looks like `spark`; `odd` is a raw
     // `k=a,b]"q\z` directory, reachable only through a foreign writer,
-    // that pins the two JSON escapes.
+    // that pins the two JSON escapes. The retired single-table shape
+    // (`{"version","files"}`) is no longer read: it fails loudly.
     val spark3 = Seq("k=a,b", "k=c%5Dd", "k=café 日本")
     val oddJson = "k=a,b]\\\"q\\\\z"
     val oddRaw = "k=a,b]\"q\\z"
@@ -603,11 +643,16 @@ class VersionedLakeSpec extends SparkSpec {
     }
     def kv(d: org.apache.spark.sql.DataFrame) = d.collect()
       .map(r => (r.getAs[String]("k"), r.getAs[Int]("v"))).sorted.toSeq
-    assert(kv(VersionedLake.read(spark, tbl, schemaDDL = "v INT, k STRING")) ==
-      Seq(("a,b", 7), ("c]d", 7), ("café 日本", 7)))
-    // a new commit chains from the legacy manifest without losing files
-    VersionedLake.commit(Seq(8).toDF("v"), tbl, mode = "append")
-    assert(VersionedLake.read(spark, tbl).count() == 4)
+    // every reader of the retired shape fails with the same error, its
+    // data files present or not — never an empty or partial read
+    for (read <- Seq[() => Any](
+        () => VersionedLake.readTable(spark, tbl, "t"),
+        () => VersionedLake.trySnapshot(spark, tbl),
+        () => VersionedLake.snapshots(spark, tbl))) {
+      val ex = intercept[IllegalStateException](read())
+      assert(ex.getMessage.contains(s"v1 of $tbl is not a group manifest"),
+        ex.getMessage)
+    }
     assert(VersionedLake.snapshot(spark, root, Some(1L)).tables == Map(
       "t" -> Seq(s"t/_data/v1/$oddRaw/part-00000-1.parquet"),
       "u.x" -> Seq("u.x/_data/v1/k=café 日本/part-00000-3.parquet",
@@ -765,7 +810,7 @@ class VersionedLakeSpec extends SparkSpec {
       .find(_.getName.endsWith(".parquet")).get
     val dirs = Seq("a[1]", "b*{x}?", "c\\d", "plain")
     val rels = dirs.zipWithIndex.map { case (d, i) =>
-      s"_data/v1/k=$d/part-0000$i-1.parquet" }
+      s"t/_data/v1/k=$d/part-0000$i-1.parquet" }
     rels.foreach { rel =>
       val dst = new Path(tbl, rel)
       fs.mkdirs(dst.getParent)
@@ -775,9 +820,9 @@ class VersionedLakeSpec extends SparkSpec {
     fs.mkdirs(new Path(tbl, "_manifests"))
     Files.write(java.nio.file.Paths.get(tbl, "_manifests", "v1.json"),
       rels.map(r => "\"" + r.replace("\\", "\\\\") + "\"")
-        .mkString("{\"version\":1,\"files\":[", ",", "]}")
+        .mkString("{\"version\":1,\"tables\":{\"t\":[", ",", "]}}")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val rows = VersionedLake.read(spark, tbl, schemaDDL = "v INT, k STRING")
+    val rows = readT(tbl, schemaDDL = "v INT, k STRING")
       .collect().map(r => (r.getAs[String]("k"), r.getAs[Int]("v")))
     assert(rows.sorted.toSeq == dirs.map(_ -> 7).sorted)
   }
@@ -883,7 +928,12 @@ class VersionedLakeSpec extends SparkSpec {
   test("beginGroupCommit parses its base at the claim: a base that is not " +
     "a group manifest throws there and releases the claim") {
     val tbl = Files.createTempDirectory("vlake-notgroup").toString
-    VersionedLake.commit(Seq(1L).toDF("x"), tbl)
+    // a root committed in the retired single-table shape
+    val mdir = new java.io.File(tbl, "_manifests")
+    assert(mdir.mkdirs() && new java.io.File(mdir, "v1.claim").createNewFile())
+    Files.write(new java.io.File(mdir, "v1.json").toPath,
+      "{\"version\":1,\"files\":[\"_data/v1/part-00000-1.parquet\"]}"
+        .getBytes)
     val ex = intercept[IllegalStateException](
       VersionedLake.beginGroupCommit(spark, tbl))
     assert(ex.getMessage.contains("is not a group manifest"), ex.getMessage)

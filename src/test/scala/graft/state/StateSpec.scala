@@ -36,7 +36,7 @@ class ProgressLedgerSpec extends SparkSpec {
     Seq("w2").toDF("op").select(col("op").as("operator_key"))
       .withColumn("run_id", lit("run-died"))
       .withColumn("done_at", lit(doneAt))
-      .write.parquet(s"$root/_data/v99")
+      .write.parquet(s"$root/marks/_data/v99")
     // the orphaned files are INVISIBLE: w2 still pending, w1 still done
     assert(ledger.remaining(candidates, "op")
       .collect().map(_.getString(0)).sorted.toSeq == Seq("w2", "w3"))
@@ -83,8 +83,8 @@ class ProgressLedgerSpec extends SparkSpec {
     // phase 2 — versioned appends begin at the same path: v1 marks w2
     ledger.markDone(Seq("w2").toDF("op"), "op", "run-2", doneAt)
     // phase 3 — a commit CRASHES at the most-torn point: version claimed,
-    // data files written, manifest bytes staged as v2.json.tmp, but the
-    // atomic rename (the ONLY visibility event) never happened
+    // data files written, group manifest bytes staged as v2.json.tmp, but
+    // the atomic rename (the ONLY visibility event) never happened
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val store = new graft.sources.HadoopManifestStore(fs, root)
@@ -92,13 +92,14 @@ class ProgressLedgerSpec extends SparkSpec {
     Seq("w3").toDF("op").select(col("op").as("operator_key"))
       .withColumn("run_id", lit("run-died"))
       .withColumn("done_at", lit(doneAt))
-      .write.parquet(s"$root/_data/v2")
-    val tornFiles = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/_data/v2"))
+      .write.parquet(s"$root/marks/_data/v2")
+    val tornFiles = fs.listStatus(
+        new org.apache.hadoop.fs.Path(s"$root/marks/_data/v2"))
       .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-      .map(n => "\"_data/v2/" + n + "\"").sorted
+      .map(n => "\"marks/_data/v2/" + n + "\"").sorted
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$root/_manifests/v2.json.tmp"),
-      tornFiles.mkString("{\"version\":2,\"files\":[", ",", "]}")
+      tornFiles.mkString("{\"version\":2,\"tables\":{\"marks\":[", ",", "]}}")
         .getBytes("UTF-8"))
     // resume sees EXACTLY the committed union: legacy w1 + versioned w2;
     // the torn w3 is invisible (tmp manifest is not a committed version)
@@ -133,15 +134,16 @@ class ProgressLedgerSpec extends SparkSpec {
     Seq("w3").toDF("op").select(col("op").as("operator_key"))
       .withColumn("run_id", lit("run-racer"))
       .withColumn("done_at", lit(doneAt))
-      .write.parquet(s"$root/_data/v3")
-    val racerFiles = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/_data/v3"))
+      .write.parquet(s"$root/marks/_data/v3")
+    val racerFiles = fs.listStatus(
+        new org.apache.hadoop.fs.Path(s"$root/marks/_data/v3"))
       .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-      .map(n => s"_data/v3/$n").sorted
+      .map(n => s"marks/_data/v3/$n").sorted
     val v1Files = "\"([^\"]+)\"".r
       .findAllMatchIn(new String(store.readManifest(1), "UTF-8"))
-      .map(_.group(1)).filter(_.startsWith("_data/")).toSeq
-    val manifest = (v1Files ++ racerFiles)
-      .map(p => "\"" + p + "\"").mkString("{\"version\":3,\"files\":[", ",", "]}")
+      .map(_.group(1)).filter(_.startsWith("marks/_data/")).toSeq
+    val manifest = (v1Files ++ racerFiles).map(p => "\"" + p + "\"")
+      .mkString("{\"version\":3,\"tables\":{\"marks\":[", ",", "]}}")
     assert(store.tryClaim(3))
     assert(store.publish(3, manifest.getBytes("UTF-8")))
     // latest manifest (v3) omits w2 — the union read must still see it

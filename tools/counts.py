@@ -346,7 +346,8 @@ def main():
                 open(full, "w").write(new)
     print(f"[counts] {c['queries']} queries / {c['oracles']} oracles / "
           f"{c['tests']} specs in {c['suites']} suites"
-          + (f"; updated {sorted(set(drift))}" if drift else "; docs in sync"))
+          + (f"; {'would update' if args.check else 'updated'} "
+             f"{sorted(set(drift))}" if drift else "; docs in sync"))
     for e in gate_errs:
         print(f"[counts] GATE-ARTIFACT ERROR: {e}")
     if args.check and (drift or gate_errs):
